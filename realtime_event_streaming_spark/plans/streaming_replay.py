@@ -13,8 +13,8 @@ read the same bytes:
 
 - Spark replays the files through the REAL streaming path — file
   source (one file per micro-batch), wire-JSON parse, watermark,
-  chained dedup -> union -> exact windowed agg, append-mode emission —
-  and returns the finalized windows.
+  exact windowed agg (count + per-window user set), append-mode
+  emission — and returns the finalized windows.
 - The DuckDB oracle reads the same files with ``read_json_auto`` and
   states the batch twin: per-minute x (page, country) count + exact
   distinct users, restricted to the windows the watermark finalized
@@ -22,7 +22,7 @@ read the same bytes:
   streaming/agg.py:EXACT_WATERMARK).
 
 A value-hash match therefore proves the *incremental* execution
-(4 micro-batches, stateful dedup + window state carried across
+(4 micro-batches, window counts and user sets carried across
 batches, watermark-driven finalization) computes exactly the one-shot
 relational answer — the stream==batch contract, now driver-visible.
 The in-repo reconciliation test (tests/test_streaming.py) keeps the
@@ -107,7 +107,7 @@ ORDER BY window_start, page, country
 def streaming_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming replay: committed wire fixture -> ordered
     file-source stream (one file per micro-batch) -> parse/watermark ->
-    exact windowed rollup (chained dedup -> union -> agg) -> finalized
+    exact windowed rollup (count + per-window user set) -> finalized
     windows.
 
     Returns the deterministic set of windows the watermark closed

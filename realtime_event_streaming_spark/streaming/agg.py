@@ -7,19 +7,17 @@ MV clickhouse_tables.sql:75-85 — the double-write bug, SURVEY.md
 count + EXACT distinct users (reference semantics: HashSet
 StreamJob.java:102-108 / uniqExact :83).
 
-Exact distinct in a streaming window is not a built-in aggregate; the
-implementation chains two stateful operators in one query:
+Exact distinct is one set per window key: ``size(collect_set(user_id))``
+in the same aggregate as the count, so the query runs a single stateful
+operator over one scan of the source. ``collect_set`` ignores null
+users, as ``countDistinct`` and SQL ``COUNT(DISTINCT)`` do.
 
-    parsed events (watermark = window + lateness)
-      ├─ branch "all":  every event
-      └─ branch "uniq": dropDuplicates(minute-key, page, country, user)
-      unionByName -> window groupBy -> conditional counts
+The watermark delay is window length + reference lateness (60 s +
+10 s), so windows finalize 60 s later than the reference's. That bound
+decides which late events still count: an event up to 70 s behind the
+newest event of earlier batches is kept, where the reference's 10 s
+watermark would drop it.
 
-``cnt`` counts the "all" branch, ``unique_users`` the deduplicated
-branch — one sink, append mode, exact. The dedup state must survive
-until its window closes, so this query's watermark delay is
-window length + reference lateness (60 s + 10 s); windows therefore
-finalize 60 s later than the reference's, with identical contents.
 The ``approx`` variant keeps the reference's 10 s emission latency by
 trading exact uniques for HLL (approx_count_distinct) — the documented
 100 TB default, where per-window user sets stop being a good idea
@@ -32,7 +30,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 #: Watermark delay for the exact path: window length + reference's 10 s
-#: bounded out-of-orderness (StreamJob.java:215).
+#: bounded out-of-orderness (StreamJob.java:215). It sets which late
+#: events count and when windows finalize; shortening it to the
+#: reference's 10 s would drop events the exact path counts today.
 EXACT_WATERMARK = "70 seconds"
 
 _WINDOW = "1 minute"
@@ -44,40 +44,22 @@ def minute_rollup_stream_exact(events: DataFrame) -> DataFrame:
     ``events`` must carry ``withWatermark("ts", EXACT_WATERMARK)``
     (see ingest.parse_clicks(watermark=...)).
     """
-    w = F.window("ts", _WINDOW)
-    allr = events.select(
-        "ts", "page", "country", "user_id", F.lit("all").alias("kind")
-    )
-    # Dedup key uses a *string* minute bucket: a window() column would
-    # carry event-time metadata and collide with the agg's event-time
-    # column (Spark allows one per stream).
-    # dropDuplicatesWithinWatermark (not plain dropDuplicates): dedup
-    # state is evicted once the watermark passes an entry's event time
-    # + delay, so state stays O(active windows) in a long-running
-    # deployment. Plain dropDuplicates on non-event-time keys would
-    # retain one state row per (minute, page, country, user) FOREVER.
-    # Correctness is unchanged: duplicates of a same-minute key are
-    # < 60 s apart, well inside the 70 s delay.
-    uniq = (
-        events.withColumn("mkey", F.date_format("ts", "yyyyMMddHHmm"))
-        .dropDuplicatesWithinWatermark(["mkey", "page", "country", "user_id"])
-        .select("ts", "page", "country", "user_id", F.lit("uniq").alias("kind"))
-    )
-    agg = (
-        allr.unionByName(uniq)
-        .groupBy(w.alias("win"), "page", "country")
+    return (
+        events.groupBy(F.window("ts", _WINDOW).alias("win"), "page", "country")
         .agg(
-            F.count(F.when(F.col("kind") == "all", 1)).alias("cnt"),
-            F.count(F.when(F.col("kind") == "uniq", 1)).alias("unique_users"),
+            F.count("*").alias("cnt"),
+            F.size(F.collect_set("user_id"))
+            .cast("bigint")
+            .alias("unique_users"),
         )
-    )
-    return agg.select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        "page",
-        "country",
-        "cnt",
-        "unique_users",
+        .select(
+            F.col("win.start").alias("window_start"),
+            F.col("win.end").alias("window_end"),
+            "page",
+            "country",
+            "cnt",
+            "unique_users",
+        )
     )
 
 
@@ -108,10 +90,6 @@ def rollup_stream_approx(
             "unique_users",
         )
     )
-
-
-def minute_rollup_stream_approx(events: DataFrame) -> DataFrame:
-    return rollup_stream_approx(events)
 
 
 def rollup_5min_stream(events: DataFrame) -> DataFrame:

@@ -38,44 +38,44 @@ class Pipeline:
                 q.stop()
 
 
+#: Both stages drain what is present when they start, then stop.
+_DRAIN = {"availableNow": True}
+
+
 def start_pipeline(
-    spark: SparkSession,
-    wire_path: str,
-    out_dir: str,
-    trigger: dict | None = None,
+    spark: SparkSession, wire_path: str, out_dir: str
 ) -> Pipeline:
     """Start the ingestion + rollup queries over a wire-format JSON
-    directory (swap ``read_json_file_stream`` for ``read_kafka_stream``
-    in a Kafka deployment — everything downstream is identical)."""
-    trigger = trigger or {"availableNow": True}
+    directory; they drain the files present at start (one file per
+    micro-batch) and stop. Live tailing composes
+    ``read_json_file_stream(..., max_files_per_trigger=None)`` with the
+    same parse and sinks under the default trigger. Swap
+    ``read_json_file_stream`` for ``read_kafka_stream`` in a Kafka
+    deployment — everything downstream is identical."""
     stream = parse_clicks(
         read_json_file_stream(spark, wire_path), watermark=EXACT_WATERMARK
     )
     q1 = write_raw_events(
-        stream, f"{out_dir}/clicks_raw", f"{out_dir}/_ck_raw", trigger=trigger
+        stream, f"{out_dir}/clicks_raw", f"{out_dir}/_ck_raw", trigger=_DRAIN
     )
     q2 = write_rollup(
         minute_rollup_stream_exact(stream),
         f"{out_dir}/page_minute_agg",
         f"{out_dir}/_ck_agg",
-        trigger=trigger,
+        trigger=_DRAIN,
     )
     return Pipeline(raw_query=q1, rollup_query=q2)
 
 
 def start_anomaly_stage(
-    spark: SparkSession,
-    out_dir: str,
-    sink_name: str = "anomaly_scored",
-    trigger: dict | None = None,
+    spark: SparkSession, out_dir: str, sink_name: str = "anomaly_scored"
 ) -> StreamingQuery:
-    """Stage 2 of the deployment: stream the rollup table through the
+    """Stage 2 of the deployment: drain the rollup table through the
     Welford scorer into a memory sink (swap for a Kafka/console sink in
     production). Decoupled from the rollup query via storage — each
     stage restarts and backfills independently (SURVEY.md §3)."""
     from .anomaly_stream import score_rollup_stream
 
-    trigger = trigger or {"availableNow": True}
     agg_path = f"{out_dir}/page_minute_agg"
     schema = spark.read.parquet(agg_path).schema
     rollup = spark.readStream.schema(schema).parquet(agg_path)
@@ -84,7 +84,7 @@ def start_anomaly_stage(
         .writeStream.format("memory")
         .queryName(sink_name)
         .outputMode("append")
-        .trigger(**trigger)
+        .trigger(**_DRAIN)
         .start()
     )
 

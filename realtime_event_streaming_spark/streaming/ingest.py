@@ -93,8 +93,8 @@ def parse_clicks(
 
     ``watermark`` defaults to the reference's 10 s bounded
     out-of-orderness; the exact-distinct rollup passes a longer delay
-    (window length + lateness) because its dedup state must survive
-    until the window closes (see streaming/agg.py).
+    (window length + lateness, ``agg.EXACT_WATERMARK``), which decides
+    which late events it counts (see streaming/agg.py).
     """
     parsed = raw.select(
         F.from_json(F.col(value_col).cast("string"), CLICK_WIRE_SCHEMA).alias("e")

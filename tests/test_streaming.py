@@ -196,50 +196,90 @@ def test_anomaly_state_survives_chunked_out_of_order_delivery(spark, tmp_path):
     assert anom[0].n_observations == 499, "spike must see full prior history"
 
 
-def test_dedup_state_is_evicted_as_watermark_advances(spark, tmp_path):
-    """Round-1 advisory: plain dropDuplicates on non-event-time keys
-    retains one state row per key FOREVER in a long-running deployment.
-    With dropDuplicatesWithinWatermark the dedup operator must (a)
-    actually remove rows as the watermark advances and (b) finish with
-    far fewer state rows than the run's total distinct dedup keys."""
+def test_rollup_state_is_evicted_as_watermark_advances(spark, tmp_path):
+    """The exact rollup keeps one state row (and user set) per open
+    (window, page, country) key. Its single window aggregate must (a)
+    remove rows as the watermark advances, (b) finish with far fewer
+    state rows than the run's distinct keys, and (c) read each source
+    line once — a self-union would add a second stateful operator and
+    double the input rows."""
     clicks = generate_clicks(spark, n_events=3000, n_users=100, rate_per_sec=1.5)
-    write_stream_fixture(clicks, str(tmp_path / "in"), n_files=10)
+    in_dir = str(tmp_path / "in")
+    write_stream_fixture(clicks, in_dir, n_files=10)
     stream = parse_clicks(
-        read_json_file_stream(spark, str(tmp_path / "in")),
-        watermark=EXACT_WATERMARK,
+        read_json_file_stream(spark, in_dir), watermark=EXACT_WATERMARK
     )
     q = (
         minute_rollup_stream_exact(stream)
         .writeStream.format("memory")
-        .queryName("dedup_state_probe")
+        .queryName("rollup_state_probe")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(300)
 
-    progresses = [p for p in q.recentProgress if p.get("stateOperators")]
-    dedup_ops = [
-        op
-        for p in progresses
-        for op in p["stateOperators"]
-        if op.get("operatorName") == "dedupeWithinWatermark"
-    ]
-    assert dedup_ops, "dedup operator missing from progress"
-    assert sum(op.get("numRowsRemoved", 0) for op in dedup_ops) > 0, (
-        "watermark advance never evicted dedup state"
+    progresses = q.recentProgress
+    assert sum(p["numInputRows"] for p in progresses) == (
+        spark.read.text(in_dir).count()
+    ), "the rollup must scan each source line once"
+    stateful = [p["stateOperators"] for p in progresses if p.get("stateOperators")]
+    assert stateful and all(len(ops) == 1 for ops in stateful), stateful
+    agg_ops = [ops[0] for ops in stateful]
+    assert all(op["operatorName"] == "stateStoreSave" for op in agg_ops)
+    assert sum(op.get("numRowsRemoved", 0) for op in agg_ops) > 0, (
+        "watermark advance never evicted window state"
     )
 
     total_keys = (
-        parse_clicks(as_json_records(clicks))
-        .select(
-            F.date_format("ts", "yyyyMMddHHmm"), "page", "country", "user_id"
-        )
+        minute_rollup_batch(parse_clicks(as_json_records(clicks)))
+        .select("window_start", "page", "country")
         .distinct()
         .count()
     )
-    final_rows = dedup_ops[-1]["numRowsTotal"]
+    final_rows = agg_ops[-1]["numRowsTotal"]
     assert final_rows < total_keys / 2, (final_rows, total_keys)
+
+
+def test_exact_rollup_ignores_null_users_like_batch(spark, tmp_path):
+    """A null user_id is not a distinct user: the stream must agree
+    with minute_rollup_batch (countDistinct) and the DuckDB oracles
+    (COUNT(DISTINCT)), which both ignore nulls."""
+    import json
+    import os
+    import time
+
+    t0 = 1_700_000_040_000  # epoch ms on a minute boundary
+    users = [None] * 10 + ["u1", "u2"] * 10
+    window = [
+        {"event_id": f"e{i}", "user_id": u, "ts": t0 + i * 1000,
+         "page": "/", "referrer": "", "country": "US", "device": "desktop"}
+        for i, u in enumerate(users)
+    ]
+    # One event 5 minutes later moves the watermark past the window.
+    closer = [dict(window[-1], event_id="close", ts=t0 + 300_000)]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    base = time.time() - 2
+    for i, rows in enumerate([window, closer]):
+        f = in_dir / f"part-{i}.txt"
+        f.write_text("".join(json.dumps(r) + "\n" for r in rows))
+        os.utime(f, (base + i, base + i))
+
+    stream = parse_clicks(
+        read_json_file_stream(spark, str(in_dir)), watermark=EXACT_WATERMARK
+    )
+    emitted = _run_to_memory(
+        minute_rollup_stream_exact(stream), spark, "rollup_null_users"
+    ).collect()
+    truth = (
+        minute_rollup_batch(parse_clicks(spark.read.text(str(in_dir))))
+        .orderBy("window_start")
+        .limit(1)
+        .collect()
+    )
+    assert [r.asDict() for r in emitted] == [r.asDict() for r in truth]
+    assert emitted[0]["cnt"] == 30 and emitted[0]["unique_users"] == 2
 
 
 def test_kafka_wire_contract_round_trip(spark):

@@ -81,19 +81,12 @@ _SHINGLE_EXPR = (
 
 
 def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-3-gram shingles per document.
-
-    The explode + downstream fingerprinting do ~50x the scan's work
-    per input byte, so when the documents scan yields FEWER tasks than
-    the session can run concurrently (one small file at bench scale;
-    the tail partition of a real corpus), the whole shingle derivation
-    serializes onto those tasks — measured 0.7 s single-task at sf0.1
-    where the same work spread over the cores takes ~0.1 s. Spread the
-    raw (doc_id, text) rows round-robin BEFORE the explode in exactly
-    that case: the added shuffle moves each text byte once (bounded by
-    input bytes, which are small precisely when the gate fires), and a
-    corpus-scale scan with >= cores partitions adds NO shuffle — the
-    gate is partition-count-derived, not tuned to this host."""
+    """Distinct word-3-gram shingles per document: one plain ``select``
+    over the documents scan — split the text on spaces, keep documents
+    of at least three tokens, and explode the distinct space-joined
+    3-grams as ``(doc_id, s)``. No repartition: the explode runs in the
+    scan's own tasks, so its parallelism is the scan's partition
+    count."""
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
     return (

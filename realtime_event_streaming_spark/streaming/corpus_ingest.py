@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .ingest import json_columns
+
 #: wire schema for one crawled document (JSON lines)
 DOC_WIRE_SCHEMA = StructType(
     [
@@ -76,21 +78,14 @@ def read_doc_stream(
 
 
 def parse_docs(raw: DataFrame, watermark: str = DOC_WATERMARK) -> DataFrame:
-    """JSON -> typed doc rows, malformed dropped, watermarked."""
-    parsed = (
-        raw.select(
-            F.from_json(F.col("value").cast("string"), DOC_WIRE_SCHEMA).alias("d")
-        )
-        .where(F.col("d").isNotNull() & F.col("d.ingest_ts").isNotNull())
-        .select(
-            "d.doc_id",
-            "d.text",
-            "d.lang",
-            "d.source",
-            F.timestamp_millis(F.col("d.ingest_ts")).alias("ingest_ts"),
-        )
+    """JSON -> typed doc rows (one parse per record), malformed dropped,
+    watermarked."""
+    docs = json_columns(raw, DOC_WIRE_SCHEMA).where(
+        F.col("ingest_ts").isNotNull()
     )
-    return parsed.withWatermark("ingest_ts", watermark)
+    return docs.withColumn(
+        "ingest_ts", F.timestamp_millis("ingest_ts")
+    ).withWatermark("ingest_ts", watermark)
 
 
 def admit_docs(docs: DataFrame) -> DataFrame:
@@ -209,24 +204,12 @@ SEMANTIC_DUP_COSINE = 0.995
 
 
 def parse_vectors(raw: DataFrame) -> DataFrame:
-    """JSON -> typed (vec_id, v, ingest_ts) rows, malformed dropped."""
-    return (
-        raw.select(
-            F.from_json(F.col("value").cast("string"), VEC_WIRE_SCHEMA).alias(
-                "d"
-            )
-        )
-        .where(
-            F.col("d").isNotNull()
-            & F.col("d.vec_id").isNotNull()
-            & (F.size("d.v") > 0)
-        )
-        .select(
-            "d.vec_id",
-            "d.v",
-            F.timestamp_millis(F.col("d.ingest_ts")).alias("ingest_ts"),
-        )
+    """JSON -> typed (vec_id, v, ingest_ts) rows (one parse per record),
+    malformed dropped."""
+    vecs = json_columns(raw, VEC_WIRE_SCHEMA).where(
+        F.col("vec_id").isNotNull() & (F.size("v") > 0)
     )
+    return vecs.withColumn("ingest_ts", F.timestamp_millis("ingest_ts"))
 
 
 def start_embedding_admission(

@@ -8,16 +8,19 @@ timestamp (:307-329).
 Spark form: any (key, value)-shaped source — ``format("kafka")`` in
 production, file/rate sources in tests (the transformations are
 source-agnostic DataFrame code; the engine has no hard Kafka
-dependency). Parse ONCE with ``from_json`` (the reference parses twice
-— SURVEY.md §1.5.4); malformed JSON yields null structs which we drop
-(DROPMALFORMED semantics, §1.4); unparseable timestamps are dropped,
-not wall-clock-faked (§1.5.5).
+dependency). Every JSON parser here and in ``corpus_ingest`` goes
+through ``json_columns``, which evaluates ``from_json`` once per record
+(the reference parses twice — SURVEY.md §1.5.4). Malformed JSON parses
+to all-null columns, so the null-``ts`` filter drops it together with
+records that lack a timestamp (DROPMALFORMED semantics, §1.4);
+unparseable timestamps are dropped, not wall-clock-faked (§1.5.5).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import CLICK_WIRE_SCHEMA
 
@@ -83,37 +86,60 @@ def read_json_file_stream(
     return reader.load(path)
 
 
+def json_columns(
+    raw: DataFrame,
+    schema: StructType,
+    value_col: str = "value",
+    options: dict[str, str] | None = None,
+    keep_raw: bool = False,
+) -> DataFrame:
+    """Wire JSON in ``value_col`` -> one column per ``schema`` field,
+    the wire fields null when the record does not parse; ``keep_raw``
+    also keeps the payload string as ``raw``.
+
+    The parse runs inside a generator (``inline`` of a one-element
+    array) so that it happens once per record. In the plain form,
+    ``select(from_json(...) AS e).where(e.ts IS NOT NULL)``, Catalyst
+    pushes the filter beneath the Project that defines ``e`` and copies
+    the parse into it: three parses per row. A filter on a generator's
+    output columns cannot move below the Generate."""
+    value = F.col(value_col).cast("string")
+    keep = [value.alias("raw")] if keep_raw else []
+    return raw.select(
+        *keep, F.inline(F.array(F.from_json(value, schema, options)))
+    )
+
+
+def _click_events(events: DataFrame, watermark: str) -> DataFrame:
+    """Wire columns -> the typed click schema (ts as a timestamp),
+    watermarked."""
+    return (
+        events.select(*CLICK_WIRE_SCHEMA.fieldNames())
+        .withColumn("ts", F.timestamp_millis("ts"))
+        .withWatermark("ts", watermark)
+    )
+
+
 def parse_clicks(
     raw: DataFrame, value_col: str = "value", watermark: str = WATERMARK
 ) -> DataFrame:
-    """Wire JSON -> typed click events with event-time watermark.
+    """Wire JSON -> typed click events with event-time watermark, one
+    ``from_json`` per record (``json_columns``).
 
     Works identically on streaming and batch frames (the same logical
-    plan incrementalizes — that is the point of Structured Streaming).
+    plan incrementalizes — that is the point of Structured Streaming),
+    so the Kafka source, the file source, batch frames and the replay
+    plans share this one code path.
 
     ``watermark`` defaults to the reference's 10 s bounded
     out-of-orderness; the exact-distinct rollup passes a longer delay
     (window length + lateness, ``agg.EXACT_WATERMARK``), which decides
     which late events it counts (see streaming/agg.py).
     """
-    parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), CLICK_WIRE_SCHEMA).alias("e")
-    )
-    return (
-        parsed
-        # DROPMALFORMED: null struct (bad JSON) or null/absent ts.
-        .where(F.col("e").isNotNull() & F.col("e.ts").isNotNull())
-        .select(
-            F.col("e.event_id").alias("event_id"),
-            F.col("e.user_id").alias("user_id"),
-            F.timestamp_millis(F.col("e.ts")).alias("ts"),
-            F.col("e.page").alias("page"),
-            F.col("e.referrer").alias("referrer"),
-            F.col("e.country").alias("country"),
-            F.col("e.device").alias("device"),
-        )
-        .withWatermark("ts", watermark)
-    )
+    events = json_columns(raw, CLICK_WIRE_SCHEMA, value_col)
+    # DROPMALFORMED: bad JSON parses to all-null columns, so a null ts
+    # is the whole test.
+    return _click_events(events.where(F.col("ts").isNotNull()), watermark)
 
 
 def parse_clicks_with_dlq(
@@ -124,43 +150,28 @@ def parse_clicks_with_dlq(
     Production alternative to DROPMALFORMED: malformed records are not
     silently discarded but routed to a dead-letter frame carrying the
     raw payload and a reason — replayable after a parser fix. Both
-    frames derive from one ``from_json`` pass (no double parse).
+    frames derive from one ``json_columns`` parse, so each frame's plan
+    evaluates ``from_json`` once per record.
 
-    ``from_json`` yields an all-NULL struct (not a null) for unparseable
-    input, so malformed-vs-missing-field is distinguished via the
-    corrupt-record column."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
+    Unparseable input fills the corrupt-record column and leaves the
+    wire fields null, which tells malformed JSON from a missing ts."""
     # NOTE: StructType.add MUTATES in place — build a fresh schema so
     # the shared CLICK_WIRE_SCHEMA is never modified.
     schema_with_corrupt = StructType(
         list(CLICK_WIRE_SCHEMA.fields) + [StructField("_corrupt", StringType())]
     )
-    parsed = raw.select(
-        F.col(value_col).cast("string").alias("raw"),
-        F.from_json(
-            F.col(value_col).cast("string"),
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("e"),
+    parsed = json_columns(
+        raw,
+        schema_with_corrupt,
+        value_col,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
+        keep_raw=True,
     )
-    bad = F.col("e._corrupt").isNotNull() | F.col("e.ts").isNull()
-    ok = (
-        parsed.where(~bad)
-        .select(
-            F.col("e.event_id").alias("event_id"),
-            F.col("e.user_id").alias("user_id"),
-            F.timestamp_millis(F.col("e.ts")).alias("ts"),
-            F.col("e.page").alias("page"),
-            F.col("e.referrer").alias("referrer"),
-            F.col("e.country").alias("country"),
-            F.col("e.device").alias("device"),
-        )
-        .withWatermark("ts", watermark)
-    )
+    bad = F.col("_corrupt").isNotNull() | F.col("ts").isNull()
+    ok = _click_events(parsed.where(~bad), watermark)
     dlq = parsed.where(bad).select(
         "raw",
-        F.when(F.col("e._corrupt").isNotNull(), "malformed-json")
+        F.when(F.col("_corrupt").isNotNull(), "malformed-json")
         .otherwise("missing-ts")
         .alias("reason"),
         F.current_timestamp().alias("rejected_at"),

@@ -19,15 +19,18 @@ from realtime_event_streaming_spark.sources.clickgen import (
     generate_clicks,
     write_stream_fixture,
 )
+from realtime_event_streaming_spark.schemas import CLICK_WIRE_SCHEMA
 from realtime_event_streaming_spark.streaming.agg import (
     EXACT_WATERMARK,
     minute_rollup_batch,
     minute_rollup_stream_exact,
     write_rollup,
 )
+from realtime_event_streaming_spark.streaming.deploy import start_pipeline
 from realtime_event_streaming_spark.streaming.ingest import (
     parse_clicks,
     read_json_file_stream,
+    write_raw_events,
 )
 
 
@@ -98,3 +101,71 @@ def _run_recovery_scenario(spark, tmp_path):
     assert emitted.count() > n_phase1, "restart must process the new files"
     assert mism == 0, "restarted query diverged from batch truth"
     assert dups == 0, "restart double-emitted windows"
+
+
+def test_pipeline_resumes_checkpoints_of_the_nested_struct_parse(
+    spark, tmp_path
+):
+    """Checkpoints written by the earlier parse shape (``from_json`` into
+    one struct column, filtered on that struct) resume under
+    ``start_pipeline``'s single-parse wiring: the raw sink stays
+    exactly-once and the rollup still equals the batch truth."""
+    d = str(tmp_path)
+    clicks = generate_clicks(spark, n_events=3000, n_users=100, rate_per_sec=5)
+    write_stream_fixture(clicks, d + "/all", n_files=6)
+    parts = sorted(p for p in os.listdir(d + "/all") if p.startswith("part-"))
+    os.makedirs(d + "/in")
+
+    def deliver(names):
+        for p in names:
+            shutil.copy2(os.path.join(d + "/all", p), os.path.join(d + "/in", p))
+
+    deliver(parts[:3])
+    e = F.col("e")
+    nested = (
+        read_json_file_stream(spark, d + "/in")
+        .select(F.from_json(F.col("value"), CLICK_WIRE_SCHEMA).alias("e"))
+        .where(e.isNotNull() & e.ts.isNotNull())
+        .select(
+            *[
+                F.timestamp_millis(e.ts).alias(c) if c == "ts" else e[c].alias(c)
+                for c in CLICK_WIRE_SCHEMA.fieldNames()
+            ]
+        )
+        .withWatermark("ts", EXACT_WATERMARK)
+    )
+    drain = {"availableNow": True}
+    old = [
+        write_raw_events(
+            nested, d + "/out/clicks_raw", d + "/out/_ck_raw", drain
+        ),
+        write_rollup(
+            minute_rollup_stream_exact(nested),
+            d + "/out/page_minute_agg",
+            d + "/out/_ck_agg",
+            trigger=drain,
+        ),
+    ]
+    for q in old:
+        q.awaitTermination(300)
+    n_raw_phase1 = spark.read.parquet(d + "/out/clicks_raw").count()
+    n_agg_phase1 = spark.read.parquet(d + "/out/page_minute_agg").count()
+    assert 0 < n_raw_phase1 < 3000 and n_agg_phase1 > 0
+
+    deliver(parts[3:])
+    start_pipeline(spark, d + "/in", d + "/out").await_all(300)
+
+    raw = spark.read.parquet(d + "/out/clicks_raw")
+    assert raw.count() == 3000
+    assert raw.select("event_id").distinct().count() == 3000
+    emitted = spark.read.parquet(d + "/out/page_minute_agg").drop("month")
+    assert emitted.count() > n_agg_phase1, "resume must process the new files"
+    keys = ["window_start", "page", "country"]
+    truth = (
+        minute_rollup_batch(parse_clicks(as_json_records(clicks)))
+        .join(emitted.select(*keys), keys)
+        .select(*emitted.columns)
+    )
+    assert emitted.exceptAll(truth).count() == 0, "resumed rollup diverged"
+    dups = emitted.groupBy(*keys).count().where(F.col("count") > 1).count()
+    assert dups == 0, "resume double-emitted windows"

@@ -1300,3 +1300,57 @@ def test_blocklist_scrub_reconciles_with_census(spark, reg):
         assert r.tags_inserted == r.phrases_scrubbed
         assert r.docs_unchanged + r.docs_scrubbed == r.n_docs
         assert r.phrases_scrubbed <= census.get(src, 0)
+
+
+def _json_parse_count(df) -> int:
+    """Number of ``JsonToStructs`` expression nodes in ``df``'s executed
+    plan, found by walking the operator and expression trees."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def in_expr(e):
+        own = e.getClass().getSimpleName() == "JsonToStructs"
+        return own + sum(in_expr(c) for c in seq(e.children()))
+
+    def in_plan(p):
+        return sum(in_expr(e) for e in seq(p.expressions())) + sum(
+            in_plan(c) for c in seq(p.children())
+        )
+
+    return in_plan(df._jdf.queryExecution().executedPlan())
+
+
+def test_json_ingest_parses_each_record_once(spark, tmp_path):
+    """Every JSON ingest parser evaluates ``from_json`` once per record.
+    With a filter on the parsed struct, Catalyst copies the parse into
+    the pushed-down Filter (three or more parses per row)."""
+    from realtime_event_streaming_spark.streaming.corpus_ingest import (
+        parse_docs,
+        parse_vectors,
+    )
+    from realtime_event_streaming_spark.streaming.ingest import (
+        parse_clicks,
+        parse_clicks_with_dlq,
+    )
+
+    path = tmp_path / "wire.txt"
+    path.write_text(
+        '{"event_id":"e1","user_id":"u1","ts":60000,"page":"/",'
+        '"referrer":"/","country":"US","device":"mobile"}\nnot json\n'
+    )
+    raw = spark.read.text(str(path))
+    clicks = parse_clicks(raw)
+    ok, dlq = parse_clicks_with_dlq(raw)
+    frames = {
+        "parse_clicks": clicks,
+        "parse_clicks rollup columns": clicks.select(
+            "ts", "page", "country", "user_id"
+        ),
+        "parse_clicks_with_dlq ok": ok,
+        "parse_clicks_with_dlq dlq": dlq,
+        "parse_docs": parse_docs(raw),
+        "parse_vectors": parse_vectors(raw),
+    }
+    counts = {name: _json_parse_count(df) for name, df in frames.items()}
+    assert counts == {name: 1 for name in frames}, counts

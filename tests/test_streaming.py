@@ -343,6 +343,43 @@ def test_parse_drops_malformed(spark):
     assert all(r.ts is not None for r in parsed)
 
 
+def test_stream_and_batch_parse_agree_on_malformed_wire(spark, tmp_path):
+    """One wire file of edge-case lines parses to the same rows through
+    the file stream and through a batch text read. Only the valid event
+    and the wrong-case key (JSON field names are case-sensitive, so the
+    user is null) survive."""
+    valid = (
+        '{"event_id":"ok","user_id":"u1","ts":60000,"page":"/",'
+        '"referrer":"/","country":"US","device":"mobile"}'
+    )
+    lines = [
+        valid,
+        '[{"event_id":"a1","ts":61000},{"event_id":"a2","ts":62000}]',
+        '{"event_id":"str-ts","user_id":"u2","ts":"63000"}',
+        '{"event_id":"frac-ts","user_id":"u3","ts":64000.5}',
+        "",
+        "null",
+        '{"event_id":"trunc","user_id":"u4","ts":65',
+        '{"event_id":"upper","USER_ID":"u5","ts":66000}',
+    ]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "part-0.txt").write_text("\n".join(lines) + "\n")
+
+    streamed = _run_to_memory(
+        parse_clicks(read_json_file_stream(spark, str(in_dir))),
+        spark,
+        "malformed_parity",
+    )
+    batch = parse_clicks(spark.read.text(str(in_dir)))
+    assert streamed.schema.simpleString() == batch.schema.simpleString()
+    by_id = sorted(
+        ((r.event_id, r.user_id) for r in streamed.collect()), key=str
+    )
+    assert by_id == [("ok", "u1"), ("upper", None)]
+    assert sorted(streamed.collect()) == sorted(batch.collect())
+
+
 def test_parse_with_dlq_routes_bad_records(spark):
     from realtime_event_streaming_spark.streaming.ingest import (
         parse_clicks_with_dlq,

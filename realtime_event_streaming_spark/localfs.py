@@ -1,0 +1,139 @@
+"""The fork-free ``file:`` filesystem that ``session.get_spark`` installs.
+
+Without libhadoop (the pip PySpark install has none), Hadoop's local
+filesystem forks ``chmod`` on every file or directory it creates and
+``readlink`` on every FileContext rename. A streaming micro-batch writes
+dozens of small local files (offset WAL, commit log, source and sink
+logs, state deltas and their checksum files, parquet parts), so those
+forks, about 4 ms each, sat on every batch's critical path. The classes
+in ``jvm/`` make the same system calls through java.nio; everything
+else, including the ``.crc`` sidecars and FileContext's no-overwrite
+rename, is Hadoop's own code.
+
+``local_fs_confs`` compiles the classes against the Hadoop jar PySpark
+ships (once, about 2 s) and caches the jar under
+``${XDG_CACHE_HOME:-~/.cache}/rtes-spark/``, keyed by a hash of the
+sources and the Hadoop jar's name.
+"""
+
+from __future__ import annotations
+
+import glob
+import hashlib
+import logging
+import os
+import re
+import shutil
+import subprocess
+import tempfile
+import zipfile
+
+import pyspark
+
+log = logging.getLogger(__name__)
+
+JAVA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+FILE_SYSTEM = "rtes.fs.NioLocalFileSystem"
+ABSTRACT_FILE_SYSTEM = "rtes.fs.NioLocalFs"
+_CLASS_PATH_KEY = "spark.driver.extraClassPath"
+
+
+def _spark_home() -> str:
+    return os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+
+
+def _javac() -> str | None:
+    home = os.environ.get("JAVA_HOME")
+    if home and os.access(os.path.join(home, "bin", "javac"), os.X_OK):
+        return os.path.join(home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def _cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
+        os.path.expanduser("~"), ".cache"
+    )
+    return os.path.join(base, "rtes-spark")
+
+
+def _compile(javac: str, hadoop_jar: str, sources: list[str], jar: str) -> None:
+    """Compile ``sources`` into ``jar``. The jar is written next to its
+    final name and moved there with ``os.replace``, so a concurrent
+    process sees either no jar or a whole one."""
+    cache = os.path.dirname(jar)
+    os.makedirs(cache, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-proc:none", "-nowarn",
+             "-cp", hadoop_jar, "-d", classes, *sources],
+            check=True, capture_output=True, text=True,
+        )
+        part = os.path.join(tmp, "part.jar")
+        with zipfile.ZipFile(part, "w", zipfile.ZIP_DEFLATED) as zf:
+            for root, _, files in os.walk(classes):
+                for name in sorted(files):
+                    path = os.path.join(root, name)
+                    zf.write(path, os.path.relpath(path, classes))
+        os.replace(part, jar)
+
+
+def local_fs_jar() -> str | None:
+    """Path of the compiled filesystem jar, building it on first use;
+    None when there is no ``javac`` or no Hadoop jar to compile against."""
+    javac = _javac()
+    hadoop = glob.glob(
+        os.path.join(_spark_home(), "jars", "hadoop-client-api-*.jar")
+    )
+    if javac is None or not hadoop:
+        return None
+    hadoop_jar = max(hadoop)
+    sources = sorted(glob.glob(os.path.join(JAVA_DIR, "*.java")))
+    key = hashlib.sha256(os.path.basename(hadoop_jar).encode())
+    for src in sources:
+        with open(src, "rb") as fh:
+            key.update(fh.read())
+    jar = os.path.join(_cache_dir(), f"localfs-{key.hexdigest()[:16]}.jar")
+    if not os.path.exists(jar):
+        _compile(javac, hadoop_jar, sources, jar)
+    return jar
+
+
+def _defaults_class_path() -> str | None:
+    """``spark.driver.extraClassPath`` from spark-defaults.conf, which a
+    ``--conf`` on the launch command would otherwise replace."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
+        _spark_home(), "conf"
+    )
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            lines = fh.read().splitlines()
+    except OSError:
+        return None
+    for line in lines:
+        m = re.match(r"([^\s=:]+)[\s=:]+(.+)", line.strip())
+        if m and m.group(1) == _CLASS_PATH_KEY:
+            return m.group(2).strip()
+    return None
+
+
+def local_fs_confs() -> dict[str, str]:
+    """Static launch confs that put the filesystem on the driver's class
+    path and make it serve ``file:`` for both Hadoop APIs; empty (and one
+    warning) when it cannot be built, which leaves Hadoop's stock local
+    filesystem in place."""
+    try:
+        jar = local_fs_jar()
+    except (OSError, subprocess.CalledProcessError) as exc:
+        detail = getattr(exc, "stderr", None) or exc
+        log.warning("local filesystem not built, using Hadoop's: %s", detail)
+        return {}
+    if jar is None:
+        log.warning("no javac found: using Hadoop's forking local filesystem")
+        return {}
+    class_path = os.pathsep.join(filter(None, [_defaults_class_path(), jar]))
+    return {
+        _CLASS_PATH_KEY: class_path,
+        "spark.hadoop.fs.file.impl": FILE_SYSTEM,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": ABSTRACT_FILE_SYSTEM,
+    }

@@ -56,16 +56,6 @@ g5 AS (
 """
 
 
-def doc_5grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct word-5-gram spans per document."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", F.split("text", " ").alias("tk"))
-        .where(F.size("tk") >= 5)
-        .select("doc_id", F.expr(_G5_EXPR).alias("s"))
-    )
-
-
 _CONTAMINATION_DUCK = f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents

@@ -53,15 +53,6 @@ def binary_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_image_real(content: bytes):  # pragma: no cover - stub
-    """Real decoder hook. Not available in this container.
-
-    A production deployment implements this with PIL/torchvision and
-    the mapInPandas plumbing below is unchanged.
-    """
-    raise NotImplementedError("image decoding requires PIL; use the stub path")
-
-
 def _decode_stub(content: bytes) -> tuple[int, str]:
     """Deterministic fake decode: (n_bytes, 8-hex content fingerprint)."""
     import hashlib

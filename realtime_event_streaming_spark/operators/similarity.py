@@ -613,12 +613,6 @@ def _assign_with_v(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _kmeans_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment ranked by (rounded squared
-    distance, cid) for cross-engine-stable ties."""
-    return _assign_with_v(vecs, cents).select("vec_id", "cid")
-
-
 def _kmeans_means(av: DataFrame) -> DataFrame:
     """Per-centroid elementwise mean, rounded to ROUND-digits so the
     next iteration's inputs are bit-identical across engines. Takes

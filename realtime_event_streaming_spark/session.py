@@ -11,6 +11,14 @@ Design notes (100 TB posture):
 - Arrow enabled for any pandas-UDF path (the slow-path escape hatch).
 - Session timezone pinned to UTC so event-time bucketing is
   deterministic and matches the DuckDB oracle (naive timestamps).
+- Local ``file:`` paths go through a fork-free Hadoop filesystem
+  (``localfs``): the stock one forks ``chmod``/``readlink`` per file
+  without libhadoop, which put ~4 ms per checkpoint, state or sink file
+  on every micro-batch. It is compiled on first use and put on the
+  driver class path when ``get_spark`` launches the JVM; without
+  ``javac`` the stock filesystem stays. It applies to local paths only
+  (HDFS/object stores are untouched), and cluster sessions bypass
+  ``get_spark`` and so keep whatever their deployment configures.
 """
 
 from __future__ import annotations
@@ -19,7 +27,10 @@ import logging
 import os
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from .localfs import local_fs_confs
 
 log = logging.getLogger(__name__)
 
@@ -125,6 +136,10 @@ def get_spark(app_name: str = "realtime-event-streaming-spark") -> SparkSession:
     ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract);
     on a real cluster the builder master/conf come from spark-submit and
     this factory is bypassed entirely.
+
+    The local filesystem confs are launch-time confs, so they are added
+    only when this call starts the JVM; a JVM already running keeps the
+    filesystem it was launched with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -136,4 +151,6 @@ def get_spark(app_name: str = "realtime-event-streaming-spark") -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.python.sql.dataFrameDebugging.enabled", _DF_DEBUGGING)
     )
+    if SparkContext._gateway is None:
+        builder = builder.config(map=local_fs_confs())
     return prepare(builder.getOrCreate())

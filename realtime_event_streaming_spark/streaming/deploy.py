@@ -7,8 +7,8 @@ CLI's ``pipeline`` command and tests drive the same wiring.
 
 ``query_metrics`` / ``ProgressRecorder`` replace the reference's
 Prometheus/Grafana surface (MONITORING_SETUP.md): per-query input
-rate, process rate, batch duration and watermark, as plain dicts /
-JSONL — scrapeable by anything.
+rate, process rate, batch duration and its phases, watermark and state
+health, as plain dicts / JSONL — scrapeable by anything.
 """
 
 from __future__ import annotations
@@ -103,6 +103,26 @@ def _iso_to_epoch(s: str | None) -> float | None:
         return None
 
 
+#: Micro-batch phases of progress ``durationMs``, in the order Spark runs
+#: them, recorded as ``<name>_ms`` (None when a batch skipped the phase).
+PHASES = {
+    "latest_offset": "latestOffset",
+    "get_batch": "getBatch",
+    "query_planning": "queryPlanning",
+    "add_batch": "addBatch",
+    "wal_commit": "walCommit",
+    "commit_offsets": "commitOffsets",
+}
+
+#: State-operator health, summed over the batch's stateful operators.
+STATE_HEALTH = {
+    "state_rows": "numRowsTotal",
+    "state_commit_ms": "commitTimeMs",
+    "state_memory_bytes": "memoryUsedBytes",
+    "rows_dropped_by_watermark": "numRowsDroppedByWatermark",
+}
+
+
 def query_metrics(query: StreamingQuery) -> list[dict]:
     """Per-batch metrics from a query's recent progress: the numbers
     the reference's Grafana dashboard charts (records-in/out rates,
@@ -110,9 +130,16 @@ def query_metrics(query: StreamingQuery) -> list[dict]:
     event-time lag (batch wall time minus newest event processed — the
     live-path analogue of the reference's ``data_lag_seconds``,
     sql/metrics_queries.sql:33-40; wall clock is legitimate in the live
-    path, unlike the deterministic oracle queries)."""
+    path, unlike the deterministic oracle queries).
+
+    Each row also says where the batch's time went (the ``PHASES`` of
+    ``durationMs``) and how its state is doing (``STATE_HEALTH``;
+    ``state_commit_ms`` is task time summed over state partitions, not
+    wall time)."""
     out = []
     for p in query.recentProgress:
+        durations = p.get("durationMs") or {}
+        ops = p.get("stateOperators") or []
         batch_ts = _iso_to_epoch(p.get("timestamp"))
         ev_max = _iso_to_epoch((p.get("eventTime") or {}).get("max"))
         lag = (
@@ -129,10 +156,14 @@ def query_metrics(query: StreamingQuery) -> list[dict]:
                 "batch_duration_ms": p.get("batchDuration"),
                 "watermark": (p.get("eventTime") or {}).get("watermark"),
                 "data_lag_seconds": lag,
-                "state_rows": sum(
-                    op.get("numRowsTotal", 0)
-                    for op in p.get("stateOperators", [])
-                ),
+                **{
+                    f"{name}_ms": durations.get(key)
+                    for name, key in PHASES.items()
+                },
+                **{
+                    name: sum(op.get(key, 0) for op in ops)
+                    for name, key in STATE_HEALTH.items()
+                },
             }
         )
     return out

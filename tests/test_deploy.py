@@ -36,9 +36,22 @@ def test_pipeline_wiring_and_metrics(spark, tmp_path):
     assert metrics, "expected per-batch progress"
     assert sum(m["input_rows"] for m in metrics) == 2500
     assert all(m["batch_duration_ms"] > 0 for m in metrics)
+    # every data batch reports where its time went, phase by phase
+    for m in metrics:
+        for phase in ("latest_offset", "get_batch", "query_planning",
+                      "add_batch", "wal_commit", "commit_offsets"):
+            assert m[f"{phase}_ms"] is not None and m[f"{phase}_ms"] >= 0
+        assert m["add_batch_ms"] <= m["batch_duration_ms"]
+    # the stateless raw query has no state to report
+    assert all(m["state_rows"] == m["state_commit_ms"] == 0 for m in metrics)
     # rollup query exposes stateful-operator rows and a moving watermark
     roll = query_metrics(pipe.rollup_query)
     assert any(m["state_rows"] > 0 for m in roll)
+    assert any(m["state_memory_bytes"] > 0 for m in roll)
+    assert any(m["state_commit_ms"] > 0 for m in roll)
+    # the fixture delivers events in order: nothing falls behind the
+    # watermark, and the count is reported as a number, not missing
+    assert all(m["rows_dropped_by_watermark"] == 0 for m in roll)
     assert any(m["watermark"] and m["watermark"].startswith("2024-") for m in roll)
     # per-batch event-time lag: fixture events are dated 2024-01-01, so
     # lag is large and positive whenever eventTime.max is reported
@@ -54,6 +67,8 @@ def test_pipeline_wiring_and_metrics(spark, tmp_path):
     n = rec.record(pipe.raw_query)
     lines = [json.loads(l) for l in open(tmp_path / "metrics.jsonl")]
     assert len(lines) == n and lines[0]["input_rows"] is not None
+    assert lines[0]["wal_commit_ms"] is not None
+    assert "state_memory_bytes" in lines[0]
 
 
 def test_backfill_matches_streaming_rollup(spark, tmp_path):

@@ -25,8 +25,9 @@ centroid assignment join — same plan shape.
 
 from __future__ import annotations
 
+import math
 import threading
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2648,10 +2649,15 @@ ORDER BY query_id, rank
 """
 
 
-def nsw_near_links(vecs: DataFrame) -> DataFrame:
-    """NSW near links: top-M cosine neighbors within each node's LSH
-    bucket (sub-quadratic build — the `embedding_near_dup`
-    discipline). ``vecs`` must carry (vec_id, v, norm, bucket)."""
+def nsw_near_links(vecs: DataFrame, n_shards: int = 1) -> DataFrame:
+    """NSW near links: top-M cosine neighbors within each node's
+    (LSH bucket x shard) block, shard = vec_id % ``n_shards``
+    (sub-quadratic build — the `embedding_near_dup` discipline).
+    Every stored edge is intra-shard by construction, so one bucketed
+    self-join builds all S graphs; with one shard the block is the
+    bucket. ``vecs`` must carry (vec_id, v, norm, bucket);
+    ``n_shards`` must match the search's (`nsw_beam` derives strides
+    and entry nodes from it). Reads ``_NSW_M`` at call time."""
     a = vecs.select(
         F.col("vec_id").alias("src"),
         F.col("v").alias("av"),
@@ -2672,6 +2678,10 @@ def nsw_near_links(vecs: DataFrame) -> DataFrame:
         a.join(
             b,
             (F.col("bucket") == F.col("bbucket"))
+            & (
+                F.pmod(F.col("src"), F.lit(n_shards))
+                == F.pmod(F.col("dst"), F.lit(n_shards))
+            )
             & (F.col("src") != F.col("dst")),
         )
         .select("src", "dst", ncos.alias("ncos"))
@@ -2851,19 +2861,32 @@ def nsw_beam(
     near: DataFrame,
     store: DataFrame | None = None,
     beam_width: int | None = None,
+    n_shards: int = 1,
 ) -> DataFrame:
-    """Greedy beam search over the NSW near-link table: H hops, width
-    B, from entry node 0; returns every (query_id, node, score) the
-    search EVALUATED (the pool a top-k draws from). ``qs`` carries
-    (query_id, qv, qnorm); ``vecs`` (vec_id, v, norm); ``near`` the
-    stored (src, dst) near links. Long-link candidates are generated
-    ARITHMETICALLY from the frontier (node +/- 2^j — identical to
-    joining a materialized long-link table, since a dangling target
-    drops at the scoring join, but O(frontier) instead of O(corpus)
-    per hop: the sf10 measurement caught the corpus-sized derive+
-    distinct costing 66 s/probe at 200k vectors). Each hop is
-    localCheckpointed — hop h's plan references hop h-1, and Catalyst
-    inlines, so an unchained plan is exponential in H.
+    """Greedy beam search over the NSW near-link table: H hops from
+    entry node(s) ``0 .. n_shards - 1``; returns every (query_id,
+    shard, node, score) the search EVALUATED (the pool a top-k draws
+    from). ``qs`` carries (query_id, qv, qnorm); ``vecs`` (vec_id, v,
+    norm); ``near`` the stored (src, dst) near links, built by
+    `nsw_near_links` with the same ``n_shards``. Long-link candidates
+    are generated ARITHMETICALLY from the frontier (node +/- S x 2^j —
+    identical to joining a materialized long-link table, since a
+    dangling target drops at the scoring join, but O(frontier)
+    instead of O(corpus) per hop: the sf10 measurement caught the
+    corpus-sized derive+distinct costing 66 s/probe at 200k vectors).
+    Each hop is localCheckpointed — hop h's plan references hop h-1,
+    and Catalyst inlines, so an unchained plan is exponential in H.
+
+    Shards: ``shard = node % S``. Strides are multiples of S and
+    stored edges are intra-shard, so every candidate stays in its
+    entry node's shard and ``shard`` is derived from ``node`` rather
+    than carried through the lookups. The top-B window is keyed by
+    (query_id, shard), so all S beams advance in the SAME H hops (the
+    per-hop driver cost is paid once regardless of S) and the
+    per-shard visited sets are disjoint. One shard is the flat graph:
+    a single entry node 0, strides +/- 2^j, one beam per query.
+    ``beam_width`` is per shard; the default ``_NSW_B // S`` spends
+    the flat contract budget across the shards (budget-fair).
 
     ``store``: the MATERIALIZED vector store written by
     ``write_nsw_index`` ((node_id, nv, nn) partitioned by
@@ -2872,20 +2895,19 @@ def nsw_beam(
     lookups — frontier->edges AND candidates->vectors — join their
     pt-partitioned table with the probe side broadcast, so Spark
     inserts a dynamic-partition-pruning subquery on each scan and a
-    hop reads ONLY the partitions its <= B frontier nodes /
-    <= B x (degree + strides) candidates land in, never the corpus
-    and never the full edge set. Each hop's FRONTIER is also
-    checkpointed (after its top-B window): Spark drops a DPP filter
-    from the executed plan when the filtering side contains a Window
-    operator, so an uncheckpointed frontier silently degrades every
-    hop after the first to a full-table read (measured round 14;
-    pinned by test_nsw_full_probe_hops_keep_dpp). This is the
-    serving-path answer to the residual 100x-scale cost (the
-    in-memory checkpoints below are the self-contained-plan answer
-    and cap at executor memory; their pre-checkpoint coalesce caps
-    each hop's corpus-wide scoring join at _NSW_SC_PARTS_INMEM tasks
-    — acceptable for the bounded correctness form, and the serving
-    path is the one that scales).
+    hop reads ONLY the partitions its frontier nodes / candidates
+    land in, never the corpus and never the full edge set. Each
+    hop's FRONTIER is also checkpointed (after its top-B window):
+    Spark drops a DPP filter from the executed plan when the
+    filtering side contains a Window operator, so an uncheckpointed
+    frontier silently degrades every hop after the first to a
+    full-table read (measured round 14; pinned by
+    test_nsw_probe_hops_keep_dpp). This is the serving-path answer to
+    the residual 100x-scale cost (the in-memory checkpoints below are
+    the self-contained-plan answer and cap at executor memory; their
+    pre-checkpoint coalesce caps each hop's corpus-wide scoring join
+    at _NSW_SC_PARTS_INMEM tasks — acceptable for the bounded
+    correctness form, and the serving path is the one that scales).
 
     Laziness caveat: CONSTRUCTING the serving-path DataFrame stages
     and executes the hop chain (the per-hop checkpoints are eager so
@@ -2903,11 +2925,13 @@ def nsw_beam(
             "nsw_beam needs a scoring side: pass vecs (in-memory path) "
             "or store (materialized serving path)"
         )
-    if beam_width is not None and beam_width < 1:
-        raise ValueError(f"beam_width must be >= 1, got {beam_width}")
-    # beam_width=0 must be rejected above, not silently mapped to the
+    if n_shards < 1:
+        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
+    # beam_width=0 must be rejected, not silently mapped to the
     # contract width by a falsy `or` (round-12 ADVICE)
-    beam = beam_width if beam_width is not None else _NSW_B
+    beam = beam_width if beam_width is not None else _NSW_B // n_shards
+    if beam < 1:
+        raise ValueError(f"beam_width must be >= 1, got {beam}")
     # checkpoint the query panel once: every hop broadcasts qs into its
     # scoring join, and without this each of the H broadcasts re-runs
     # qs's upstream plan (a parquet scan per hop in the serving path —
@@ -2940,14 +2964,21 @@ def nsw_beam(
     score_sql = (
         f"round(({_DOT.format(a='qv', b='nv')}) / (qnorm * nn), 4) AS score"
     )
+    shard_sql = f"pmod(node, {n_shards}) AS shard"
     rn_col = F.row_number().over(
-        Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("node"))
+        Window.partitionBy("query_id", "shard").orderBy(
+            F.desc("score"), F.col("node")
+        )
     )
     steps_csv = ", ".join(
-        str(s) for s in (*_NSW_STEPS, *(-s for s in _NSW_STEPS))
+        str(s * n_shards) for s in (*_NSW_STEPS, *(-s for s in _NSW_STEPS))
     )
     longc_sql = f"explode(transform(array({steps_csv}), s -> node + s)) AS node"
-    frontier = qs.selectExpr("query_id", "CAST(0 AS LONG) AS node")
+    # shard s enters at node s (dense ids guarantee it exists): a
+    # generator, not a join against a range of shard ids
+    frontier = qs.selectExpr(
+        "query_id", f"explode(sequence(0L, {n_shards - 1}L)) AS node"
+    )
     visited = None
     # pin the hop-scope confs on EVERY session involved in the hop
     # plans, not just the panel's: each hop DataFrame plans under its
@@ -2957,8 +2988,6 @@ def nsw_beam(
     # sibling session would otherwise pin the flags on the wrong one
     # (round-14 self-review). The guard depth-counts per JVM session,
     # so duplicate wrappers of one session just nest.
-    from contextlib import ExitStack
-
     sessions = {qs.sparkSession}
     sessions.add(
         (store if store is not None else nodes).sparkSession
@@ -2992,7 +3021,7 @@ def nsw_beam(
             else:
                 looked = _nsw_store_lookup(cand, store)
             sc = looked.join(F.broadcast(qs), "query_id").selectExpr(
-                "query_id", "node", score_sql
+                "query_id", shard_sql, "node", score_sql
             )
             if store is not None:
                 # SERVING path: checkpoint EAGERLY at the scan's own
@@ -3065,29 +3094,24 @@ def nsw_beam(
     return visited.distinct()
 
 
-def _nsw_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the NSW near links inline and run the query panel's beam
-    search (the self-contained correctness form; `update_nsw_index`
-    is the materialized serving twin)."""
-    vecs = _vectors(spark, sf_dir)
-    near = nsw_near_links(vecs).localCheckpoint(eager=False)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
+def _nsw_panel(vecs: DataFrame) -> DataFrame:
+    """The registered queries' search panel: (query_id, qv, qnorm) of
+    the first N_QUERIES vectors."""
+    return vecs.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("norm").alias("qnorm"),
     )
-    return nsw_beam(qs, vecs, near)
 
 
-@register("graph_ann_beam", _GRAPH_ANN_DUCK, tags=("similarity", "retrieval"))
-def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs_w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("node")
-    )
-    visited = _nsw_visited(spark, sf_dir)
+def _nsw_topk(visited: DataFrame) -> DataFrame:
+    """Global top-k of a beam's visited pool, self-matches excluded:
+    (query_id, rank, neighbor_id, cosine). Per-shard visited sets are
+    disjoint, so merging the shards is this one window, no dedup."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("node"))
     return (
         visited.where(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(vecs_w))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= TOPK)
         .select(
             "query_id",
@@ -3095,8 +3119,23 @@ def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("node").alias("neighbor_id"),
             F.col("score").alias("cosine"),
         )
-        .orderBy("query_id", "rank")
     )
+
+
+def _nsw_visited(
+    spark: SparkSession, sf_dir: str, n_shards: int = 1
+) -> DataFrame:
+    """Build the NSW near links inline and run the query panel's beam
+    search (the self-contained correctness form; `graph_ann_serve` /
+    `graph_ann_sharded_serve` are the materialized serving twins)."""
+    vecs = _vectors(spark, sf_dir)
+    near = nsw_near_links(vecs, n_shards).localCheckpoint(eager=False)
+    return nsw_beam(_nsw_panel(vecs), vecs, near, n_shards=n_shards)
+
+
+@register("graph_ann_beam", _GRAPH_ANN_DUCK, tags=("similarity", "retrieval"))
+def graph_ann_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _nsw_topk(_nsw_visited(spark, sf_dir)).orderBy("query_id", "rank")
 graph_ann_beam.__doc__ = """Graph-based ANN — the navigable-small-world family (Malkov et
     al. NSW; the flat-graph ancestor of HNSW) as a relational plan,
     completing the ANN families next to brute/LSH/IVF/IVF-PQ: the
@@ -3161,26 +3200,10 @@ ORDER BY e.query_id
 """
 
 
-@register(
-    "graph_ann_recall", _GRAPH_RECALL_DUCK, tags=("similarity", "retrieval")
-)
-def graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("node")
-    )
-    got = (
-        _nsw_visited(spark, sf_dir)
-        .where(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    vecs = _vectors(spark, sf_dir)
-    q = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
+def _nsw_exact(vecs: DataFrame, qs: DataFrame) -> DataFrame:
+    """The exact brute-force top-k (query_id, neighbor_id) the recall
+    queries score the beam against: O(queries x corpus) BY DESIGN
+    (bounded query panel, labeled baseline)."""
     c = vecs.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("cv"),
@@ -3194,14 +3217,25 @@ def graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     we = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.col("neighbor_id")
     )
-    exact = (
-        F.broadcast(q)
+    return (
+        F.broadcast(qs)
         .join(c, F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("score"))
         .withColumn("rn", F.row_number().over(we))
         .where(F.col("rn") <= TOPK)
         .select("query_id", "neighbor_id")
     )
+
+
+@register(
+    "graph_ann_recall", _GRAPH_RECALL_DUCK, tags=("similarity", "retrieval")
+)
+def graph_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    got = _nsw_topk(_nsw_visited(spark, sf_dir)).select(
+        "query_id", "neighbor_id"
+    )
+    vecs = _vectors(spark, sf_dir)
+    exact = _nsw_exact(vecs, _nsw_panel(vecs))
     return (
         exact.alias("e")
         .join(
@@ -3284,45 +3318,13 @@ ORDER BY beam_width
 def graph_beam_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     near = nsw_near_links(vecs).localCheckpoint(eager=False)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cnorm"),
-    )
-    cos = F.round(
-        F.expr(_DOT.format(a="qv", b="cv"))
-        / (F.col("qnorm") * F.col("cnorm")),
-        4,
-    )
-    we = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    exact = (
-        F.broadcast(qs)
-        .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("score"))
-        .withColumn("rn", F.row_number().over(we))
-        .where(F.col("rn") <= TOPK)
-        .select("query_id", "neighbor_id")
-        # one exact arm feeds every width's recall join
-        .localCheckpoint(eager=False)
-    )
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("node")
-    )
+    qs = _nsw_panel(vecs)
+    # one exact arm feeds every width's recall join
+    exact = _nsw_exact(vecs, qs).localCheckpoint(eager=False)
     arms = []
     for b in _BCURVE_WIDTHS:
-        got = (
-            nsw_beam(qs, vecs, near, beam_width=b)
-            .where(F.col("node") != F.col("query_id"))
-            .withColumn("rank", F.row_number().over(wb))
-            .where(F.col("rank") <= TOPK)
-            .select("query_id", F.col("node").alias("neighbor_id"))
+        got = _nsw_topk(nsw_beam(qs, vecs, near, beam_width=b)).select(
+            "query_id", "neighbor_id"
         )
         arms.append(
             exact.alias("e")
@@ -3373,20 +3375,23 @@ graph_beam_recall_curve.__doc__ = """The beam-width (efSearch) half of the graph
 # collapsing past ~10x corpus growth and prescribed exactly this)
 # ---------------------------------------------------------------------------
 
-#: shard count for the sharded-search fixture. ``shard = vec_id % S``:
-#: a shard's ids form an arithmetic progression, so the intra-shard
-#: long-link strides are +/- S*2^j (adding a multiple of S preserves
-#: vec_id % S — every arithmetic candidate stays in its own shard),
-#: near links are built within (LSH bucket x shard) so stored edges
-#: are intra-shard by construction, and the per-shard visited sets
-#: are therefore DISJOINT: the merge is a plain top-k window, no
-#: cross-shard dedup needed. Shard s's entry node is vec_id = s
-#: (dense ids guarantee it exists).
+#: shard count of the registered sharded queries (``n_shards`` of
+#: `nsw_near_links` / `nsw_beam` / `write_nsw_index` /
+#: `probe_nsw_index`). ``shard = vec_id % S``: a shard's ids form an
+#: arithmetic progression, so the intra-shard long-link strides are
+#: +/- S*2^j (adding a multiple of S preserves vec_id % S — every
+#: arithmetic candidate stays in its own shard), near links are built
+#: within (LSH bucket x shard) so stored edges are intra-shard by
+#: construction, and the per-shard visited sets are therefore
+#: DISJOINT: the merge is a plain top-k window, no cross-shard dedup
+#: needed. Shard s's entry node is vec_id = s (dense ids guarantee it
+#: exists).
 _NSW_SHARDS = 4
 #: per-shard beam width: the flat contract width split evenly across
-#: shards, so the sharded search spends the SAME total evaluation
-#: budget (S x B_s = _NSW_B) as `graph_ann_beam` — recall
-#: comparisons between the two forms are budget-fair.
+#: shards (`nsw_beam`'s default ``_NSW_B // n_shards``), so the
+#: sharded search spends the SAME total evaluation budget
+#: (S x B_s = _NSW_B) as `graph_ann_beam` — recall comparisons
+#: between the two forms are budget-fair.
 _NSW_SHARD_B = _NSW_B // _NSW_SHARDS
 #: the budget-fair invariant (S x B_s == _NSW_B) is load-bearing for
 #: every recall comparison between the flat and sharded forms — a
@@ -3481,188 +3486,24 @@ ORDER BY query_id, rank
 """
 
 
-def nsw_sharded_near_links(
-    vecs: DataFrame, n_shards: int = _NSW_SHARDS
-) -> DataFrame:
-    """Per-shard NSW near links: top-M cosine neighbors within each
-    node's (LSH bucket x shard) block — `nsw_near_links` with the
-    candidate join additionally blocked on ``vec_id % S``, so every
-    stored edge is intra-shard by construction and the S graphs can
-    be built in ONE bucketed self-join (no per-shard driver loop; at
-    production scale each shard's build is also independently
-    schedulable). ``vecs`` must carry (vec_id, v, norm, bucket).
-    ``n_shards`` MUST match the shard count the search runs with
-    (`nsw_sharded_beam`'s strides and entry nodes are derived from
-    it) — threaded, not hardcoded, so a non-default caller cannot
-    silently mix a 4-shard graph with an 8-shard search (round-14
-    ADVICE)."""
-    a = vecs.select(
-        F.col("vec_id").alias("src"),
-        F.col("v").alias("av"),
-        F.col("norm").alias("an"),
-        "bucket",
-    )
-    b = vecs.select(
-        F.col("vec_id").alias("dst"),
-        F.col("v").alias("bv"),
-        F.col("norm").alias("bn"),
-        F.col("bucket").alias("bbucket"),
-    )
-    ncos = F.expr(_DOT.format(a="av", b="bv")) / (F.col("an") * F.col("bn"))
-    wnear = Window.partitionBy("src").orderBy(F.desc("ncos"), F.col("dst"))
-    return (
-        a.join(
-            b,
-            (F.col("bucket") == F.col("bbucket"))
-            & (
-                F.pmod(F.col("src"), F.lit(n_shards))
-                == F.pmod(F.col("dst"), F.lit(n_shards))
-            )
-            & (F.col("src") != F.col("dst")),
-        )
-        .select("src", "dst", ncos.alias("ncos"))
-        .withColumn("rn", F.row_number().over(wnear))
-        .where(F.col("rn") <= _NSW_M)
-        .select("src", "dst")
-    )
-
-
-def nsw_sharded_beam(
-    qs: DataFrame,
-    vecs: DataFrame,
-    near: DataFrame,
-    n_shards: int = _NSW_SHARDS,
-    beam_width: int = _NSW_SHARD_B,
-) -> DataFrame:
-    """Greedy beam search over S per-shard NSW graphs in ONE hop loop:
-    the frontier carries a ``shard`` column, hop h's top-B_s window is
-    keyed by (query_id, shard), strides are S-scaled (intra-shard by
-    arithmetic), and the stored edges are intra-shard by construction
-    — so all S searches advance in the SAME H jobs, not S sequential
-    hop loops (the per-hop driver cost that dominates the flat serving
-    probe is paid once regardless of S). Returns every (query_id,
-    shard, node, score) any shard's beam evaluated.
-
-    This is the distributed shape `nsw_beam`'s 100x measurements
-    point at (PERF.md: flat recall 0.644 at 200k even at rule width —
-    hop count from one entry node outgrows H; HNSW fixes it with
-    layers, distributed deployments fix it by sharding): per-shard
-    corpora stay inside the beam rule's validated ~10x envelope, each
-    shard keeps its own close entry point, and the merge is a
-    serving-batch-bounded top-k. The in-memory form here is the
-    correctness fixture; `write_nsw_sharded_index` /
-    `probe_nsw_sharded_index` (+ `nsw_sharded_serve_beam`) are the
-    materialized serving twin — each shard's near links/vectors
-    stored exactly like `write_nsw_index` with the shard id
-    prepended to the partition key, probed with the same
-    executed-DPP discipline (registered as
-    `graph_ann_sharded_serve`)."""
-    qs = qs.localCheckpoint(eager=False)
-    # one global scoring table: a candidate join on vec_id is already
-    # shard-correct (candidates are intra-shard by construction), and
-    # one checkpointed table beats S per-shard copies
-    nodes = vecs.select(
-        F.col("vec_id").alias("node_id"),
-        F.col("v").alias("nv"),
-        F.col("norm").alias("nn"),
-    ).localCheckpoint(eager=False)
-    score = F.round(
-        F.expr(_DOT.format(a="qv", b="nv")) / (F.col("qnorm") * F.col("nn")),
-        4,
-    )
-    wbeam = Window.partitionBy("query_id", "shard").orderBy(
-        F.desc("score"), F.col("node")
-    )
-    strides = F.explode(
-        F.array(
-            *[F.lit(s * n_shards) for s in _NSW_STEPS],
-            *[F.lit(-s * n_shards) for s in _NSW_STEPS],
-        )
-    ).alias("s")
-    shards = qs.sparkSession.range(n_shards).select(
-        F.col("id").cast("int").alias("shard")
-    )
-    frontier = qs.select("query_id").crossJoin(F.broadcast(shards)).select(
-        "query_id", "shard", F.col("shard").cast("long").alias("node")
-    )
-    visited = None
-    from contextlib import ExitStack
-
-    sessions = {qs.sparkSession, nodes.sparkSession, near.sparkSession}
-    with ExitStack() as stack:
-        for sess in sessions:
-            stack.enter_context(_fast_hop_planning(sess))
-        for hop in range(_NSW_H):
-            hops = frontier.join(near, frontier.node == near.src).select(
-                "query_id", "shard", F.col("dst").alias("node")
-            )
-            longc = frontier.select("query_id", "shard", "node", strides).select(
-                "query_id", "shard", (F.col("node") + F.col("s")).alias("node")
-            )
-            cand = (
-                hops.union(longc)
-                .union(frontier.select("query_id", "shard", "node"))
-                .distinct()
-            )
-            sc = (
-                cand.join(nodes, cand.node == nodes.node_id)
-                .join(F.broadcast(qs), "query_id")
-                .select("query_id", "shard", "node", score.alias("score"))
-            )
-            # same lineage-chain discipline as the flat in-memory path:
-            # lazy checkpoint at a small width >1 so the corpus-sized
-            # scoring join stays parallel
-            sc = sc.coalesce(_NSW_SC_PARTS_INMEM).localCheckpoint(
-                eager=False
-            )
-            visited = sc if visited is None else visited.union(sc)
-            if hop == _NSW_H - 1:
-                break
-            frontier = (
-                sc.withColumn("rn", F.row_number().over(wbeam))
-                .where(F.col("rn") <= beam_width)
-                .select("query_id", "shard", "node")
-            )
-    return visited.distinct()
-
-
 @register(
     "graph_ann_sharded",
     _GRAPH_ANN_SHARDED_DUCK,
     tags=("similarity", "retrieval"),
 )
 def graph_ann_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _vectors(spark, sf_dir)
-    near = nsw_sharded_near_links(vecs).localCheckpoint(eager=False)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    visited = nsw_sharded_beam(qs, vecs, near)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("node"))
-    return (
-        visited.where(F.col("node") != F.col("query_id"))
-        .select("query_id", "node", "score")
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            F.col("node").alias("neighbor_id"),
-            F.col("score").alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
+    return _nsw_topk(_nsw_visited(spark, sf_dir, _NSW_SHARDS)).orderBy(
+        "query_id", "rank"
     )
 graph_ann_sharded.__doc__ = """SHARDED graph ANN — the distributed-deployment form of
-    `graph_ann_beam`: the corpus is hash-sharded ({s} shards,
-    shard = vec_id % {s}), each shard gets its OWN NSW graph (top-{m}
-    cosine links within (LSH bucket x shard); long links +/- {s}*2^j,
-    intra-shard by arithmetic) and its own entry node (vec_id = s),
-    every shard is searched with a {h}-hop width-{bs} beam — all
-    shards advancing in ONE hop loop keyed by (query_id, shard) — and
-    per-shard results merge by a global top-{k} window. The total
+    `graph_ann_beam`, and the same code with ``n_shards={s}``: the
+    corpus is hash-sharded (shard = vec_id % {s}), each shard gets its
+    OWN NSW graph (`nsw_near_links`: top-{m} cosine links within (LSH
+    bucket x shard); long links +/- {s}*2^j, intra-shard by
+    arithmetic) and its own entry node (vec_id = s), every shard is
+    searched with a {h}-hop width-{bs} beam — all shards advancing in
+    `nsw_beam`'s ONE hop loop, the window keyed by (query_id, shard) —
+    and per-shard results merge by a global top-{k} window. The total
     evaluation budget ({s} x {bs} = {b}) equals the flat contract
     search, so the two forms are budget-comparable.
 
@@ -3675,19 +3516,20 @@ graph_ann_sharded.__doc__ = """SHARDED graph ANN — the distributed-deployment 
     keeps a close entry point, and searches parallelize perfectly
     (shard-local graphs, no cross-shard edges, disjoint visited sets
     — the merge needs no dedup). MEASURED at 200k clustered vectors
-    (8 x 25k production indexes, scripts/nsw_clustered_recall.py
+    (8 separate 25k-vector indexes, scripts/nsw_clustered_recall.py
     sharded mode, PERF.md round 14): budget-fair split of the flat
     rule width reads 0.618 (~ flat's 0.644); the rule applied PER
     SHARD (the deployment's actual sizing) reads 0.786 — above every
     measured flat arm including the densified M=24 one (0.708).
     Inside the envelope the split costs recall at equal budget
     (0.70 vs 0.84 flat at sf0.1's 2000 vectors) — sharding is the
-    BEYOND-envelope lever, not a free win. At 100 TB each shard's
-    graph builds, maintains (`merge_nsw_index`), and serves
-    independently; the scatter-gather is queries x {s} x {bs} rows —
-    serving-batch bounded. Malkov et al. (NSW) for the graph; the
-    shard-and-merge composition is the FAISS/Vespa/Milvus deployment
-    shape.""".format(
+    BEYOND-envelope lever, not a free win. The materialized form is
+    `write_nsw_index` / `probe_nsw_index` with the same shard count
+    (`graph_ann_sharded_serve`); `merge_nsw_index` maintains
+    one-shard indexes only. The scatter-gather is queries x {s} x
+    {bs} rows — serving-batch bounded. Malkov et al. (NSW) for the
+    graph; the shard-and-merge composition is the FAISS/Vespa/Milvus
+    deployment shape.""".format(
     s=_NSW_SHARDS, m=_NSW_M, h=_NSW_H, bs=_NSW_SHARD_B, b=_NSW_B, k=TOPK
 )
 
@@ -3724,14 +3566,14 @@ def nsw_bucket_bits_for(n: int) -> int:
     the defect the sf10 sweep caught). Floored at LSH_BITS so small
     corpora keep the contract-scale graph shape (and the registered
     queries, which pin LSH_BITS explicitly, stay hash-stable)."""
-    import math
-
     if n < 32 * 2**LSH_BITS:
         return LSH_BITS
     return int(math.log2(n / 32))
 
 
-def nsw_beam_width_for(n: int, contract_n: int = 2_000) -> int:
+def nsw_beam_width_for(
+    n: int, contract_n: int = 2_000, n_shards: int = 1
+) -> int:
     """Measured serving rule for the beam width (efSearch) needed to
     HOLD recall as the corpus grows past the contract scale: the sf1
     sweep (PERF.md "NSW at 10x vectors") measured recall@5 0.84 at
@@ -3752,11 +3594,26 @@ def nsw_beam_width_for(n: int, contract_n: int = 2_000) -> int:
     longer cross the corpus (the problem HNSW's hierarchy exists
     for). Past ~10x, re-tune against scripts/nsw_clustered_recall.py
     (env-knob scale/M/beam overrides), or shard the index and merge
-    per-shard top-k so each shard stays in the rule's validated
-    range. The registered contract queries pin B={b}
-    (the oracle restates the hops at that width), so this rule is the
-    PRODUCTION caller's lever via ``probe_nsw_index(beam_width=)``,
-    never an implicit default."""
+    per-shard top-k so each shard stays in the rule's validated range.
+
+    ``n_shards``: the rule applied to the SHARD size
+    (``ceil(n / S)``; ``n`` stays the TOTAL corpus count a serving
+    caller has) — the PER-SHARD width of a sharded deployment, the
+    sizing the 200k clustered measurement validated (PERF.md round
+    14, sharded mode: 200k vectors / 8 shards recovered recall 0.786
+    where NO flat arm exceeded 0.708). The premium is stated, not
+    hidden: S shards at the per-shard rule spend S x B_s evaluations
+    — 2.3x the flat rule's budget at the measured point (8 x 291 =
+    2328 vs 1014) — and inside the envelope the equal-budget split
+    LOSES recall (0.534 vs 0.838 at 20k), so the per-shard rule is
+    the BEYOND-envelope lever.
+
+    The registered contract queries pin B={b} (the oracle restates
+    the hops at that width), so this rule is the PRODUCTION caller's
+    lever via ``probe_nsw_index(beam_width=)`` (the string
+    ``"per-shard-rule"`` applies it to the index's own count), never
+    an implicit default."""
+    n = math.ceil(n / n_shards)
     if n <= contract_n:
         return _NSW_B
     return int(_NSW_B * (n / contract_n) ** 0.6)
@@ -3770,25 +3627,34 @@ def write_nsw_index(
     sf_dir: str,
     path: str,
     bucket_bits: int | None = None,
+    n_shards: int = 1,
 ) -> None:
     """Materialize the NSW near-link table (the maintained state; long
     links are id arithmetic derived at search time, nothing to store).
 
     ``bucket_bits`` is the PRODUCTION scale lever: the near-link join
-    is quadratic WITHIN each LSH bucket, so bucket count must grow
-    with the corpus. By DEFAULT (``None``) it is derived from a
-    corpus count via the measured rule ``nsw_bucket_bits_for`` —
-    bits = floor(log2(n / 32)), ~32 vectors/bucket — so a caller at
-    200k vectors gets the ~2-minute build, not the 22-minute
+    is quadratic WITHIN each (LSH bucket x shard) block, so bucket
+    count must grow with the corpus. By DEFAULT (``None``) it is
+    derived from the per-shard count ``ceil(n / n_shards)`` via the
+    measured rule ``nsw_bucket_bits_for`` — bits =
+    floor(log2(n / 32)), ~32 vectors/bucket — so a caller at 200k
+    vectors gets the ~2-minute build, not the 22-minute
     contract-shape one (round-11 judge item 4). The registered
     contract queries PIN bits={b} explicitly (hash-stable across
-    corpus growth); pass an explicit value to reproduce a shape."""
+    corpus growth); pass an explicit value to reproduce a shape.
+
+    ``n_shards``: the shard count the graph is built for
+    (`nsw_near_links`); probe with the same value. The on-disk
+    layout is the same for every shard count: both tables are
+    partitioned by ``pt`` only, and shard = id % S is a function of
+    the id (when S divides ``_NSW_PARTS``, a pt directory holds one
+    shard's rows)."""
     from ..io import evict_index_schema
 
     evict_index_schema(path)  # overwrite may change layout vs cached
     vecs = _vectors(spark, sf_dir)
     if bucket_bits is None:
-        bucket_bits = nsw_bucket_bits_for(vecs.count())
+        bucket_bits = nsw_bucket_bits_for(math.ceil(vecs.count() / n_shards))
     if bucket_bits != LSH_BITS:
         bucket = F.expr(
             "concat_ws('', transform(sequence(1, {b}), "
@@ -3796,7 +3662,7 @@ def write_nsw_index(
             "THEN '1' ELSE '0' END))".format(b=bucket_bits)
         )
         vecs = vecs.withColumn("bucket", bucket)
-    nsw_near_links(vecs).withColumn("pt", _nsw_pt()).write.mode(
+    nsw_near_links(vecs, n_shards).withColumn("pt", _nsw_pt()).write.mode(
         "overwrite"
     ).partitionBy("pt").parquet(f"{path}/near")
     # The vector STORE the serving probe looks candidates up in,
@@ -3839,7 +3705,9 @@ def merge_nsw_index(
     the prune, repeated merges grow degree unboundedly and per-hop
     probe cost with it). New nodes do not see each other during the
     search, so the result is independent of insertion order (and
-    relational).
+    relational). It maintains ONE-SHARD indexes (`write_nsw_index`
+    with the default ``n_shards=1``): the insertion beam and the
+    neighbor re-selection are the flat graph's.
 
     The index's OWN ``{path}/vecs`` store is the live-vector
     authority for both the insertion beam and the prune — a caller
@@ -3996,7 +3864,8 @@ def probe_nsw_index(
     path: str,
     vecs: DataFrame | None,
     queries: DataFrame,
-    beam_width: int | None = None,
+    beam_width: int | str | None = None,
+    n_shards: int = 1,
 ) -> DataFrame:
     """Beam-search the materialized graph: stored near links + long
     links derived arithmetically from the beam frontier (O(frontier)
@@ -4010,11 +3879,24 @@ def probe_nsw_index(
     the corpus — the serving mode. ``queries`` carries (query_id, qv,
     qnorm). Returns (query_id, rank, neighbor_id, cosine) top-k.
 
-    ``beam_width``: the recall-vs-cost serving lever (HNSW efSearch).
-    Default is the contract-scale ``_NSW_B``; a production caller on
-    a grown corpus sizes it with ``nsw_beam_width_for(n)`` (the
-    measured ~n^0.6 recovery rule) or densifies the graph at build
-    time instead — see PERF.md "NSW at 10x vectors"."""
+    ``n_shards`` must match the index's (`write_nsw_index`): all S
+    shards advance in one hop loop and their disjoint visited sets
+    merge by one global top-k window (scatter-gather).
+
+    ``beam_width``: the per-shard recall-vs-cost serving lever (HNSW
+    efSearch). Default ``_NSW_B // n_shards`` (the contract budget);
+    a production caller on a grown corpus sizes it with
+    ``nsw_beam_width_for`` (the measured ~n^0.6 recovery rule) or
+    densifies the graph at build time instead — see PERF.md "NSW at
+    10x vectors". The string ``"per-shard-rule"`` applies
+    ``nsw_beam_width_for(n, n_shards=n_shards)`` to the store's own
+    count — with shards, the deployment sizing that recovered 0.786
+    recall at 200k where no flat arm exceeded 0.708, at a stated 2.3x
+    budget premium over the flat rule (pinned by
+    tests/test_retrieval_contract.py's per-shard-rule floor)."""
+    if beam_width == "per-shard-rule":
+        n = read_index_parquet(spark, f"{path}/vecs").count()
+        beam_width = nsw_beam_width_for(n, n_shards=n_shards)
     store = None
     if vecs is None:
         # serving mode: BOTH index tables stay on disk and every hop
@@ -4030,300 +3912,13 @@ def probe_nsw_index(
             .select("src", "dst")
             .localCheckpoint(eager=False)
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("node")
-    )
-    return (
-        nsw_beam(queries, vecs, near, store=store, beam_width=beam_width)
-        .where(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            F.col("node").alias("neighbor_id"),
-            F.col("score").alias("cosine"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sharded NSW index lifecycle: write / probe — the MATERIALIZED serving
-# twin of `graph_ann_sharded` (the deployment form its docstring
-# promises; round-14 verdict item 2)
-# ---------------------------------------------------------------------------
-
-
-def nsw_sharded_beam_width_for(
-    n: int, n_shards: int = _NSW_SHARDS, contract_n: int = 2_000
-) -> int:
-    """PER-SHARD rule width for a sharded deployment: the flat
-    ``nsw_beam_width_for`` n^0.6 rule applied to the SHARD size
-    (``ceil(n / S)``), not the corpus — the sizing the 200k clustered
-    measurement validated (PERF.md round 14, sharded mode): at
-    200k vectors / 8 shards the per-shard rule width recovered recall
-    0.786 where NO flat arm exceeded 0.708 (rule width B=1014, or the
-    densified M=24 graph) — sharding keeps every shard inside the
-    flat rule's validated ~10x envelope, which is the whole point of
-    the deployment form. The premium is stated, not hidden: the
-    per-shard rule spends S x B_s evaluations — 2.3x the flat rule's
-    budget at the measured point (8 x 291 = 2328 vs 1014) — and
-    inside the envelope the equal-budget split LOSES recall
-    (0.534 vs 0.838 at 20k), so this rule is the BEYOND-envelope
-    lever. ``n`` is the TOTAL corpus count (what a serving caller
-    has); pass it with the deployment's shard count."""
-    import math
-
-    return nsw_beam_width_for(max(1, math.ceil(n / n_shards)), contract_n)
-
-
-def write_nsw_sharded_index(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    bucket_bits: int | None = None,
-    n_shards: int = _NSW_SHARDS,
-) -> None:
-    """Materialize the per-shard NSW stores — `write_nsw_index` with
-    the shard id PREPENDED to the partition key: edges are the
-    (LSH bucket x shard)-blocked near links of
-    ``nsw_sharded_near_links`` written to ``{path}/near`` partitioned
-    by ``(shard, pt)`` (shard = src % S, pt = pmod(src, _NSW_PARTS)),
-    and the vector store to ``{path}/vecs`` partitioned by the same
-    scheme over vec_id. Because every stored edge is intra-shard by
-    construction, one bucketed self-join builds ALL S graphs; at
-    production scale the shard directories are the unit of
-    independent build / merge / serve (each shard's subtree IS a flat
-    `write_nsw_index` layout for its residue class, so per-shard
-    maintenance reuses the flat discipline unchanged).
-
-    ``bucket_bits`` defaults to the measured per-SHARD rule — the
-    near-link join is quadratic within (bucket x shard), so the
-    ~32-vectors-per-block budget sizes against ``n / S``, not ``n``.
-    The registered contract query pins LSH_BITS (hash-stable vs the
-    oracle's `_DUCK_VECTORS` bucket)."""
-    import math
-
-    from ..io import evict_index_schema
-
-    evict_index_schema(path)  # sharded layout differs from flat at same path
-    vecs = _vectors(spark, sf_dir)
-    if bucket_bits is None:
-        bucket_bits = nsw_bucket_bits_for(
-            max(1, math.ceil(vecs.count() / n_shards))
-        )
-    if bucket_bits != LSH_BITS:
-        bucket = F.expr(
-            "concat_ws('', transform(sequence(1, {b}), "
-            "i -> CASE WHEN element_at(v, i) >= cast(0 AS DOUBLE) "
-            "THEN '1' ELSE '0' END))".format(b=bucket_bits)
-        )
-        vecs = vecs.withColumn("bucket", bucket)
-    shard_of = lambda c: F.pmod(F.col(c), F.lit(n_shards)).cast("int")  # noqa: E731
-    nsw_sharded_near_links(vecs, n_shards=n_shards).withColumn(
-        "shard", shard_of("src")
-    ).withColumn("pt", _nsw_pt()).write.mode("overwrite").partitionBy(
-        "shard", "pt"
-    ).parquet(f"{path}/near")
-    vecs.select("vec_id", "v", "norm").withColumn(
-        "shard", shard_of("vec_id")
-    ).withColumn("pt", _nsw_pt("vec_id")).write.mode(
-        "overwrite"
-    ).partitionBy("shard", "pt").parquet(f"{path}/vecs")
-
-
-def _nsw_sharded_store_lookup(cand: DataFrame, store: DataFrame) -> DataFrame:
-    """`_nsw_store_lookup` with the shard key: ``cand`` carries
-    (query_id, shard, node) — its shard column is renamed ``qshard``
-    on the broadcast side so the joined frame keeps one unambiguous
-    name per role — and the join restates BOTH partition-key
-    equalities (shard, pt) next to the row key, so the executed scan
-    carries dynamic-pruning filters on both partition columns and a
-    hop reads only the (shard, pt) leaves its candidates land in.
-    The shard equality is derivable from pt (S divides _NSW_PARTS,
-    so pt determines shard) — it is stated for the pruning rule, not
-    for row matching."""
-    candp = (
-        cand.where("node >= 0")
-        .selectExpr(
-            "query_id",
-            "shard AS qshard",
-            "node",
-            f"pmod(node, {_NSW_PARTS}) AS qpt",
-        )
-        .coalesce(1)
-    )
-    return store.join(
-        F.broadcast(candp),
-        F.expr("shard = qshard AND pt = qpt AND node_id = node"),
-    )
-
-
-def _nsw_sharded_edge_lookup(frontier: DataFrame, near: DataFrame) -> DataFrame:
-    """`_nsw_edge_lookup` with the shard key (same broadcast +
-    both-partition-columns shape as `_nsw_sharded_store_lookup`);
-    ``near`` must carry (src, dst, shard, pt)."""
-    fp = (
-        frontier.where("node >= 0")
-        .selectExpr(
-            "query_id",
-            "shard AS qshard",
-            "node",
-            f"pmod(node, {_NSW_PARTS}) AS qpt",
-        )
-        .coalesce(1)
-    )
-    return near.join(
-        F.broadcast(fp),
-        F.expr("shard = qshard AND pt = qpt AND src = node"),
-    ).selectExpr("query_id", "qshard AS shard", "dst AS node")
-
-
-def nsw_sharded_serve_beam(
-    qs: DataFrame,
-    near: DataFrame,
-    store: DataFrame,
-    beam_width: int | None = None,
-    n_shards: int = _NSW_SHARDS,
-) -> DataFrame:
-    """`nsw_sharded_beam` against the MATERIALIZED per-shard stores —
-    `nsw_beam`'s serving-path discipline with the shard column
-    threaded through every hop frame: one hop loop advances ALL S
-    beams (per-hop driver cost paid once regardless of S), each hop's
-    edge and vector lookups are broadcast probes that dynamic-
-    partition-prune BOTH index tables to the (shard, pt) leaves the
-    frontier/candidates land in, scored hops checkpoint eagerly at
-    the scan's pruned width then coalesce to SinglePartition for the
-    planner (the tiny-job shave), and each frontier checkpoints AFTER
-    its per-(query_id, shard) top-B_s window so the executed plans
-    keep live DPP (the round-14 Window-kills-DPP fix; pinned by
-    tests/test_ann_index.py::test_nsw_sharded_probe_hops_keep_dpp).
-    Returns every (query_id, shard, node, score) any shard's beam
-    evaluated. Same laziness caveat as `nsw_beam`'s serving path:
-    constructing this frame stages and executes the hop chain.
-
-    ``n_shards`` must match the shard count the stores were written
-    with (strides and entry nodes derive from it — the same contract
-    `nsw_sharded_near_links` documents)."""
-    if beam_width is not None and beam_width < 1:
-        raise ValueError(f"beam_width must be >= 1, got {beam_width}")
-    beam = beam_width if beam_width is not None else _NSW_SHARD_B
-    qs = qs.coalesce(1).localCheckpoint(eager=False)
-    # pre-formatted expression strings / hoisted Columns for the hop
-    # loop — same Py4J-consolidation rationale as nsw_beam
-    score_sql = (
-        f"round(({_DOT.format(a='qv', b='nv')}) / (qnorm * nn), 4) AS score"
-    )
-    rn_col = F.row_number().over(
-        Window.partitionBy("query_id", "shard").orderBy(
-            F.desc("score"), F.col("node")
-        )
-    )
-    steps_csv = ", ".join(
-        str(s * n_shards)
-        for s in (*_NSW_STEPS, *(-s for s in _NSW_STEPS))
-    )
-    longc_sql = f"explode(transform(array({steps_csv}), s -> node + s)) AS node"
-    shards = qs.sparkSession.range(n_shards).selectExpr(
-        "CAST(id AS INT) AS shard"
-    )
-    # entry node of shard s is vec_id = s (dense ids guarantee it)
-    frontier = qs.select("query_id").crossJoin(F.broadcast(shards)).selectExpr(
-        "query_id", "shard", "CAST(shard AS LONG) AS node"
-    )
-    visited = None
-    from contextlib import ExitStack
-
-    sessions = {qs.sparkSession, store.sparkSession, near.sparkSession}
-    with ExitStack() as stack:
-        for sess in sessions:
-            stack.enter_context(_fast_hop_planning(sess))
-        for hop in range(_NSW_H):
-            hops = _nsw_sharded_edge_lookup(frontier, near)
-            longc = frontier.selectExpr("query_id", "shard", longc_sql)
-            cand = (
-                hops.union(longc)
-                .union(frontier.select("query_id", "shard", "node"))
-                # serving-batch bounded (queries x S x B_s x (degree +
-                # strides)) — SinglePartition before the distinct, same
-                # tiny-job rationale as nsw_beam's serving path
-                .coalesce(1)
-                .distinct()
-            )
-            looked = _nsw_sharded_store_lookup(cand, store)
-            sc = looked.join(F.broadcast(qs), "query_id").selectExpr(
-                "query_id", "qshard AS shard", "node", score_sql
-            )
-            # eager at the pruned scan's width, then SinglePartition
-            # for the planner — see nsw_beam's serving-path comments
-            sc = sc.localCheckpoint(eager=True).coalesce(_NSW_SC_PARTS)
-            visited = sc if visited is None else visited.union(sc)
-            if hop == _NSW_H - 1:
-                # dead-frontier skip, as in nsw_beam
-                break
-            frontier = (
-                sc.withColumn("rn", rn_col)
-                .where(f"rn <= {beam}")
-                .select("query_id", "shard", "node")
-            )
-            # checkpoint AFTER the window: executed-DPP discipline
-            frontier = frontier.localCheckpoint(eager=False).coalesce(
-                _NSW_SC_PARTS
-            )
-    return visited.distinct()
-
-
-def probe_nsw_sharded_index(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    beam_width: int | str | None = None,
-    n_shards: int = _NSW_SHARDS,
-) -> DataFrame:
-    """Scatter-gather serving probe of the materialized sharded index:
-    all S shards advance in ONE hop loop against the stores written by
-    `write_nsw_sharded_index`, per-shard results merge by a global
-    top-k window (disjoint visited sets — no cross-shard dedup
-    needed). ``queries`` carries (query_id, qv, qnorm); returns
-    (query_id, rank, neighbor_id, cosine). Both index tables stay on
-    disk; every hop is a both-partition-columns DPP lookup.
-
-    ``beam_width``: per-SHARD width. Default the contract
-    ``_NSW_SHARD_B`` (budget-fair vs the flat contract search); the
-    string ``"per-shard-rule"`` applies `nsw_sharded_beam_width_for`
-    to the store's own count — the measured deployment sizing that
-    recovered 0.786 recall at 200k where no flat arm exceeded 0.708,
-    at a stated 2.3x budget premium over the flat rule (pinned by
-    tests/test_retrieval_contract.py's per-shard-rule floor)."""
-    if beam_width == "per-shard-rule":
-        n = read_index_parquet(spark, f"{path}/vecs").count()
-        beam_width = nsw_sharded_beam_width_for(n, n_shards)
-    near = read_index_parquet(spark, f"{path}/near").select(
-        "src", "dst", "shard", "pt"
-    )
-    store = read_index_parquet(spark, f"{path}/vecs").select(
-        F.col("vec_id").alias("node_id"),
-        F.col("v").alias("nv"),
-        F.col("norm").alias("nn"),
-        "shard",
-        "pt",
-    )
-    visited = nsw_sharded_serve_beam(
-        queries, near, store, beam_width=beam_width, n_shards=n_shards
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("node")
-    )
-    return (
-        visited.where(F.col("node") != F.col("query_id"))
-        .select("query_id", "node", "score")
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select(
-            "query_id",
-            "rank",
-            F.col("node").alias("neighbor_id"),
-            F.col("score").alias("cosine"),
+    return _nsw_topk(
+        nsw_beam(
+            queries,
+            vecs,
+            near,
+            store=store,
+            beam_width=beam_width,
+            n_shards=n_shards,
         )
     )

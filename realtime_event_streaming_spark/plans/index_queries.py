@@ -1064,10 +1064,9 @@ from ..operators.similarity import (  # noqa: E402
     _NSW_M,
     _NSW_SHARD_B,
     _NSW_SHARDS,
+    _nsw_panel,
     _vectors,
     LSH_BITS,
-    probe_nsw_sharded_index,
-    write_nsw_sharded_index,
     merge_nsw_index,
     probe_nsw_index,
     write_nsw_index,
@@ -1210,12 +1209,7 @@ ORDER BY phase, query_id, rank
 )
 def update_nsw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_path(spark, sf_dir, "nsw_maint", _build_nsw_maint)
-    vecs = _vectors(spark, sf_dir)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
+    qs = _nsw_panel(_vectors(spark, sf_dir))
     # vecs=None: both probes look candidates up in each index's OWN
     # pt-partitioned vector store (write_nsw_index seeds it, the merge
     # appends the batch), so every hop is a dynamic-partition-pruned
@@ -1304,12 +1298,7 @@ ORDER BY query_id, rank
 )
 def graph_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_path(spark, sf_dir, "nsw_base", _build_nsw_base)
-    vecs = _vectors(spark, sf_dir)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
+    qs = _nsw_panel(_vectors(spark, sf_dir))
     return probe_nsw_index(
         spark, f"{path}/base", None, qs
     ).orderBy("query_id", "rank")
@@ -1337,7 +1326,7 @@ graph_ann_serve.__doc__ = """The graph-ANN SERVING read — `pq_rerank_serve`'s 
     AFTER its top-B window un-breaks executed DPP (a Window in the
     filtering side silently drops the pruning filter — every hop
     after the first was reading both index tables whole; pinned by
-    test_nsw_full_probe_hops_keep_dpp). Same result as
+    test_nsw_probe_hops_keep_dpp). Same result as
     `graph_ann_beam` (whose plan retrains the graph inline — the
     self-contained correctness form); the oracle restates build +
     search in one statement.
@@ -1359,7 +1348,9 @@ graph_ann_serve.__doc__ = """The graph-ANN SERVING read — `pq_rerank_serve`'s 
 def _build_nsw_sharded_base(spark: SparkSession, sf_dir: str, path: str) -> None:
     # bits pinned at the contract-scale value for the same
     # oracle-bucket reason as _build_nsw_base
-    write_nsw_sharded_index(spark, sf_dir, f"{path}/base", bucket_bits=LSH_BITS)
+    write_nsw_index(
+        spark, sf_dir, f"{path}/base", bucket_bits=LSH_BITS, n_shards=_NSW_SHARDS
+    )
 
 
 @register(
@@ -1375,31 +1366,31 @@ def _build_nsw_sharded_base(spark: SparkSession, sf_dir: str, path: str) -> None
 )
 def graph_ann_sharded_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _index_path(spark, sf_dir, "nsw_sharded_base", _build_nsw_sharded_base)
-    vecs = _vectors(spark, sf_dir)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    return probe_nsw_sharded_index(spark, f"{path}/base", qs).orderBy(
-        "query_id", "rank"
-    )
+    qs = _nsw_panel(_vectors(spark, sf_dir))
+    return probe_nsw_index(
+        spark, f"{path}/base", None, qs, n_shards=_NSW_SHARDS
+    ).orderBy("query_id", "rank")
 graph_ann_sharded_serve.__doc__ = """The SHARDED graph-ANN serving read — `graph_ann_serve`'s
-    discipline applied to `graph_ann_sharded`'s deployment form: the
-    query panel scatter-gathers across {s} per-shard NSW stores
-    materialized once per process per SF by `write_nsw_sharded_index`
-    (shard id PREPENDED to the partition key: near and vecs tables
-    both directory-partitioned by (shard, pt)), all shards
-    advancing in ONE {h}-hop loop keyed by (query_id, shard) with
-    per-shard width {bs} ({s} x {bs} = the flat contract budget), and
-    per-shard top-k merging by one global window (disjoint shards —
-    no cross-shard dedup). Zero graph construction in the query plan;
-    each hop's edge AND vector lookups are broadcast probes carrying
-    BOTH partition keys, so the executed scans keep live
-    dynamic-partition-pruning filters and read only the (shard, pt)
-    leaves the frontier/candidates land in (the round-14
+    code with ``n_shards={s}``, the materialized form of
+    `graph_ann_sharded`: the query panel scatter-gathers across the
+    {s} per-shard NSW graphs of one index materialized once per
+    process per SF by `write_nsw_index(n_shards={s})` (the same
+    pt-partitioned near and vecs tables as the flat index; shard =
+    id % {s} is a function of the id, so it needs no directory
+    level), all shards advancing in `nsw_beam`'s ONE {h}-hop loop
+    keyed by (query_id, shard) with per-shard width {bs}
+    ({s} x {bs} = the flat contract budget), and per-shard top-k
+    merging by one global window (disjoint shards — no cross-shard
+    dedup). Zero graph construction in the query plan; each hop's
+    edge AND vector lookups are broadcast probes carrying the pt
+    partition key, so the executed scans keep live
+    dynamic-partition-pruning filters and read only the pt
+    partitions the frontier/candidates land in (the round-14
     Window-kills-DPP discipline, pinned by
-    test_nsw_sharded_probe_hops_keep_dpp). Same result as
+    test_nsw_probe_hops_keep_dpp[4]). The entry frontier is a
+    generator over the shard ids, not a join, so the probe launches
+    no more Spark jobs than the one-shard probe (pinned by
+    test_nsw_sharded_probe_launches_no_more_jobs). Same result as
     `graph_ann_sharded` (whose plan trains the {s} graphs inline —
     the self-contained correctness form); the oracle restates
     per-shard build + search in one statement.
@@ -1409,10 +1400,9 @@ graph_ann_sharded_serve.__doc__ = """The SHARDED graph-ANN serving read — `gra
     at 100x" — even rule width B=1014 recovered only 0.644 at 200k);
     sharding keeps each shard inside the beam rule's validated
     envelope (measured 0.786 at 200k with the per-shard rule,
-    `probe_nsw_sharded_index(beam_width="per-shard-rule")`) and each
-    shard's subtree is a flat `write_nsw_index` layout for its
-    residue class, so per-shard builds, merges and probes schedule
-    independently — the FAISS/Vespa/Milvus scatter-gather shape with
-    the merge bounded by the serving batch.""".format(
+    `probe_nsw_index(beam_width="per-shard-rule", n_shards=S)`) —
+    the FAISS/Vespa/Milvus scatter-gather shape with the merge
+    bounded by the serving batch. `merge_nsw_index` maintains
+    one-shard indexes only.""".format(
     s=_NSW_SHARDS, h=_NSW_H, bs=_NSW_SHARD_B
 )

@@ -5,7 +5,9 @@ Design notes (100 TB posture):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
   and dynamic join-strategy switching replace hand-tuned partition
   counts when the same plans run on a real cluster.
-- ``spark.sql.shuffle.partitions`` defaults to 2x local cores here; on a
+- ``spark.sql.shuffle.partitions``: ``get_spark`` sets
+  ``max(local cores, 8)``; ``prepare`` sets 32 on a session that still
+  carries Spark's default of 200 and leaves any other value alone. On a
   cluster this is expected to be overridden (or left to AQE with a high
   initial value).
 - Arrow enabled for any pandas-UDF path (the slow-path escape hatch).
@@ -86,6 +88,9 @@ _DF_DEBUGGING = (
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 _SPARK_GLOBAL_DEFAULT = "200"
+#: shuffle partitions while a fixture-scale streaming replay runs
+#: (``fixture_scale_shuffle``)
+FIXTURE_SHUFFLE_PARTITIONS = "4"
 
 
 def prepare(spark: SparkSession) -> SparkSession:
@@ -107,10 +112,10 @@ def prepare(spark: SparkSession) -> SparkSession:
 
 
 @contextmanager
-def fixture_scale_shuffle(spark: SparkSession, n: int = 4):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` to a small
-    count for a FIXTURE-SCALE streaming replay, restoring the prior
-    value after.
+def fixture_scale_shuffle(spark: SparkSession):
+    """Temporarily pin ``spark.sql.shuffle.partitions`` to
+    ``FIXTURE_SHUFFLE_PARTITIONS`` for a FIXTURE-SCALE streaming
+    replay, restoring the prior value after.
 
     The committed replay fixtures are tens-of-rows micro-batches, but
     stateful streaming shuffles are not AQE-coalesced — every batch
@@ -120,7 +125,7 @@ def fixture_scale_shuffle(spark: SparkSession, n: int = 4):
     are partition-count-invariant (the oracle hash proves it);
     production streams keep the session default."""
     old = spark.conf.get(_SHUFFLE_KEY, None)
-    spark.conf.set(_SHUFFLE_KEY, str(n))
+    spark.conf.set(_SHUFFLE_KEY, FIXTURE_SHUFFLE_PARTITIONS)
     try:
         yield
     finally:

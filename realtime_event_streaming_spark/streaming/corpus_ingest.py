@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .ingest import json_columns
+from .ingest import json_columns, read_json_file_stream
 
 #: wire schema for one crawled document (JSON lines)
 DOC_WIRE_SCHEMA = StructType(
@@ -66,15 +66,18 @@ MIN_TTR = 0.3
 DOC_WATERMARK = "30 seconds"
 
 
-def read_doc_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = 1
-) -> DataFrame:
-    """File-source stream of JSON-lines documents (the test-harness
-    stand-in for the crawler's queue, like the click path's)."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
+def _start_drain(stream: DataFrame, batch_fn, checkpoint: str):
+    """Start ``batch_fn`` as the stream's foreachBatch sink and drain
+    what has arrived (``availableNow``). Every stream in this module
+    reads its wire directory one file per micro-batch
+    (``read_json_file_stream``'s default), so a replay is
+    deterministic."""
+    return (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def parse_docs(raw: DataFrame, watermark: str = DOC_WATERMARK) -> DataFrame:
@@ -135,8 +138,6 @@ def start_corpus_admission(
     index_path: str,
     out_path: str,
     checkpoint: str,
-    max_files_per_trigger: int | None = 1,
-    available_now: bool = True,
 ):
     """The full production admission loop: stream -> quality gate ->
     within-horizon dedup (`admit_docs`) -> per-micro-batch probe of
@@ -154,9 +155,7 @@ def start_corpus_admission(
     Scale notes: the probe is a left-anti equi-join from the small
     batch side into the hash index (O(batch) work when AQE broadcasts
     the batch); the index append is 32 B per admitted doc."""
-    candidates = admit_docs(parse_docs(read_doc_stream(
-        spark, src_path, max_files_per_trigger=max_files_per_trigger
-    )))
+    candidates = admit_docs(parse_docs(read_json_file_stream(spark, src_path)))
 
     def _admit(batch_df, batch_id):
         known = (
@@ -172,13 +171,7 @@ def start_corpus_admission(
             "append"
         ).parquet(f"{index_path}/content_hash")
 
-    writer = (
-        candidates.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_drain(candidates, _admit, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -219,8 +212,6 @@ def start_embedding_admission(
     out_path: str,
     checkpoint: str,
     dup_cosine: float = SEMANTIC_DUP_COSINE,
-    max_files_per_trigger: int | None = 1,
-    available_now: bool = True,
 ):
     """`start_corpus_admission`'s ANN twin: the embedding stream
     composes with the MATERIALIZED IVF index
@@ -255,10 +246,7 @@ def start_embedding_admission(
     exactly the FAISS add-after-train maintenance split."""
     from ..operators.similarity import merge_ann_index, probe_ann_index
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    candidates = parse_vectors(reader.load(src_path))
+    candidates = parse_vectors(read_json_file_stream(spark, src_path))
 
     def _admit(batch_df, batch_id):
         sess = batch_df.sparkSession
@@ -278,18 +266,23 @@ def start_embedding_admission(
         fresh.write.mode("append").parquet(out_path)
         merge_ann_index(sess, index_path, fresh.select("vec_id", "v"))
 
-    writer = (
-        candidates.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_drain(candidates, _admit, checkpoint)
 
 
 # ---------------------------------------------------------------------------
 # streaming MANIFEST admission: the pretraining_mix_manifest twin
 # ---------------------------------------------------------------------------
+
+
+def manifest_run_id(checkpoint: str) -> str:
+    """The ``run_id`` partition value of a manifest-admission run: a
+    digest of its checkpoint location. The leading letter keeps it a
+    string under partition type inference; a bare hex digest such as
+    ``168e94140507`` is inferred as the decimal 168 x 10^94140507,
+    and reading the table back did not finish in 90 s."""
+    import hashlib
+
+    return "r" + hashlib.md5(checkpoint.encode()).hexdigest()[:12]
 
 
 def start_manifest_admission(
@@ -299,8 +292,6 @@ def start_manifest_admission(
     out_path: str,
     manifest_path: str,
     checkpoint: str,
-    max_files_per_trigger: int | None = 1,
-    available_now: bool = True,
 ):
     """`pretraining_mix_manifest`'s streaming twin: the same admission
     chain (quality gate -> exact-dedup survivorship), run per micro-
@@ -335,12 +326,8 @@ def start_manifest_admission(
     corpus row. A NEW checkpoint is a new logical run: its run_id
     differs, so it sees every prior run's admissions as history (the
     grown index) and appends alongside rather than overwriting."""
-    import hashlib
-
-    parsed = parse_docs(read_doc_stream(
-        spark, src_path, max_files_per_trigger=max_files_per_trigger
-    ))
-    run_id = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
+    parsed = parse_docs(read_json_file_stream(spark, src_path))
+    run_id = manifest_run_id(checkpoint)
     stream_index = f"{index_path}/content_hash_stream"
 
     def _admit(batch_df, batch_id):
@@ -456,13 +443,7 @@ def start_manifest_admission(
             .parquet(manifest_path)
         )
 
-    writer = (
-        parsed.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_drain(parsed, _admit, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -476,8 +457,6 @@ def start_incremental_packing(
     out_path: str,
     checkpoint: str,
     seq_len: int = 256,
-    max_files_per_trigger: int | None = 1,
-    available_now: bool = True,
 ):
     """`operators/chunking.sequence_pack`'s streaming twin: documents
     stream in and each micro-batch extends the per-source token
@@ -504,9 +483,7 @@ def start_incremental_packing(
     later batch starts a higher seq_idx for its source."""
     from pyspark.sql import Window as W
 
-    parsed = parse_docs(read_doc_stream(
-        spark, src_path, max_files_per_trigger=max_files_per_trigger
-    ))
+    parsed = parse_docs(read_json_file_stream(spark, src_path))
 
     def _pack(batch_df, batch_id):
         sess = batch_df.sparkSession
@@ -563,10 +540,4 @@ def start_incremental_packing(
             .parquet(out_path)
         )
 
-    writer = (
-        parsed.writeStream.foreachBatch(_pack)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_drain(parsed, _pack, checkpoint)

@@ -82,31 +82,16 @@ CLUSTERED_DIR = os.environ.get(
     "NSW_CLUSTERED_DIR", f"/tmp/rtes_nsw_clustered_{N_VECS}"
 )
 
-#: >0 switches to SHARDED mode (round 14): the corpus splits into S
-#: per-shard fixtures with dense LOCAL ids (local = vec_id // S for
-#: vec_id % S == s — so each shard's entry node, strides and bucket
-#: self-scaling work unchanged), each shard gets its OWN materialized
-#: index via the production `write_nsw_index`, every query probes
-#: every shard (scatter-gather), and per-shard top-k merge by
-#: (cosine, global id). This measures the `graph_ann_sharded`
-#: deployment shape at the scale where the FLAT graph's recall was
-#: measured collapsing (200k: 0.644 even at rule width B=1014).
+#: >0 switches to SHARDED mode (round 14): one S-shard index over the
+#: corpus (`write_nsw_index(n_shards=S)`: shard = vec_id % S, each
+#: shard its own graph with entry node s, strides +/- S x 2^j and
+#: bucket bits self-scaled to the shard size), probed with
+#: `probe_nsw_index(n_shards=S)` — every query searches every shard in
+#: one hop loop and the per-shard results merge by one global top-k
+#: (scatter-gather). This measures the `graph_ann_sharded` deployment
+#: shape at the scale where the FLAT graph's recall was measured
+#: collapsing (200k: 0.644 even at rule width B=1014).
 N_SHARDS = int(os.environ.get("NSW_CLUSTERED_SHARDS", "0"))
-
-#: probe query_ids are shifted out of the local-id range so the
-#: probe's `node != query_id` self-exclusion can never alias a
-#: shard-local node id (the real self-hit is dropped post-merge on
-#: GLOBAL ids)
-_Q_SHIFT = 1_000_000_000
-
-#: 1 = probe all shards CONCURRENTLY (one thread per shard on the one
-#: SparkSession — Spark schedules concurrent jobs; the hop-planning
-#: conf guard depth-counts per JVM session under a lock, so
-#: overlapping probes nest instead of clobbering). Measures the
-#: scatter-gather parallelism claim instead of asserting it: the
-#: sequential mode's probe wall is S x per-probe; concurrent should
-#: approach max(per-probe) + scheduler contention.
-CONCURRENT = os.environ.get("NSW_CLUSTERED_CONCURRENT") == "1"
 
 
 def synth_clustered(out_dir: str) -> str:
@@ -205,13 +190,14 @@ def exact_topk(sf_dir: str) -> dict[int, set[int]]:
     return truth
 
 
-def synth_shard_dirs(sf_dir: str, out_root: str, s_count: int) -> list[str]:
-    """Split the clustered fixture into S per-shard dirs with dense
-    local ids. Premise check, sharded form: two locals in shard s are
-    same-cluster iff they are congruent mod N_CLUSTERS/gcd(S,
-    N_CLUSTERS), so a local stride 2^j shortcuts within-cluster iff
-    that period divides it — reject knob combinations where it does
-    (and S sharing all of N_CLUSTERS' structure, period <= 1)."""
+def check_shard_premise(s_count: int) -> None:
+    """The fixture premise, sharded form: two vectors in one shard are
+    same-cluster iff their ids differ by a multiple of N_CLUSTERS, and
+    a shard's long links stride by S x 2^j, so a stride shortcuts
+    within-cluster iff the within-shard cluster period
+    N_CLUSTERS/gcd(S, N_CLUSTERS) divides 2^j — reject knob
+    combinations where it does (and S sharing all of N_CLUSTERS'
+    structure, period <= 1)."""
     import math
 
     from realtime_event_streaming_spark.operators.similarity import (
@@ -222,48 +208,22 @@ def synth_shard_dirs(sf_dir: str, out_root: str, s_count: int) -> list[str]:
     if period <= 1 or any(st % period == 0 for st in _NSW_STEPS):
         raise ValueError(
             f"shard count {s_count} breaks the fixture premise: the "
-            f"within-shard cluster period is {period} and a local "
+            f"within-shard cluster period is {period} and a "
             "long-link stride can shortcut within-cluster"
         )
-    # shard splits inherit the BASE fixture's param stamp (+ shard
-    # count): a base regenerated under different knobs must not be
-    # silently merged against stale shard files — the same
-    # wrong-numbers-no-warning class the base stamp guards against
-    with open(os.path.join(sf_dir, "params.json")) as fh:
-        params = json.load(fh)
-    params["n_shards"] = s_count
-    stamp = os.path.join(out_root, "params.json")
-    fresh = False
-    if os.path.isdir(out_root) and os.path.exists(stamp):
-        with open(stamp) as fh:
-            fresh = json.load(fh) == params
-    if not fresh and os.path.isdir(out_root):
-        import shutil
 
-        shutil.rmtree(out_root)
-    os.makedirs(out_root, exist_ok=True)
-    dirs = []
-    with duckdb.connect() as con:
-        for s in range(s_count):
-            d = os.path.join(out_root, f"shard{s}")
-            os.makedirs(d, exist_ok=True)
-            p = os.path.join(d, "embeddings.parquet")
-            if not os.path.exists(p):
-                con.sql(
-                    f"COPY (SELECT vec_id // {s_count} AS vec_id, embedding,"
-                    f" label FROM read_parquet('{sf_dir}/embeddings.parquet')"
-                    f" WHERE vec_id % {s_count} = {s} ORDER BY vec_id)"
-                    f" TO '{p}' (FORMAT PARQUET)"
-                )
-            dirs.append(d)
-    with open(stamp, "w") as fh:
-        json.dump(params, fh)
-    return dirs
+
+def mean_recall(got: dict[int, set[int]], truth: dict[int, set[int]]) -> float:
+    return round(
+        sum(len(got.get(q, set()) & truth[q]) / TOPK for q in truth)
+        / len(truth),
+        3,
+    )
 
 
 def run_sharded(spark, sf_dir: str, truth: dict[int, set[int]]) -> None:
-    """S per-shard production indexes, scatter-gather probe, global
-    top-k merge — recall + wall per beam width. Beam arms: the
+    """One S-shard production index, scatter-gather probe, global top-k
+    merge — recall + wall per per-shard beam width. Beam arms: the
     contract width (cheap reference), the FLAT rule width split
     budget-fairly across shards (same total evaluation budget as the
     recorded flat-graph 100x measurement), and the rule applied
@@ -279,66 +239,38 @@ def run_sharded(spark, sf_dir: str, truth: dict[int, set[int]]) -> None:
     if M_OVERRIDE is not None:
         similarity._NSW_M = M_OVERRIDE
 
-    shard_root = f"{CLUSTERED_DIR}_shards{N_SHARDS}"
-    dirs = synth_shard_dirs(sf_dir, shard_root, N_SHARDS)
+    check_shard_premise(N_SHARDS)
     vecs = _vectors(spark, sf_dir)
     qs = vecs.where(F.col("vec_id") < N_Q).select(
-        (F.col("vec_id") + _Q_SHIFT).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("norm").alias("qnorm"),
     )
     flat_rule = nsw_beam_width_for(N_VECS)
-    shard_rule = nsw_beam_width_for(N_VECS // N_SHARDS)
+    shard_rule = nsw_beam_width_for(N_VECS, n_shards=N_SHARDS)
     beams = BEAMS_OVERRIDE or sorted(
         {64, max(1, flat_rule // N_SHARDS), shard_rule}
     )
     with tempfile.TemporaryDirectory() as tmp:
+        idx = os.path.join(tmp, "nsw")
         t0 = time.perf_counter()
-        idxs = []
-        for s, d in enumerate(dirs):
-            idx = os.path.join(tmp, f"nsw{s}")
-            write_nsw_index(spark, d, idx)
-            idxs.append(idx)
+        write_nsw_index(spark, sf_dir, idx, n_shards=N_SHARDS)
         build_sec = round(time.perf_counter() - t0, 1)
         recalls: dict[str, float] = {}
         walls: dict[str, float] = {}
         for b in beams:
-            got: dict[int, list[tuple[float, int]]] = {}
-
-            def _probe_one(s_idx):
-                s, idx = s_idx
-                return s, probe_nsw_index(
-                    spark, idx, None, qs, beam_width=b
-                ).collect()
-
+            got: dict[int, set[int]] = {}
             t0 = time.perf_counter()
-            if CONCURRENT:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=N_SHARDS) as ex:
-                    shard_rows = list(
-                        ex.map(_probe_one, enumerate(idxs))
-                    )
-            else:
-                shard_rows = [_probe_one(si) for si in enumerate(idxs)]
-            for s, rows in shard_rows:
-                for r in rows:
-                    q = r.query_id - _Q_SHIFT
-                    g = r.neighbor_id * N_SHARDS + s
-                    if g == q:
-                        continue
-                    got.setdefault(q, []).append((-r.cosine, g))
+            for r in probe_nsw_index(
+                spark, idx, None, qs, beam_width=b, n_shards=N_SHARDS
+            ).collect():
+                got.setdefault(r.query_id, set()).add(r.neighbor_id)
             walls[str(b)] = round(time.perf_counter() - t0, 1)
-            rec = 0.0
-            for q in truth:
-                top = {g for _, g in sorted(got.get(q, []))[:TOPK]}
-                rec += len(top & truth[q]) / TOPK
-            recalls[str(b)] = round(rec / len(truth), 3)
+            recalls[str(b)] = mean_recall(got, truth)
     print(
         json.dumps(
             {
                 "fixture": "clustered-sharded",
-                "concurrent_probes": CONCURRENT,
                 "n_vecs": N_VECS,
                 "n_clusters": N_CLUSTERS,
                 "n_shards": N_SHARDS,
@@ -389,14 +321,7 @@ def main() -> None:
                 spark, idx, None, qs, beam_width=b
             ).collect():
                 got.setdefault(r.query_id, set()).add(r.neighbor_id)
-            recalls[str(b)] = round(
-                sum(
-                    len(got.get(q, set()) & truth[q]) / TOPK
-                    for q in truth
-                )
-                / len(truth),
-                3,
-            )
+            recalls[str(b)] = mean_recall(got, truth)
     print(
         json.dumps(
             {

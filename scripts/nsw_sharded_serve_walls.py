@@ -8,9 +8,9 @@ once) and the per-hop frames are serving-batch bounded either way.
 Budget-fair arms (equal total evaluation budget, queries x 64):
   flat   : write_nsw_index over the first n/S vectors of $SF_DIR,
            probe_nsw_index at the contract width B=64
-  sharded: write_nsw_sharded_index over ALL of $SF_DIR (S=4 shards of
-           n/S vectors each), probe_nsw_sharded_index at the contract
-           per-shard width B_s=16 (4 x 16 = 64)
+  sharded: write_nsw_index(n_shards=4) over ALL of $SF_DIR (S=4
+           shards of n/S vectors each), probe_nsw_index(n_shards=4)
+           at the contract per-shard width B_s=16 (4 x 16 = 64)
 
 Prints per-arm build and median-of-N probe walls plus the host's
 steal-jiffies rate around each probe (the repo's calm bar is <= 10
@@ -39,9 +39,7 @@ from realtime_event_streaming_spark.operators.similarity import (
     _NSW_SHARDS,
     _vectors,
     probe_nsw_index,
-    probe_nsw_sharded_index,
     write_nsw_index,
-    write_nsw_sharded_index,
 )
 from realtime_event_streaming_spark.session import get_spark
 
@@ -104,7 +102,9 @@ def main() -> None:
 
         shard_path = os.path.join(tmp, "sharded_index")
         t0 = time.time()
-        write_nsw_sharded_index(spark, SF_DIR, shard_path, bucket_bits=LSH_BITS)
+        write_nsw_index(
+            spark, SF_DIR, shard_path, bucket_bits=LSH_BITS, n_shards=_NSW_SHARDS
+        )
         shard_build = time.time() - t0
 
         fq = _qs(spark, flat_dir)
@@ -113,7 +113,9 @@ def main() -> None:
             lambda: probe_nsw_index(spark, flat_path, None, fq)
         )
         shard_med, shard_walls, shard_steals = _timed(
-            lambda: probe_nsw_sharded_index(spark, shard_path, sq)
+            lambda: probe_nsw_index(
+                spark, shard_path, None, sq, n_shards=_NSW_SHARDS
+            )
         )
         print(
             f"corpus {n_total} vectors, {_NSW_SHARDS} shards of {n_shard}; "

@@ -13,6 +13,7 @@ never the answer.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from realtime_event_streaming_spark.io import load_table
 from realtime_event_streaming_spark.operators.similarity import (
@@ -300,11 +301,12 @@ def test_nsw_merge_keeps_prior_merge_edges_and_is_store_consistent(
     assert b1_edges > 0
 
 
-def test_nsw_store_probe_matches_inmemory(spark, tmp_path):
+@pytest.mark.parametrize("n_shards", [1, 4])
+def test_nsw_store_probe_matches_inmemory(spark, tmp_path, n_shards):
     """probe_nsw_index(vecs=None) serves from the index's OWN
     pt-partitioned vector store and must return exactly the in-memory
     path's answer — materialization changes WHERE the lookup happens,
-    never the result."""
+    never the result — for the flat graph and the sharded one."""
     from realtime_event_streaming_spark.operators.similarity import (
         LSH_BITS,
         _vectors,
@@ -313,7 +315,7 @@ def test_nsw_store_probe_matches_inmemory(spark, tmp_path):
     )
 
     path = str(tmp_path / "nsw_store")
-    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS)
+    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS, n_shards=n_shards)
     vecs = _vectors(spark, SF)
     qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -321,9 +323,9 @@ def test_nsw_store_probe_matches_inmemory(spark, tmp_path):
         F.col("norm").alias("qnorm"),
     )
     mem = probe_nsw_index(
-        spark, path, vecs.select("vec_id", "v", "norm"), qs
+        spark, path, vecs.select("vec_id", "v", "norm"), qs, n_shards=n_shards
     )
-    srv = probe_nsw_index(spark, path, None, qs)
+    srv = probe_nsw_index(spark, path, None, qs, n_shards=n_shards)
     assert sorted(map(tuple, mem.collect())) == sorted(
         map(tuple, srv.collect())
     )
@@ -405,7 +407,8 @@ def _executed_file_scans(df):
     return out
 
 
-def test_nsw_store_probe_partitions_read_runtime(spark, tmp_path):
+@pytest.mark.parametrize("n_shards", [1, 4])
+def test_nsw_store_probe_partitions_read_runtime(spark, tmp_path, n_shards):
     """The serving hop's scale contract MEASURED, not just plan-pinned
     (round-12 ADVICE): in the real probe each hop's candidates are
     checkpointed-RDD-derived — a shape the PartitionPruning rule
@@ -416,7 +419,8 @@ def test_nsw_store_probe_partitions_read_runtime(spark, tmp_path):
     read only the pt partitions its candidates land in, never the
     corpus. A silent DPP loss in the executed shape (metric ==
     _NSW_PARTS) fails here even if the helper plans still carry the
-    dynamicpruning subquery."""
+    dynamicpruning subquery. Checked on the flat and the sharded
+    index (one pt-only layout for every shard count)."""
     from realtime_event_streaming_spark.operators.similarity import (
         LSH_BITS,
         _NSW_PARTS,
@@ -427,7 +431,7 @@ def test_nsw_store_probe_partitions_read_runtime(spark, tmp_path):
     )
 
     path = str(tmp_path / "nsw_runtime_dpp")
-    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS)
+    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS, n_shards=n_shards)
     store = spark.read.parquet(f"{path}/vecs").select(
         F.col("vec_id").alias("node_id"),
         F.col("v").alias("nv"),
@@ -758,7 +762,8 @@ def test_fast_hop_planning_shared_across_wrappers(spark):
             spark.conf.set(_CONSTRAINT_KEY, before_raw)
 
 
-def test_nsw_full_probe_hops_keep_dpp(spark, tmp_path):
+@pytest.mark.parametrize("n_shards", [1, 4])
+def test_nsw_probe_hops_keep_dpp(spark, tmp_path, n_shards):
     """The REAL probe's executed hop plans must keep live dynamic-
     pruning subqueries on both index scans (round-14 regression pin):
     a Window operator anywhere in a DPP filtering side makes Spark
@@ -771,7 +776,8 @@ def test_nsw_full_probe_hops_keep_dpp(spark, tmp_path):
     captures the actual hop DataFrames from a full probe run and
     asserts no executed hop degraded to dynamicpruningexpression(true)
     — and that mid-loop hops (window-derived frontiers, the shape
-    that regressed) carry a live IN-subquery filter."""
+    that regressed) carry a live IN-subquery filter. The sharded
+    probe's window is keyed by (query_id, shard), the same shape."""
     from pyspark.sql.classic.dataframe import DataFrame as CDataFrame
 
     from realtime_event_streaming_spark.operators.similarity import (
@@ -783,7 +789,7 @@ def test_nsw_full_probe_hops_keep_dpp(spark, tmp_path):
     )
 
     path = str(tmp_path / "nsw_full_dpp")
-    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS)
+    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS, n_shards=n_shards)
     qs = (
         _vectors(spark, SF)
         .where(F.col("vec_id") < N_QUERIES)
@@ -803,10 +809,11 @@ def test_nsw_full_probe_hops_keep_dpp(spark, tmp_path):
 
     CDataFrame.localCheckpoint = capturing
     try:
-        probe_nsw_index(spark, path, None, qs).collect()
+        rows = probe_nsw_index(spark, path, None, qs, n_shards=n_shards).collect()
     finally:
         CDataFrame.localCheckpoint = orig
 
+    assert rows, "probe returned nothing"
     # scored hops join the INDEX's vector store (aliased node_id);
     # neither the qs-panel checkpoint (a FileScan too — the sf
     # embeddings table, so FileScan presence can't discriminate) nor
@@ -829,7 +836,7 @@ def test_nsw_full_probe_hops_keep_dpp(spark, tmp_path):
             live += 1
     # mid-loop (window-frontier) hops must carry live filters, not
     # merely avoid the degraded literal; slack of 1 covers hop 1,
-    # whose frontier is the literal entry node
+    # whose frontier is the literal entry node(s)
     assert live >= len(hop_plans) - 1, (live, len(hop_plans))
 
 
@@ -877,90 +884,28 @@ def test_ivf_probe_partitions_read_runtime(spark, tmp_path):
         assert m["numPartitions"] < k_cells, m
 
 
-def test_nsw_sharded_probe_hops_keep_dpp(spark, tmp_path):
-    """`test_nsw_full_probe_hops_keep_dpp` for the SHARDED serving
-    probe (round-14 verdict item 2): the sharded hop loop has the
-    same Window-derived-frontier shape that silently degraded the
-    flat probe's executed DPP, plus a second partition column
-    (shard), so this pins the REAL probe's executed hop plans — no
-    hop degraded to dynamicpruningexpression(true), and the mid-loop
-    hops carry live pruning subqueries on the (shard, pt)-partitioned
-    scans."""
-    from pyspark.sql.classic.dataframe import DataFrame as CDataFrame
-
-    from realtime_event_streaming_spark.operators.similarity import (
-        LSH_BITS,
-        _vectors,
-        probe_nsw_sharded_index,
-        write_nsw_sharded_index,
-    )
-
-    path = str(tmp_path / "nsw_sharded_dpp")
-    write_nsw_sharded_index(spark, SF, path, bucket_bits=LSH_BITS)
-    qs = (
-        _vectors(spark, SF)
-        .where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("norm").alias("qnorm"),
-        )
-    )
-
-    captured = []
-    orig = CDataFrame.localCheckpoint
-
-    def capturing(self, *args, **kwargs):
-        captured.append(self)
-        return orig(self, *args, **kwargs)
-
-    CDataFrame.localCheckpoint = capturing
-    try:
-        rows = probe_nsw_sharded_index(spark, path, qs).collect()
-    finally:
-        CDataFrame.localCheckpoint = orig
-
-    assert rows, "probe returned nothing"
-    # scored hops join the index's vector store (aliased node_id);
-    # same discrimination logic as the flat pin
-    hop_plans = []
-    for df in captured:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "node_id#" in plan:
-            hop_plans.append(plan)
-    assert len(hop_plans) >= 4, "expected the H scored hops captured"
-    live = 0
-    for plan in hop_plans:
-        assert "dynamicpruningexpression(true)" not in plan, plan[:3000]
-        if "dynamicpruningexpression(" in plan:
-            live += 1
-    # mid-loop (window-frontier) hops must carry live filters; slack
-    # of 1 covers hop 1, whose frontier is the literal entry nodes
-    assert live >= len(hop_plans) - 1, (live, len(hop_plans))
-
-
 def test_nsw_sharded_probe_finds_self_and_matches_default_width(
     spark, tmp_path
 ):
-    """Serving-twin sanity on the materialized sharded index: (a)
-    every query gets a full self-excluded top-k with contiguous ranks
-    (the store lookup, shard routing and merge are consistent — the
-    probe filters self-matches like the flat `probe_nsw_index`), (b)
-    an explicit beam_width equal to the default produces identical
-    results (the width plumbing is a no-op at the contract point),
-    and (c) the per-shard-rule string resolves without error at
-    contract scale (where the rule floors to the flat contract
-    width)."""
+    """Serving sanity on the materialized sharded index: (a) every
+    query gets a full self-excluded top-k with contiguous ranks (the
+    store lookup, shard routing and merge are consistent — the probe
+    filters self-matches as the flat probe does), (b) an explicit
+    beam_width equal to the default produces identical results (the
+    width plumbing is a no-op at the contract point), and (c) the
+    per-shard-rule string resolves without error at contract scale
+    (where the rule floors to the flat contract width)."""
     from realtime_event_streaming_spark.operators.similarity import (
         LSH_BITS,
         _NSW_SHARD_B,
+        _NSW_SHARDS,
         _vectors,
-        probe_nsw_sharded_index,
-        write_nsw_sharded_index,
+        probe_nsw_index,
+        write_nsw_index,
     )
 
     path = str(tmp_path / "nsw_sharded_probe")
-    write_nsw_sharded_index(spark, SF, path, bucket_bits=LSH_BITS)
+    write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS, n_shards=_NSW_SHARDS)
     qs = (
         _vectors(spark, SF)
         .where(F.col("vec_id") < N_QUERIES)
@@ -970,7 +915,13 @@ def test_nsw_sharded_probe_finds_self_and_matches_default_width(
             F.col("norm").alias("qnorm"),
         )
     )
-    res = probe_nsw_sharded_index(spark, path, qs).collect()
+
+    def probe(**kw):
+        return probe_nsw_index(
+            spark, path, None, qs, n_shards=_NSW_SHARDS, **kw
+        ).collect()
+
+    res = probe()
     by_q = {}
     for r in res:
         by_q.setdefault(r.query_id, []).append(r)
@@ -980,11 +931,60 @@ def test_nsw_sharded_probe_finds_self_and_matches_default_width(
             qid, rws,
         )
         assert all(r.neighbor_id != qid for r in rws), (qid, rws)
-    again = probe_nsw_sharded_index(
-        spark, path, qs, beam_width=_NSW_SHARD_B
-    ).collect()
+    again = probe(beam_width=_NSW_SHARD_B)
     assert sorted(map(tuple, res)) == sorted(map(tuple, again))
-    ruled = probe_nsw_sharded_index(
-        spark, path, qs, beam_width="per-shard-rule"
-    ).collect()
+    ruled = probe(beam_width="per-shard-rule")
     assert ruled and len({r.query_id for r in ruled}) == N_QUERIES
+
+
+def _probe_jobs(spark, group: str, probe) -> int:
+    """Spark jobs one call of ``probe`` launches, construction and
+    collect together (the serving probe stages its hops while it is
+    built), counted by job group from the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert probe().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_nsw_sharded_probe_launches_no_more_jobs(spark, tmp_path):
+    """All shards advance in one hop loop, so the sharded serving
+    probe must launch no more Spark jobs than the one-shard probe on
+    the same fixture: the entry frontier is a generator over the
+    shard ids (not a join against a broadcast range) and the merge is
+    one window (the visited sets are disjoint, no dedup)."""
+    from realtime_event_streaming_spark.operators.similarity import (
+        LSH_BITS,
+        _NSW_SHARDS,
+        _vectors,
+        probe_nsw_index,
+        write_nsw_index,
+    )
+
+    qs = (
+        _vectors(spark, SF)
+        .where(F.col("vec_id") < N_QUERIES)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("v").alias("qv"),
+            F.col("norm").alias("qnorm"),
+        )
+    )
+    jobs = {}
+    for n_shards in (1, _NSW_SHARDS):
+        path = str(tmp_path / f"nsw_jobs_{n_shards}")
+        write_nsw_index(
+            spark, SF, path, bucket_bits=LSH_BITS, n_shards=n_shards
+        )
+
+        def probe(path=path, n_shards=n_shards):
+            return probe_nsw_index(spark, path, None, qs, n_shards=n_shards)
+
+        probe().collect()  # warm: schema inference of the index tables
+        jobs[n_shards] = _probe_jobs(spark, f"nsw-jobs-{n_shards}", probe)
+    assert jobs[1] > 0
+    assert jobs[_NSW_SHARDS] <= jobs[1], jobs

@@ -13,7 +13,9 @@ from realtime_event_streaming_spark.streaming.corpus_ingest import (
     admission_rollup,
     admit_docs,
     parse_docs,
-    read_doc_stream,
+)
+from realtime_event_streaming_spark.streaming.ingest import (
+    read_json_file_stream,
 )
 
 BASE_MS = 1704067200000  # 2024-01-01T00:00:00Z
@@ -87,7 +89,7 @@ def test_streaming_admission_quality_dedup_and_rollup(spark, tmp_path):
     _write_batches(src, batches)
 
     admitted = _run(
-        admit_docs(parse_docs(read_doc_stream(spark, src))),
+        admit_docs(parse_docs(read_json_file_stream(spark, src))),
         spark,
         "corpus_admitted",
     )
@@ -100,7 +102,7 @@ def test_streaming_admission_quality_dedup_and_rollup(spark, tmp_path):
     assert all(r.n_tokens >= 20 for r in rows.values())
 
     rollup = _run(
-        admission_rollup(admit_docs(parse_docs(read_doc_stream(spark, src)))),
+        admission_rollup(admit_docs(parse_docs(read_json_file_stream(spark, src)))),
         spark,
         "corpus_rollup",
     )

@@ -123,8 +123,8 @@ def test_graph_ann_sharded_meets_recall_floor():
 
 def test_sharded_per_shard_rule_meets_recall_floor(spark):
     """The promoted per-shard rule width (round-14 verdict item 4:
-    `probe_nsw_sharded_index(beam_width="per-shard-rule")`, sizing
-    each shard's beam by `nsw_sharded_beam_width_for` — the flat
+    `probe_nsw_index(beam_width="per-shard-rule", n_shards=S)`, sizing
+    each shard's beam by `nsw_beam_width_for(n, n_shards=S)` — the
     n^0.6 rule on the SHARD size) must hold a high floor at the sweep
     scale. At sf0.1 the per-shard corpora (2000/4 = 500) sit below
     the rule's contract point, so the rule floors to B_s = 64 — a 4x
@@ -143,21 +143,24 @@ def test_sharded_per_shard_rule_meets_recall_floor(spark):
         LSH_BITS,
         N_QUERIES,
         TOPK,
+        _NSW_SHARDS,
         _vectors,
-        nsw_sharded_beam_width_for,
-        probe_nsw_sharded_index,
-        write_nsw_sharded_index,
+        nsw_beam_width_for,
+        probe_nsw_index,
+        write_nsw_index,
     )
 
     import tempfile
 
     path = tempfile.mkdtemp(prefix="shrule_floor_")
     try:
-        write_nsw_sharded_index(spark, SWEEP_SF, path, bucket_bits=LSH_BITS)
+        write_nsw_index(
+            spark, SWEEP_SF, path, bucket_bits=LSH_BITS, n_shards=_NSW_SHARDS
+        )
         n = spark.read.parquet(f"{path}/vecs").count()
         # the rule must floor at the contract width below the contract
         # point — per-shard corpora here are inside the envelope
-        assert nsw_sharded_beam_width_for(n) >= 64
+        assert nsw_beam_width_for(n, n_shards=_NSW_SHARDS) >= 64
         qs = (
             _vectors(spark, SWEEP_SF)
             .where(F.col("vec_id") < N_QUERIES)
@@ -167,8 +170,13 @@ def test_sharded_per_shard_rule_meets_recall_floor(spark):
                 F.col("norm").alias("qnorm"),
             )
         )
-        rows = probe_nsw_sharded_index(
-            spark, path, qs, beam_width="per-shard-rule"
+        rows = probe_nsw_index(
+            spark,
+            path,
+            None,
+            qs,
+            beam_width="per-shard-rule",
+            n_shards=_NSW_SHARDS,
         ).collect()
     finally:
         import shutil

@@ -13,7 +13,9 @@ rename, is Hadoop's own code.
 ``local_fs_confs`` compiles the classes against the Hadoop jar PySpark
 ships (once, about 2 s) and caches the jar under
 ``${XDG_CACHE_HOME:-~/.cache}/rtes-spark/``, keyed by a hash of the
-sources and the Hadoop jar's name.
+sources and the Hadoop jar's name. ``install`` puts files into that
+cache and removes the files of earlier keys; the driver's class-data
+archive (``jvm_archive``) is cached the same way.
 """
 
 from __future__ import annotations
@@ -26,7 +28,9 @@ import re
 import shutil
 import subprocess
 import tempfile
+import time
 import zipfile
+from typing import Callable
 
 import pyspark
 
@@ -35,10 +39,16 @@ log = logging.getLogger(__name__)
 JAVA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 FILE_SYSTEM = "rtes.fs.NioLocalFileSystem"
 ABSTRACT_FILE_SYSTEM = "rtes.fs.NioLocalFs"
-_CLASS_PATH_KEY = "spark.driver.extraClassPath"
+CLASS_PATH_KEY = "spark.driver.extraClassPath"
+#: Suffix of a cache file that is still being written, or whose writer
+#: died: ``<kind>-<key>.<unique>.part``.
+PART_SUFFIX = ".part"
+#: A partial file that is not whole and has not been written for this
+#: long is left over from a writer that died.
+STALE_S = 600.0
 
 
-def _spark_home() -> str:
+def spark_home() -> str:
     return os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
 
 
@@ -49,17 +59,67 @@ def _javac() -> str | None:
     return shutil.which("javac")
 
 
-def _cache_dir() -> str:
+def conf_dir() -> str:
+    """The directory the Spark launcher reads its configuration from."""
+    return os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home(), "conf")
+
+
+def cache_dir() -> str:
     base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache"
     )
     return os.path.join(base, "rtes-spark")
 
 
+def install(
+    dest: str,
+    part: str | None = None,
+    whole: Callable[[str], bool] = lambda path: True,
+) -> bool:
+    """Make ``dest`` the cache's one file of its kind; return whether
+    ``dest`` exists afterwards.
+
+    Cache files are named ``<kind>-<key><ext>``. ``part``, when given,
+    is moved to ``dest`` first. Then, for every other file of the kind
+    in ``dest``'s directory:
+
+    - a partial file of ``dest``'s key that ``whole`` accepts becomes
+      ``dest`` if there is none yet;
+    - a partial file that ``whole`` rejects stays while it is fresh,
+      since its writer may still be running;
+    - every other file goes: earlier keys' files, surplus whole partial
+      files and stale partial files.
+
+    Files move with ``os.replace``, so a reader sees either no ``dest``
+    or a whole one. Another process may move or remove a file first;
+    that race is harmless and ignored.
+    """
+    cache, name = os.path.split(dest)
+    kind = name.split("-", 1)[0] + "-"
+    stem = name.split(".", 1)[0] + "."
+    if part is not None:
+        os.replace(part, dest)
+    now = time.time()
+    for entry in os.scandir(cache):
+        if not entry.name.startswith(kind) or entry.path == dest:
+            continue
+        try:
+            if entry.name.endswith(PART_SUFFIX):
+                if whole(entry.path):
+                    if entry.name.startswith(stem) and not os.path.exists(dest):
+                        os.replace(entry.path, dest)
+                        continue
+                elif now - entry.stat().st_mtime < STALE_S:
+                    continue
+            os.remove(entry.path)
+        except OSError:
+            pass
+    return os.path.exists(dest)
+
+
 def _compile(javac: str, hadoop_jar: str, sources: list[str], jar: str) -> None:
-    """Compile ``sources`` into ``jar``. The jar is written next to its
-    final name and moved there with ``os.replace``, so a concurrent
-    process sees either no jar or a whole one."""
+    """Compile ``sources`` into ``jar``, written beside it and moved
+    into place by ``install``."""
     cache = os.path.dirname(jar)
     os.makedirs(cache, exist_ok=True)
     with tempfile.TemporaryDirectory(dir=cache) as tmp:
@@ -75,7 +135,7 @@ def _compile(javac: str, hadoop_jar: str, sources: list[str], jar: str) -> None:
                 for name in sorted(files):
                     path = os.path.join(root, name)
                     zf.write(path, os.path.relpath(path, classes))
-        os.replace(part, jar)
+        install(jar, part)
 
 
 def local_fs_jar() -> str | None:
@@ -83,7 +143,7 @@ def local_fs_jar() -> str | None:
     None when there is no ``javac`` or no Hadoop jar to compile against."""
     javac = _javac()
     hadoop = glob.glob(
-        os.path.join(_spark_home(), "jars", "hadoop-client-api-*.jar")
+        os.path.join(spark_home(), "jars", "hadoop-client-api-*.jar")
     )
     if javac is None or not hadoop:
         return None
@@ -93,7 +153,7 @@ def local_fs_jar() -> str | None:
     for src in sources:
         with open(src, "rb") as fh:
             key.update(fh.read())
-    jar = os.path.join(_cache_dir(), f"localfs-{key.hexdigest()[:16]}.jar")
+    jar = os.path.join(cache_dir(), f"localfs-{key.hexdigest()[:16]}.jar")
     if not os.path.exists(jar):
         _compile(javac, hadoop_jar, sources, jar)
     return jar
@@ -102,17 +162,14 @@ def local_fs_jar() -> str | None:
 def _defaults_class_path() -> str | None:
     """``spark.driver.extraClassPath`` from spark-defaults.conf, which a
     ``--conf`` on the launch command would otherwise replace."""
-    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(
-        _spark_home(), "conf"
-    )
     try:
-        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+        with open(os.path.join(conf_dir(), "spark-defaults.conf")) as fh:
             lines = fh.read().splitlines()
     except OSError:
         return None
     for line in lines:
         m = re.match(r"([^\s=:]+)[\s=:]+(.+)", line.strip())
-        if m and m.group(1) == _CLASS_PATH_KEY:
+        if m and m.group(1) == CLASS_PATH_KEY:
             return m.group(2).strip()
     return None
 
@@ -133,7 +190,7 @@ def local_fs_confs() -> dict[str, str]:
         return {}
     class_path = os.pathsep.join(filter(None, [_defaults_class_path(), jar]))
     return {
-        _CLASS_PATH_KEY: class_path,
+        CLASS_PATH_KEY: class_path,
         "spark.hadoop.fs.file.impl": FILE_SYSTEM,
         "spark.hadoop.fs.AbstractFileSystem.file.impl": ABSTRACT_FILE_SYSTEM,
     }

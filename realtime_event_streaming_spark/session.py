@@ -21,6 +21,14 @@ Design notes (100 TB posture):
   ``javac`` the stock filesystem stays. It applies to local paths only
   (HDFS/object stores are untouched), and cluster sessions bypass
   ``get_spark`` and so keep whatever their deployment configures.
+- The driver JVM that ``get_spark`` launches maps a class-data-sharing
+  archive of the classes a session loads (``jvm_archive``), which
+  halves the JVM's start. The first launch on an empty cache writes it
+  when its JVM exits, into the same cache as the filesystem jar. It is
+  used only when the conf dir holds nothing but ``*.template`` files
+  and no environment variable adds class path entries or CDS options;
+  a JVM that dies at start with the archive is relaunched without it
+  and the archive deleted.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from contextlib import contextmanager
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from .jvm_archive import launch
 from .localfs import local_fs_confs
 
 log = logging.getLogger(__name__)
@@ -142,20 +151,25 @@ def get_spark(app_name: str = "realtime-event-streaming-spark") -> SparkSession:
     on a real cluster the builder master/conf come from spark-submit and
     this factory is bypassed entirely.
 
-    The local filesystem confs are launch-time confs, so they are added
-    only when this call starts the JVM; a JVM already running keeps the
-    filesystem it was launched with.
+    The local filesystem confs and the class-data archive are launch-time
+    settings, so they are added only when this call starts the JVM; a
+    JVM already running keeps the ones it was launched with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.python.sql.dataFrameDebugging.enabled", _DF_DEBUGGING)
-    )
-    if SparkContext._gateway is None:
-        builder = builder.config(map=local_fs_confs())
-    return prepare(builder.getOrCreate())
+
+    def start(launch_confs: dict[str, str]) -> SparkSession:
+        return (
+            SparkSession.builder.appName(app_name)
+            .master(f"local[{cpus}]")
+            .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.files.maxPartitionBytes", "134217728")
+            .config("spark.python.sql.dataFrameDebugging.enabled", _DF_DEBUGGING)
+            .config(map=launch_confs)
+            .getOrCreate()
+        )
+
+    if SparkContext._gateway is not None:
+        return prepare(start({}))
+    return prepare(launch(start, local_fs_confs()))

@@ -3,7 +3,10 @@
 formula: wire JSON produced in real time at ~100 events/s, tailed by
 the file-source stand-in for the Kafka reader, parsed and written to
 the raw sink with `created_at`; latency = created_at - ts (the
-reference's metrics_queries.sql:16). Reported: avg / P95 / max.
+reference's metrics_queries.sql:16). Reported: avg / P95 / max, the
+time `get_spark` took to start the session, and the raw query's
+median time per micro-batch phase (`deploy.query_metrics`, batches
+that read input).
 
 Usage: python scripts/live_latency.py [duration_sec] [rate_per_sec]
 """
@@ -12,6 +15,7 @@ from __future__ import annotations
 
 import json
 import shutil
+import statistics
 import sys
 import tempfile
 import threading
@@ -24,6 +28,10 @@ sys.path.insert(0, ".")
 import pyspark.sql.functions as F  # noqa: E402
 
 from realtime_event_streaming_spark.session import get_spark  # noqa: E402
+from realtime_event_streaming_spark.streaming.deploy import (  # noqa: E402
+    PHASES,
+    query_metrics,
+)
 from realtime_event_streaming_spark.streaming.ingest import (  # noqa: E402
     parse_clicks,
     read_json_file_stream,
@@ -63,8 +71,10 @@ def main():
     src, sink, ckpt = work / "src", work / "raw", work / "ckpt"
     src.mkdir()
 
+    t_session = time.perf_counter()
     spark = get_spark("live-latency")
     spark.sparkContext.setLogLevel("ERROR")
+    start_s = time.perf_counter() - t_session
 
     def steal_jiffies():
         try:
@@ -89,6 +99,7 @@ def main():
     prod.join()
     # drain the tail: wait until two consecutive idle triggers
     time.sleep(6)
+    batches = [b for b in query_metrics(q) if b["input_rows"]]
     q.stop()
     stop.set()
 
@@ -110,9 +121,15 @@ def main():
     s1, elapsed = steal_jiffies(), time.monotonic() - t0
     steal = None if s0 is None or s1 is None else s1 - s0
     steal_rate = None if steal is None else round(steal / elapsed, 1)
+    phases = " ".join(
+        f"{name}_ms={statistics.median(vals):.0f}"
+        for name in PHASES
+        if (vals := [b[f"{name}_ms"] for b in batches if b[f"{name}_ms"] is not None])
+    )
     print(
         f"events={stats.n} rate={rate}/s duration={duration}s "
         f"avg={stats.avg:.2f}s p95={stats.p95:.2f}s max={stats.mx:.2f}s "
+        f"start_s={start_s:.2f} batches={len(batches)} {phases} "
         f"steal_jiffies={steal} steal_per_sec={steal_rate}"
     )
     shutil.rmtree(work, ignore_errors=True)

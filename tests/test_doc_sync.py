@@ -14,6 +14,9 @@ from pathlib import Path
 from realtime_event_streaming_spark.registry import load_all
 
 ROOT = Path(__file__).resolve().parent.parent
+#: Documents whose `` `<file>.py::<name>` `` references must resolve.
+REFERENCING_DOCS = ("README.md", "COVERAGE.md", "PERF.md", "dashboards/*/README.md",
+                    ".claude/skills/verify/SKILL.md")
 
 
 def test_registry_count_matches_docs():
@@ -58,3 +61,23 @@ def test_oracle_coverage_is_total():
     # an oracle-less query requires updating this list — i.e. an
     # explicit decision, not an accident.
     assert no_oracle == [], no_oracle
+
+
+def test_doc_code_references_resolve():
+    """Every `` `<file>.py::<name>` `` in the docs names a ``def`` or
+    ``class`` in a repo file whose path ends with ``<file>.py``."""
+    sources = [p for p in ROOT.rglob("*.py") if ".git" not in p.parts]
+    refs, bad = 0, []
+    for doc in sorted({p for pat in REFERENCING_DOCS for p in ROOT.glob(pat)}):
+        text = doc.read_text()
+        for m in re.finditer(r"`([^`\s]+\.py)::\s*([A-Za-z_]\w*)`", text):
+            refs += 1
+            path, name = m.groups()
+            defined = re.compile(rf"^\s*(?:async\s+)?(?:def|class)\s+{name}\b", re.M)
+            if not any(
+                str(src).endswith("/" + path) and defined.search(src.read_text())
+                for src in sources
+            ):
+                bad.append(f"{doc.relative_to(ROOT)}: {path}::{name}")
+    assert refs, "no code references found; did the pattern break?"
+    assert bad == [], bad

@@ -218,3 +218,60 @@ def test_jar_is_compiled_once_then_reused(monkeypatch, tmp_path):
     assert confs["spark.driver.extraClassPath"].split(os.pathsep)[-1] == jar
     assert confs["spark.hadoop.fs.file.impl"] == localfs.FILE_SYSTEM
     assert os.listdir(tmp_path / "rtes-spark") == [os.path.basename(jar)]
+
+
+def _aged(path, seconds):
+    t = path.stat().st_mtime - seconds
+    os.utime(path, (t, t))
+    return path
+
+
+def test_install_replaces_earlier_keys_of_its_kind_only(tmp_path):
+    old = tmp_path / "localfs-0000000000000000.jar"
+    old.write_bytes(b"old")
+    other = tmp_path / "driver-0000000000000000.jsa"
+    other.write_bytes(b"other kind")
+    (tmp_path / "empty-conf").mkdir()
+    built = tmp_path / "tmp" / "part.jar"
+    built.parent.mkdir()
+    built.write_bytes(b"new")
+    jar = tmp_path / "localfs-1111111111111111.jar"
+
+    assert localfs.install(str(jar), str(built))
+    assert jar.read_bytes() == b"new" and not built.exists()
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [jar.name, other.name, "empty-conf", "tmp"]
+    )
+
+
+def test_install_publishes_only_whole_partials_and_drops_stale_ones(tmp_path):
+    def whole(path):
+        with open(path, "rb") as fh:
+            return fh.read(4) == b"WHOL"
+
+    def part(name, data):
+        path = tmp_path / f"{name}{localfs.PART_SUFFIX}"
+        path.write_bytes(data)
+        return path
+
+    dest = tmp_path / "driver-aaaa.jsa"
+    writing = part("driver-aaaa.1", b"\0" * 8)
+    _aged(part("driver-aaaa.2", b"\0" * 8), localfs.STALE_S + 60)
+    part("driver-bbbb.3", b"WHOL" + b"\0" * 4)
+    (tmp_path / "driver-bbbb.jsa").write_bytes(b"WHOLold")
+
+    # nothing whole of this key yet: a dump still being written stays,
+    # a dead one and another key's files go
+    assert not localfs.install(str(dest), whole=whole)
+    assert sorted(os.listdir(tmp_path)) == [writing.name]
+
+    # one whole dump of this key is published, the surplus one dropped
+    part("driver-aaaa.4", b"WHOL" + b"\0" * 4)
+    part("driver-aaaa.5", b"WHOL" + b"\1" * 4)
+    assert localfs.install(str(dest), whole=whole)
+    assert dest.read_bytes()[:4] == b"WHOL"
+    assert sorted(os.listdir(tmp_path)) == sorted([dest.name, writing.name])
+
+    _aged(writing, localfs.STALE_S + 60)
+    assert localfs.install(str(dest), whole=whole)
+    assert os.listdir(tmp_path) == [dest.name]

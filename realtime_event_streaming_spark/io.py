@@ -9,6 +9,12 @@ we truncate to microseconds (``ts div 1000`` — integer division, no
 double round-trip) and expose as TIMESTAMP_NTZ so semantics match the
 DuckDB oracle's naive microsecond timestamps exactly.
 
+``read_index_parquet`` reads the engine's materialized index tables
+with their data columns' schema cached per path, so a probe builds its
+query without a schema-inference job. Partition columns are not
+cached: they come from the directory listing of every read, so a
+rewrite of the path with another layout needs no eviction.
+
 Write side
 ----------
 ``write_events_table`` mirrors the reference's at-rest layout
@@ -28,6 +34,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import prepare
 
@@ -45,12 +52,14 @@ TABLES = (
 )
 
 
-#: Inferred schema per parquet path: schema inference runs a 1-task
-#: Spark job per read; caching it makes every query construction after
-#: the first touch of a table run ZERO jobs (fully lazy plans). Keyed
-#: by (path, mtime) so a fixture rewritten mid-process with a different
-#: schema re-infers instead of silently reading with the stale one; the
-#: getmtime stat is nanoseconds against the 1-task job it replaces.
+#: Inferred schemas: schema inference runs a 1-task Spark job per read;
+#: caching it makes every query construction after the first touch of a
+#: table run ZERO jobs (fully lazy plans). ``load_table`` keys a
+#: fixture's whole schema by (path, mtime), so a fixture rewritten
+#: mid-process with a different schema re-infers instead of silently
+#: reading with the stale one; the getmtime stat is nanoseconds against
+#: the 1-task job it replaces. ``read_index_parquet`` keys an index
+#: table's data columns by its bare path.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -63,7 +72,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     try:
         mtime = os.path.getmtime(path)
     except OSError:
-        mtime = None  # directory-style parquet; fall through to infer
+        mtime = None  # non-local URI or missing path: key on the path alone
     key = (path, mtime)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
@@ -80,50 +89,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def read_index_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read a materialized-index parquet dir with a process-cached
-    schema (round-15 optimization; guide §1/§6).
+    """Read a materialized-index parquet dir, its data columns' schema
+    cached per process.
 
     ``spark.read.parquet(dir)`` without a schema runs a footer-reading
     schema-inference JOB on every call — measured 0.2 s per table at
     contract scale on the pt-partitioned index tables (64 footers),
-    paid again on EVERY probe/merge invocation. An index table's
-    schema is fixed by its writer in this package, and data changes
-    (appends, dynamic partition overwrites) never change it, so infer
-    once per (process, path) and read with the explicit schema after:
-    query construction then runs zero inference jobs. Unlike
-    ``load_table``'s fixture cache this is deliberately NOT
-    mtime-keyed — index dirs are process-scoped tempdirs whose writers
-    live in this package, and a partition overwrite does not bump the
-    parent dir's mtime anyway, so an mtime key would silently re-infer
-    on some writes and not others. Only the SCHEMA is cached, never
-    rows: every read still scans the files on disk as they are at
-    execution time."""
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    paid again on EVERY probe/merge invocation. So the first read of a
+    path infers, and later reads pass the cached schema: query
+    construction then runs zero inference jobs.
 
+    Only the DATA columns are cached. The partition columns (``pt``,
+    ``cid``, ``band_idx``, ``hb``) are the table's layout, and Spark
+    rediscovers them from the directory listing it makes on every read
+    anyway, with the same inferred types (a ``bigint`` written
+    partition column reads back ``int`` either way). A writer that
+    rewrites the path with another layout (``write_dedup_index``'s
+    ``bucket_bands``, a user's own ``DataFrameWriter``) therefore needs
+    no eviction: the next read sees the layout on disk. What the cache
+    relies on is that a table's data columns do not depend on writer
+    options (pinned by tests/test_dedup_index.py
+    ::test_index_data_columns_do_not_depend_on_writer_options).
+    ``compact_index_table`` is the one rewrite that can move a column
+    between partition and data, and it drops the path's entry itself.
 
-def evict_index_schema(path: str) -> None:
-    """Drop cached schemas for ``path`` and everything under it.
-
-    Called by every index WRITER that overwrites a table (layout
-    options like ``write_dedup_index(bucket_bands=...)`` can rewrite
-    the same path with a different column set — ± the ``hb`` partition
-    column — which the bare-path cache above would otherwise serve
-    stale, silently flipping probes onto the wrong layout branch).
-    Append-mode maintenance (``merge_*``) preserves the writer-detected
-    layout by construction and does NOT evict: the one inference job
-    per (process, table) stays amortized across maintenance cycles."""
-    prefix = path.rstrip("/") + "/"
-    for key in [
-        k
-        for k in _SCHEMA_CACHE
-        if isinstance(k, str) and (k == path or k.startswith(prefix))
-    ]:
-        del _SCHEMA_CACHE[key]
+    The cache is keyed by the bare path, not ``load_table``'s (path,
+    mtime): a partition overwrite does not bump the parent dir's
+    mtime, so an mtime key would re-infer on some writes and not
+    others. Only a schema is cached, never rows: every read scans the
+    files on disk as they are at execution time."""
+    data_cols = _SCHEMA_CACHE.get(path)
+    if data_cols is not None:
+        return spark.read.schema(data_cols).parquet(path)
+    df = spark.read.parquet(path)
+    relation = df._jdf.queryExecution().analyzed().relation()
+    layout = set(relation.partitionSchema().fieldNames())
+    _SCHEMA_CACHE[path] = StructType(
+        [f for f in df.schema.fields if f.name not in layout]
+    )
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
@@ -456,9 +460,6 @@ def compact_index_table(
     old = root.parent / f".compact_old_{root.name}"
     if not root.exists() and old.exists():
         old.rename(root)
-    # The rewrite can re-shape the table (± partition dirs / column
-    # order), so any schema cached for it must not outlive the swap.
-    evict_index_schema(path)
     files_before = len(list(root.rglob("*.parquet")))
     df = spark.read.parquet(str(root))
     if partition_col is not None:
@@ -477,6 +478,10 @@ def compact_index_table(
     root.rename(old)
     tmp.rename(root)
     shutil.rmtree(old)
+    # ``partition_col`` need not match the table's layout, so the
+    # rewrite can turn a partition column into a data column (or back):
+    # the data columns cached for the path must not outlive the swap.
+    _SCHEMA_CACHE.pop(path, None)
     files_after = len(list(root.rglob("*.parquet")))
     return {"files_before": files_before, "files_after": files_after}
 

@@ -937,9 +937,6 @@ def write_dedup_index(
     Default OFF: a nightly-sized batch saturates every bucket by
     construction (8 bands x batch >> buckets), where this layout
     prunes nothing and only multiplies small files."""
-    from ..io import evict_index_schema
-
-    evict_index_schema(path)  # layout may differ from a prior write here
     docs = load_table(spark, sf_dir, "documents")
     docs.select("doc_id", F.md5("text").alias("h")).write.mode(
         "overwrite"

@@ -1906,11 +1906,8 @@ def write_ivfpq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     touched only for queries x shortlist id-pruned point reads).
     Training pipeline identical (same rounded ops) to `_ivfpq_ranked`,
     so probe output == `pq_rerank_tuned` output, oracle-checkable."""
+    from ..io import load_table
     from .similarity import _train_kmeans, _kmeans_rank
-
-    from ..io import evict_index_schema, load_table
-
-    evict_index_schema(path)  # overwrite may change layout vs cached
 
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(

@@ -895,9 +895,6 @@ def write_ann_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     postings are the corpus re-partitioned by cell (same bytes, better
     layout); cid partition dirs mean a probe's scan prunes to its
     cells' files only."""
-    from ..io import evict_index_schema
-
-    evict_index_schema(path)  # overwrite may change layout vs cached
     vecs = _vectors(spark, sf_dir).select("vec_id", "v", "norm")
     cents, _ = _train_kmeans(vecs.select("vec_id", "v"))
     cells = (
@@ -3649,9 +3646,6 @@ def write_nsw_index(
     partitioned by ``pt`` only, and shard = id % S is a function of
     the id (when S divides ``_NSW_PARTS``, a pt directory holds one
     shard's rows)."""
-    from ..io import evict_index_schema
-
-    evict_index_schema(path)  # overwrite may change layout vs cached
     vecs = _vectors(spark, sf_dir)
     if bucket_bits is None:
         bucket_bits = nsw_bucket_bits_for(math.ceil(vecs.count() / n_shards))

@@ -27,7 +27,7 @@ per executor.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -56,22 +56,19 @@ STATE_SCHEMA = StructType(
 OUTPUT_SCHEMA = ANOMALY_SCHEMA
 
 
-def _score_key(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def welford_fold(
+    key: tuple[Any, ...], ws: WelfordState, frames: Iterable[pd.DataFrame]
+) -> pd.DataFrame:
+    """Score one key's rows of a trigger in ``window_start`` order,
+    folding each into ``ws`` after scoring it; one output row per input
+    row. Shared by both state APIs (``_score_key`` here and
+    ``anomaly_tws.WelfordProcessor``)."""
     page, country = key
-    if state.exists:
-        n, mean, m2 = state.get
-        ws = WelfordState(n=n, mean=mean, m2=m2)
-    else:
-        ws = WelfordState()
     out: dict[str, list] = {f.name: [] for f in OUTPUT_SCHEMA.fields}
     # Arrow delivers a group as CHUNKS (split at maxRecordsPerBatch) in
     # shuffle order; sorting per-chunk would corrupt the running state
     # whenever one key exceeds a chunk. Concatenate, then sort once.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
+    chunks = [pdf for pdf in frames if len(pdf)]
     if chunks:
         whole = pd.concat(chunks, ignore_index=True).sort_values("window_start")
         for row in whole.itertuples(index=False):
@@ -88,8 +85,18 @@ def _score_key(
             out["running_mean"].append(round(ws.mean, 4))
             out["n_observations"].append(prior_n)
             out["reason"].append(reason)
+    return pd.DataFrame(out)
+
+
+def _score_key(
+    key: tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    ws = WelfordState(*state.get) if state.exists else WelfordState()
+    scored = welford_fold(key, ws, pdfs)
     state.update((ws.n, ws.mean, ws.m2))
-    yield pd.DataFrame(out)
+    yield scored
 
 
 def score_rollup_stream(rollup: DataFrame) -> DataFrame:

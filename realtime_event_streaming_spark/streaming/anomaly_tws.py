@@ -11,7 +11,9 @@ init/close lifecycle — and requires the RocksDB state store. Porting
 the Welford scorer exercises the new API's whole surface area while
 the reconciliation test (tests/test_streaming_tws.py) pins both
 implementations to identical output on identical input, so the engine
-can migrate operators to the new model with a proof, not a hope.
+can migrate operators to the new model with a proof, not a hope. The
+two share the scoring fold itself (`anomaly_stream.welford_fold`) and
+differ only in how they read and write the state.
 
 Scale notes: unchanged from the twin — state is three scalars per
 (page, country) key, RocksDB-backed here (the new API's requirement,
@@ -52,62 +54,28 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from ..operators.anomaly import WelfordState
 from ..schemas import ANOMALY_SCHEMA
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("mean", DoubleType()),
-        StructField("m2", DoubleType()),
-    ]
-)
+from .anomaly_stream import STATE_SCHEMA, welford_fold
 
 
 class WelfordProcessor(StatefulProcessor):
     """Typed ValueState port of `anomaly_stream._score_key`."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("welford", _STATE_SCHEMA)
+        self._state = handle.getValueState("welford", STATE_SCHEMA)
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
-        page, country = key
         if self._state.exists():
-            n, mean, m2 = self._state.get()
-            ws = WelfordState(n=n, mean=mean, m2=m2)
+            ws = WelfordState(*self._state.get())
         else:
             ws = WelfordState()
-        out: dict[str, list] = {f.name: [] for f in ANOMALY_SCHEMA.fields}
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True).sort_values(
-                "window_start"
-            )
-            for row in whole.itertuples(index=False):
-                x = float(row.cnt)
-                prior_n = ws.n
-                is_anom, z, reason = ws.score(x)
-                ws.update(x)
-                out["page"].append(page)
-                out["country"].append(country)
-                out["window_start"].append(str(row.window_start))
-                out["cnt"].append(int(row.cnt))
-                out["is_anomaly"].append("true" if is_anom else "false")
-                out["z_score"].append(round(z, 4))
-                out["running_mean"].append(round(ws.mean, 4))
-                out["n_observations"].append(prior_n)
-                out["reason"].append(reason)
+        scored = welford_fold(key, ws, rows)
         self._state.update((ws.n, ws.mean, ws.m2))
-        yield pd.DataFrame(out)
+        yield scored
 
     def close(self) -> None:
         """Protocol hook; no external resources to release."""

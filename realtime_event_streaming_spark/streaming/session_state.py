@@ -75,6 +75,40 @@ def _split_runs(pdf: pd.DataFrame, gap_ms: int) -> list[pd.DataFrame]:
     return [g for _, g in pdf.groupby(run_id, sort=True)]
 
 
+def _fold_runs(
+    user_id, runs: list[pd.DataFrame], prior: tuple | None
+) -> tuple[list[dict], tuple]:
+    """Fold one trigger's gap-separated runs into a user's session.
+
+    ``prior`` is the open session ``(start, end, n, pages)`` from state,
+    or None. It absorbs the first run when that run starts within the
+    gap, and closes otherwise (the arriving input proves the gap). Every
+    run but the last closes. Returns the closed sessions' summaries and
+    the new open session ``(start, end, n, page set)``."""
+    gap_ms = SESSION_GAP_S * 1000
+    emitted: list[dict] = []
+    absorb = None  # (start, n, pages) of the open session merging into run 0
+    if prior is not None:
+        p_start, p_end, p_n, p_pages = prior
+        if int(runs[0]["ts_ms"].min()) - p_end <= gap_ms:
+            absorb = (p_start, p_n, set(p_pages))
+        else:
+            emitted.append(_summary(user_id, p_start, p_end, p_n, len(p_pages)))
+
+    open_sess = None
+    for i, g in enumerate(runs):
+        s, e = int(g["ts_ms"].min()), int(g["ts_ms"].max())
+        cnt = len(g)
+        pg = set(g["page"].astype(str))
+        if i == 0 and absorb is not None:
+            s, cnt, pg = min(s, absorb[0]), cnt + absorb[1], pg | absorb[2]
+        if i < len(runs) - 1:
+            emitted.append(_summary(user_id, s, e, cnt, len(pg)))
+        else:
+            open_sess = (s, e, cnt, pg)
+    return emitted, open_sess
+
+
 def _sessionize_key(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
@@ -94,31 +128,11 @@ def _sessionize_key(
     if not frames:
         return
     runs = _split_runs(pd.concat(frames), gap_ms)
-
-    emitted: list[dict] = []
-    absorb = None  # (start, n, pages) of the open session merging into run 0
-    if state.exists:
-        p_start, p_end, p_n, p_pages = state.get
-        if int(runs[0]["ts_ms"].min()) - p_end <= gap_ms:
-            absorb = (p_start, p_n, set(p_pages))
-        else:
-            # the arriving input itself proves the gap: close it now
-            emitted.append(_summary(user_id, p_start, p_end, p_n, len(p_pages)))
-
-    open_sess = None
-    for i, g in enumerate(runs):
-        s, e = int(g["ts_ms"].min()), int(g["ts_ms"].max())
-        cnt = len(g)
-        pg = set(g["page"].astype(str))
-        if i == 0 and absorb is not None:
-            s, cnt, pg = min(s, absorb[0]), cnt + absorb[1], pg | absorb[2]
-        if i < len(runs) - 1:
-            emitted.append(_summary(user_id, s, e, cnt, len(pg)))
-        else:
-            open_sess = (s, e, cnt, sorted(pg))
-
-    state.update(open_sess)
-    state.setTimeoutTimestamp(open_sess[1] + gap_ms)
+    emitted, (s, e, cnt, pg) = _fold_runs(
+        user_id, runs, state.get if state.exists else None
+    )
+    state.update((s, e, cnt, sorted(pg)))
+    state.setTimeoutTimestamp(e + gap_ms)
     if emitted:
         yield pd.DataFrame(emitted)
 
@@ -194,37 +208,16 @@ class SessionProcessor(StatefulProcessor):
         if not frames:
             return iter([])
         runs = _split_runs(pd.concat(frames), gap_ms)
-        (user_id,) = key
-        emitted: list[dict] = []
-        absorb = None
-        map_pages = (
-            {k[0] for k in self.pages.keys()} if self.sess.exists() else set()
-        )
+        prior = None
         if self.sess.exists():
             p_start, p_end, p_n = self.sess.get()
             # explicit timers need disarming on re-arm (unlike
             # GroupState's single implicit timeout)
             self.handle.deleteTimer(p_end + gap_ms)
-            if int(runs[0]["ts_ms"].min()) - p_end <= gap_ms:
-                absorb = (p_start, p_n, map_pages)
-            else:
-                emitted.append(
-                    _summary(user_id, p_start, p_end, p_n, len(map_pages))
-                )
-
-        open_sess = None
-        for i, g in enumerate(runs):
-            s, e = int(g["ts_ms"].min()), int(g["ts_ms"].max())
-            cnt = len(g)
-            pg = set(g["page"].astype(str))
-            if i == 0 and absorb is not None:
-                s, cnt, pg = min(s, absorb[0]), cnt + absorb[1], pg | absorb[2]
-            if i < len(runs) - 1:
-                emitted.append(_summary(user_id, s, e, cnt, len(pg)))
-            else:
-                open_sess = (s, e, cnt, pg)
-
-        s, e, cnt, pg = open_sess
+            pages = {k[0] for k in self.pages.keys()}
+            prior = (p_start, p_end, p_n, pages)
+        (user_id,) = key
+        emitted, (s, e, cnt, pg) = _fold_runs(user_id, runs, prior)
         self.sess.update((s, e, cnt))
         self.pages.clear()
         for p in pg:

@@ -192,15 +192,20 @@ def test_bucketed_probe_partitions_read(spark, tmp_path):
     assert (post.exact_dup, post.near_dup) == (True, True)
 
 
-def test_layout_rewrite_same_path_evicts_cached_schema(spark, tmp_path):
-    """Round-15 verdict item 1: `read_index_parquet` caches schemas per
-    bare path, and `write_dedup_index` can rewrite the SAME path with a
-    different layout (± the `hb` partition column). Without eviction the
-    probe after a bucketed→flat rewrite would read with the stale
-    bucketed schema, take the bucketed branch, and join on a column
-    that no longer exists on disk. The writers must evict, so both
-    rewrite directions keep returning the layout-correct answer."""
+def test_layout_rewrite_same_path_reads_current_layout(spark, tmp_path):
+    """`read_index_parquet` caches an index table's data columns per
+    bare path, and a table can be rewritten at the SAME path with a
+    different layout (± the `hb` partition column) by
+    `write_dedup_index(bucket_bands=...)` or by any plain
+    `DataFrameWriter`. A cached full schema would keep a stale `hb`
+    after a bucketed→flat rewrite (read back all-null), so the probe
+    would take the bucketed branch and flag nothing. Partition columns
+    come from the listing on disk, so every rewrite direction, by a
+    package writer or not, reads the current layout and returns the
+    flat answer."""
+    from realtime_event_streaming_spark.io import read_index_parquet
     from realtime_event_streaming_spark.operators.dedup import (
+        DEDUP_BAND_BUCKETS,
         write_dedup_index as _write,
     )
 
@@ -216,23 +221,138 @@ def test_layout_rewrite_same_path_evicts_cached_schema(spark, tmp_path):
     ref = sorted(map(tuple, probe_dedup_index(spark, ref_path, batch).collect()))
     assert ref  # the re-sent doc must flag
 
-    # bucketed write + probe caches the (band_idx, hb) schema for `path`
-    _write(spark, SF, path, bucket_bands=True)
-    first = sorted(map(tuple, probe_dedup_index(spark, path, batch).collect()))
-    assert first == ref
+    def reads_current_layout(has_hb: bool) -> None:
+        bands = f"{path}/minhash_bands"
+        assert ("hb" in spark.read.parquet(bands).columns) == has_hb
+        assert (
+            read_index_parquet(spark, bands).schema
+            == spark.read.parquet(bands).schema
+        )
+        probe = probe_dedup_index(spark, path, batch)
+        assert sorted(map(tuple, probe.collect())) == ref
+        if has_hb:
+            plan = probe._jdf.queryExecution().executedPlan().toString()
+            assert "dynamicpruningexpression(true)" not in plan, plan[:3000]
 
-    # rewrite the SAME path flat: the probe must see the flat layout
-    # (stale cached schema would error or silently return no dups)
+    # bucketed write + probe caches the path's data columns
+    _write(spark, SF, path, bucket_bands=True)
+    reads_current_layout(has_hb=True)
+
+    # package writer: bucketed→flat and back
     _write(spark, SF, path, bucket_bands=False)
-    assert "hb" not in spark.read.parquet(f"{path}/minhash_bands").columns
-    after_flat = sorted(
-        map(tuple, probe_dedup_index(spark, path, batch).collect())
-    )
-    assert after_flat == ref
-
-    # and back: flat→bucketed must re-detect the bucketed branch
+    reads_current_layout(has_hb=False)
     _write(spark, SF, path, bucket_bands=True)
-    after_bkt = probe_dedup_index(spark, path, batch)
-    plan = after_bkt._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, after_bkt.collect())) == ref
-    assert "dynamicpruningexpression(true)" not in plan, plan[:3000]
+    reads_current_layout(has_hb=True)
+
+    # a plain DataFrameWriter, outside the package: bucketed→flat and back
+    flat = spark.read.parquet(f"{ref_path}/minhash_bands")
+    flat.write.mode("overwrite").partitionBy("band_idx").parquet(
+        f"{path}/minhash_bands"
+    )
+    reads_current_layout(has_hb=False)
+    flat.withColumn(
+        "hb", F.pmod(F.col("band_hash"), F.lit(DEDUP_BAND_BUCKETS))
+    ).write.mode("overwrite").partitionBy("band_idx", "hb").parquet(
+        f"{path}/minhash_bands"
+    )
+    reads_current_layout(has_hb=True)
+
+
+def _partition_columns(path: str) -> set[str]:
+    """Hive-style partition keys of a table, read off its directory
+    names (``key=value``)."""
+    import os
+
+    return {
+        d.split("=", 1)[0]
+        for _, dirs, _ in os.walk(path)
+        for d in dirs
+        if "=" in d
+    }
+
+
+def test_index_data_columns_do_not_depend_on_writer_options(spark, tmp_path):
+    """The rule `read_index_parquet`'s data-column cache rests on: a
+    writer option may change an index sub-table's partition layout,
+    never its data columns. For every sub-table the package's index
+    writers build, the (warm) cached read equals the inferred read,
+    and the data columns agree across the options that change layout
+    or shard count. A warm read of a partitioned sub-table builds its
+    query without launching a job."""
+    from realtime_event_streaming_spark.io import read_index_parquet
+    from realtime_event_streaming_spark.operators.dedup import (
+        write_dedup_index as _write_dedup,
+    )
+    from realtime_event_streaming_spark.operators.retrieval import (
+        write_ivfpq_index,
+    )
+    from realtime_event_streaming_spark.operators.similarity import (
+        LSH_BITS,
+        write_ann_index,
+        write_nsw_index,
+    )
+
+    writers = {
+        "dedup": [
+            ("flat", lambda p: _write_dedup(spark, SF, p)),
+            ("bucketed", lambda p: _write_dedup(spark, SF, p, bucket_bands=True)),
+        ],
+        "ann": [("ivf", lambda p: write_ann_index(spark, SF, p))],
+        "nsw": [
+            (
+                f"shards{s}",
+                lambda p, s=s: write_nsw_index(
+                    spark, SF, p, bucket_bits=LSH_BITS, n_shards=s
+                ),
+            )
+            for s in (1, 4)
+        ],
+        "ivfpq": [("pq", lambda p: write_ivfpq_index(spark, SF, p))],
+    }
+    tables = {
+        "dedup": ("content_hash", "minhash_bands"),
+        "ann": ("centroids", "postings"),
+        "nsw": ("near", "vecs"),
+        "ivfpq": ("centroids", "codebooks", "codes", "vectors"),
+    }
+    partitioned = []
+    for index, options in writers.items():
+        data_cols: dict[str, set] = {}
+        for option, write in options:
+            root = str(tmp_path / index / option)
+            write(root)
+            for table in tables[index]:
+                p = f"{root}/{table}"
+                read_index_parquet(spark, p)  # miss: infers and caches
+                inferred = spark.read.parquet(p).schema
+                assert read_index_parquet(spark, p).schema == inferred, p
+                layout = _partition_columns(p)
+                if layout:
+                    partitioned.append(p)
+                cols = [
+                    (f.name, f.dataType.simpleString())
+                    for f in inferred.fields
+                    if f.name not in layout
+                ]
+                assert cols, p
+                data_cols.setdefault(table, set()).add(tuple(cols))
+        for table, seen in data_cols.items():
+            assert len(seen) == 1, (index, table, seen)
+    assert {p.rsplit("/", 1)[1] for p in partitioned} >= {
+        "minhash_bands",
+        "postings",
+        "near",
+        "vecs",
+        "codes",
+    }
+
+    sc = spark.sparkContext
+    group = "warm-index-read"
+    sc.setJobGroup(group, group)
+    try:
+        for p in partitioned:
+            read_index_parquet(spark, p)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -28,10 +28,13 @@ not know that flag, so ``launch`` runs the same lifecycle:
   and restores the environment after it. Otherwise, or if the cache is
   not writable, the JVM is launched exactly as without this module.
 - **Fallback.** A damaged archive can kill the JVM before the gateway
-  starts (a truncated one crashes it with SIGBUS and an ``hs_err``
-  report). Then the archive is deleted and the JVM relaunched once
-  without the flags. An archive that does not match the JVM or class
-  path is ignored by the JVM.
+  starts (a truncated one crashes it with SIGBUS). Then the archive is
+  deleted and the JVM relaunched once without the flags. The crash
+  writes its ``hs_err_pid*.log`` report into the cache directory
+  (``-XX:ErrorFile``), not the caller's working directory, but the
+  JVM's fatal-error banner still goes to the stdout it inherits, ahead
+  of whatever that one call prints. An archive that does not match the
+  JVM or class path is ignored by the JVM.
 - **Quiet.** CDS logging is off, so no warning line reaches the stdout
   that the CLI and the benchmark read.
 """
@@ -133,13 +136,14 @@ def _plan(class_path: str) -> tuple[str, str | None, str] | None:
             return None
         key = _key(java, class_path)
         archive = os.path.join(cache, f"driver-{key}.jsa")
+        common = f"{_QUIET} -XX:ErrorFile={cache}/hs_err_pid%p.log"
         if install(archive, whole=is_whole):
-            return f"-XX:SharedArchiveFile={archive} {_QUIET}", archive, empty
+            return f"-XX:SharedArchiveFile={archive} {common}", archive, empty
     except OSError as exc:
         log.debug("class-data archive not used: %s", exc)
         return None
     part = os.path.join(cache, f"driver-{key}.{uuid.uuid4().hex[:12]}{PART_SUFFIX}")
-    return f"-XX:ArchiveClassesAtExit={part} {_QUIET}", None, empty
+    return f"-XX:ArchiveClassesAtExit={part} {common}", None, empty
 
 
 @contextmanager

@@ -9,7 +9,10 @@ Design notes (100 TB posture):
   ``max(local cores, 8)``; ``prepare`` sets 32 on a session that still
   carries Spark's default of 200 and leaves any other value alone. On a
   cluster this is expected to be overridden (or left to AQE with a high
-  initial value).
+  initial value). One stream does not follow it: ``agg.write_rollup``
+  starts the minute rollup at 1 partition (``shuffle_partitions``),
+  because its state is a few hundred window keys and every extra
+  partition is only another stateful task per micro-batch.
 - Arrow enabled for any pandas-UDF path (the slow-path escape hatch).
 - Session timezone pinned to UTC so event-time bucketing is
   deterministic and matches the DuckDB oracle (naive timestamps).
@@ -99,7 +102,7 @@ _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 _SPARK_GLOBAL_DEFAULT = "200"
 #: shuffle partitions while a fixture-scale streaming replay runs
 #: (``fixture_scale_shuffle``)
-FIXTURE_SHUFFLE_PARTITIONS = "4"
+FIXTURE_SHUFFLE_PARTITIONS = 4
 
 
 def prepare(spark: SparkSession) -> SparkSession:
@@ -121,20 +124,17 @@ def prepare(spark: SparkSession) -> SparkSession:
 
 
 @contextmanager
-def fixture_scale_shuffle(spark: SparkSession):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` to
-    ``FIXTURE_SHUFFLE_PARTITIONS`` for a FIXTURE-SCALE streaming
-    replay, restoring the prior value after.
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Set ``spark.sql.shuffle.partitions`` to ``n`` for the body and
+    restore the prior value after, unsetting it if it was unset.
 
-    The committed replay fixtures are tens-of-rows micro-batches, but
-    stateful streaming shuffles are not AQE-coalesced — every batch
-    pays task launch + state-store open for the full partition count,
-    which dominates the replay queries' wall time inside the
-    correctness gate (judge r8 item 3: bound the gate cost). Values
-    are partition-count-invariant (the oracle hash proves it);
-    production streams keep the session default."""
+    Stateful streaming shuffles are not AQE-coalesced, and a streaming
+    query reads the count once, when ``start()`` builds its execution
+    from a clone of the session, then records it in its checkpoint's
+    offset log; so a pin around ``start()`` sizes that query's state
+    for life and leaves the session as it was."""
     old = spark.conf.get(_SHUFFLE_KEY, None)
-    spark.conf.set(_SHUFFLE_KEY, FIXTURE_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_KEY, str(n))
     try:
         yield
     finally:
@@ -142,6 +142,19 @@ def fixture_scale_shuffle(spark: SparkSession):
             spark.conf.unset(_SHUFFLE_KEY)
         else:
             spark.conf.set(_SHUFFLE_KEY, old)
+
+
+def fixture_scale_shuffle(spark: SparkSession):
+    """``shuffle_partitions`` at ``FIXTURE_SHUFFLE_PARTITIONS`` for a
+    FIXTURE-SCALE streaming replay.
+
+    The committed replay fixtures are tens-of-rows micro-batches, but
+    every stateful batch pays task launch + state-store open for the
+    full partition count, which dominates the replay queries' wall time
+    in the oracle parity run. Values are partition-count-invariant (the
+    oracle hash proves it); production streams keep the session default,
+    except the minute rollup (``agg.write_rollup``), which pins its own."""
+    return shuffle_partitions(spark, FIXTURE_SHUFFLE_PARTITIONS)
 
 
 def get_spark(app_name: str = "realtime-event-streaming-spark") -> SparkSession:

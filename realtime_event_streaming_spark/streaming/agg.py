@@ -18,6 +18,15 @@ decides which late events still count: an event up to 70 s behind the
 newest event of earlier batches is kept, where the reference's 10 s
 watermark would drop it.
 
+``write_rollup`` starts the query with its state on ONE shuffle
+partition, whatever the session's count. The stateful stage reads the
+map-side partial aggregates, bounded by windows x pages x countries in
+the batch rather than by the event rate, and live state is about 200
+keys; partitions never split one key's user set, so more of them add
+no parallelism, only a stateful task, a state-store version and a sink
+write task per partition on every micro-batch. A checkpoint written
+with another count resumes with the count recorded in its offset log.
+
 The ``approx`` variant keeps the reference's 10 s emission latency by
 trading exact uniques for HLL (approx_count_distinct) — the documented
 100 TB default, where per-window user sets stop being a good idea
@@ -28,6 +37,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ..session import shuffle_partitions
 
 #: Watermark delay for the exact path: window length + reference's 10 s
 #: bounded out-of-orderness (StreamJob.java:215). It sets which late
@@ -213,7 +224,14 @@ def read_rollup_log(
 def write_rollup(agg: DataFrame, path: str, checkpoint: str, trigger=None):
     """Append the finalized windows to the partitioned agg table
     (reference sink batching 5 s -> processingTime trigger,
-    StreamJob.java:293-297)."""
+    StreamJob.java:293-297).
+
+    The query starts with ``spark.sql.shuffle.partitions`` at 1, so its
+    window state and the fused parquet write run as one task per
+    micro-batch (see the module docstring). ``start()`` reads the count
+    from its clone of the session, and the session's own value is
+    restored before this returns. Spark records the count in the offset
+    log, so a checkpoint written at 8 partitions resumes at 8."""
     out = agg.withColumn("month", F.date_format("window_start", "yyyyMM"))
     writer = (
         out.writeStream.format("parquet")
@@ -224,7 +242,8 @@ def write_rollup(agg: DataFrame, path: str, checkpoint: str, trigger=None):
     )
     if trigger:
         writer = writer.trigger(**trigger)
-    return writer.start()
+    with shuffle_partitions(agg.sparkSession, 1):
+        return writer.start()
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,11 @@ Reference relies on Flink's 30 s checkpoints (StreamJob.java:199);
 Spark checkpoints every micro-batch. This test stops the rollup query
 mid-stream, delivers the rest of the data, restarts against the SAME
 checkpoint and sink, and asserts the final table equals the batch truth
-with no duplicated windows."""
+with no duplicated windows.
+
+The rollup keeps its window state on one shuffle partition
+(``write_rollup``); a checkpoint written at another count resumes at
+that count."""
 
 from __future__ import annotations
 
@@ -20,6 +24,7 @@ from realtime_event_streaming_spark.sources.clickgen import (
     write_stream_fixture,
 )
 from realtime_event_streaming_spark.schemas import CLICK_WIRE_SCHEMA
+from realtime_event_streaming_spark.session import shuffle_partitions
 from realtime_event_streaming_spark.streaming.agg import (
     EXACT_WATERMARK,
     minute_rollup_batch,
@@ -169,3 +174,125 @@ def test_pipeline_resumes_checkpoints_of_the_nested_struct_parse(
     assert emitted.exceptAll(truth).count() == 0, "resumed rollup diverged"
     dups = emitted.groupBy(*keys).count().where(F.col("count") > 1).count()
     assert dups == 0, "resume double-emitted windows"
+
+
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+_KEYS = ["window_start", "page", "country"]
+
+
+def _wire_fixture(spark, d):
+    """The 3000-event wire fixture in six files under ``d/all``; returns
+    the clicks and the file names in order."""
+    clicks = generate_clicks(spark, n_events=3000, n_users=100, rate_per_sec=5)
+    write_stream_fixture(clicks, d + "/all", n_files=6)
+    parts = sorted(p for p in os.listdir(d + "/all") if p.startswith("part-"))
+    os.makedirs(d + "/in")
+    return clicks, parts
+
+
+def _deliver(d, names):
+    for p in names:
+        shutil.copy2(os.path.join(d + "/all", p), os.path.join(d + "/in", p))
+
+
+def _state_partitions(ck) -> list[str]:
+    op = os.path.join(ck, "state", "0")
+    return sorted(n for n in os.listdir(op) if n.isdigit())
+
+
+def _assert_rollup_is_batch_truth(spark, clicks, agg_path):
+    emitted = spark.read.parquet(agg_path).drop("month")
+    assert emitted.count() > 0
+    truth = (
+        minute_rollup_batch(parse_clicks(as_json_records(clicks)))
+        .join(emitted.select(*_KEYS), _KEYS)
+        .select(*emitted.columns)
+    )
+    assert emitted.exceptAll(truth).count() == 0, "rollup diverged"
+    assert truth.exceptAll(emitted).count() == 0, "rollup diverged"
+    dups = emitted.groupBy(*_KEYS).count().where(F.col("count") > 1).count()
+    assert dups == 0, "rollup double-emitted windows"
+
+
+def test_pipeline_rollup_state_runs_on_one_partition(spark, tmp_path):
+    """The rollup's window state lives on one shuffle partition whatever
+    the session's count, and starting it leaves the session's count as
+    it was."""
+    d = str(tmp_path)
+    clicks, parts = _wire_fixture(spark, d)
+    _deliver(d, parts)
+    before = spark.conf.get(_SHUFFLE_KEY, None)
+    assert before != "1"
+
+    pipe = start_pipeline(spark, d + "/in", d + "/out")
+    assert spark.conf.get(_SHUFFLE_KEY, None) == before
+    pipe.await_all(300)
+
+    (op,) = pipe.rollup_query.lastProgress["stateOperators"]
+    assert op["numShufflePartitions"] == 1
+    assert op["numStateStoreInstances"] == 1
+    assert _state_partitions(d + "/out/_ck_agg") == ["0"]
+    _assert_rollup_is_batch_truth(spark, clicks, d + "/out/page_minute_agg")
+
+
+def test_rollup_checkpoint_keeps_its_recorded_partition_count(spark, tmp_path):
+    """A rollup checkpoint written at 8 shuffle partitions (the session
+    count, before the rollup pinned its own) resumes through
+    ``write_rollup`` at 8, exactly-once."""
+    d = str(tmp_path)
+    clicks, parts = _wire_fixture(spark, d)
+    agg_path, ck = d + "/agg", d + "/ck"
+
+    def stream():
+        return parse_clicks(
+            read_json_file_stream(spark, d + "/in"), watermark=EXACT_WATERMARK
+        )
+
+    _deliver(d, parts[:3])
+    with shuffle_partitions(spark, 8):
+        q = (
+            minute_rollup_stream_exact(stream())
+            .withColumn("month", F.date_format("window_start", "yyyyMM"))
+            .writeStream.format("parquet")
+            .option("path", agg_path)
+            .option("checkpointLocation", ck)
+            .partitionBy("month")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+    q.awaitTermination(300)
+    n_phase1 = spark.read.parquet(agg_path).count()
+    assert n_phase1 > 0, "phase 1 should finalize some windows"
+    assert len(_state_partitions(ck)) == 8
+
+    _deliver(d, parts[3:])
+    q = write_rollup(
+        minute_rollup_stream_exact(stream()),
+        agg_path,
+        ck,
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(300)
+
+    (op,) = q.lastProgress["stateOperators"]
+    assert op["numShufflePartitions"] == 8
+    assert len(_state_partitions(ck)) == 8
+    assert spark.read.parquet(agg_path).count() > n_phase1
+    _assert_rollup_is_batch_truth(spark, clicks, agg_path)
+
+
+def test_shuffle_partitions_restores_the_prior_value(spark):
+    before = spark.conf.get(_SHUFFLE_KEY, None)
+    try:
+        with shuffle_partitions(spark, 3):
+            assert spark.conf.get(_SHUFFLE_KEY) == "3"
+        assert spark.conf.get(_SHUFFLE_KEY, None) == before
+
+        spark.conf.unset(_SHUFFLE_KEY)
+        unset = spark.conf.get(_SHUFFLE_KEY, None)
+        with shuffle_partitions(spark, 1):
+            assert spark.conf.get(_SHUFFLE_KEY) == "1"
+        assert spark.conf.get(_SHUFFLE_KEY, None) == unset
+    finally:
+        spark.conf.set(_SHUFFLE_KEY, before)

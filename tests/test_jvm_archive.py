@@ -46,7 +46,7 @@ print(json.dumps({
     "options": [
         a for a in jvm.java.lang.management.ManagementFactory
         .getRuntimeMXBean().getInputArguments()
-        if "Archive" in a or "Xlog" in a
+        if "Archive" in a or "Xlog" in a or "ErrorFile" in a
     ],
     "jvm_conf_dir": jvm.java.lang.System.getenv("SPARK_CONF_DIR"),
     "conf_dir_after": os.environ.get("SPARK_CONF_DIR"),
@@ -108,12 +108,13 @@ def test_first_launch_dumps_and_the_next_maps_the_archive(env, tmp_path):
     first = _probe(env, tmp_path)
     assert _uses(first, "ArchiveClassesAtExit") and not _uses(first, "SharedArchiveFile")
     assert "-Xlog:cds*=off" in first["options"]
+    assert _uses(first, "ErrorFile")
     (part,) = _driver_files(env)
     assert part.endswith(localfs.PART_SUFFIX)
     assert jvm_archive.is_whole(str(_cache(env) / part))
 
     second = _probe(env, tmp_path)
-    assert _uses(second, "SharedArchiveFile")
+    assert _uses(second, "SharedArchiveFile") and _uses(second, "ErrorFile")
     (archive,) = _driver_files(env)
     assert archive == part.split(".", 1)[0] + ".jsa"
     # the first JVM mapped only the JDK's base archive
@@ -153,6 +154,9 @@ def test_truncated_archive_falls_back_and_is_deleted(env, tmp_path):
     assert res["options"] == []
     assert res["jvm_conf_dir"] == env["SPARK_CONF_DIR"]
     assert _driver_files(env) == []
+    # the crash report goes to the cache, not the caller's directory
+    assert list(tmp_path.glob("hs_err_pid*.log")) == []
+    assert len(list(_cache(env).glob("hs_err_pid*.log"))) == 1
 
 
 def test_partial_dump_without_magic_is_never_published(env, tmp_path, monkeypatch):

@@ -1,8 +1,10 @@
 """Differential test: every registered query vs its DuckDB oracle.
 
 Mirrors the driver's CORRECTNESS gate. Runs at sf0.001 by default
-(fast); set ORACLE_SF=/root/testdata/sf0.01 to run at the driver's
-check scale.
+(fast). ``ORACLE_SF`` picks another fixture, either as a bare scale
+(``ORACLE_SF=0.01`` reads the ``sf0.01`` directory next to the sf0.001
+fixture) or as a directory path; a directory that does not exist fails
+collection with a message naming it.
 """
 
 from __future__ import annotations
@@ -13,9 +15,30 @@ import pytest
 
 from realtime_event_streaming_spark.registry import load_all
 
+from .conftest import SF_SMOKE
 from .oracle import compare, duck_connection
 
-SF_DIR = os.environ.get("ORACLE_SF", "/root/testdata/sf0.001")
+
+def _sf_dir(value: str | None) -> str:
+    """A bare scale ``0.01`` names the ``sf0.01`` directory beside the
+    sf0.001 fixture; anything else is a directory path. Unset is the
+    sf0.001 fixture."""
+    if value is None:
+        return SF_SMOKE
+    try:
+        float(value)
+    except ValueError:
+        path = value
+    else:
+        path = os.path.join(os.path.dirname(SF_SMOKE), f"sf{value}")
+    if not os.path.isdir(path):
+        raise pytest.UsageError(
+            f"ORACLE_SF={value!r}: fixture directory {path} does not exist"
+        )
+    return path
+
+
+SF_DIR = _sf_dir(os.environ.get("ORACLE_SF"))
 
 _REG = load_all()
 _NAMES = sorted(_REG)

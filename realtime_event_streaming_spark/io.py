@@ -28,6 +28,17 @@ user_id/page at :105,:108) as partitioned Parquet:
 - ``sortWithinPartitions(ts)`` -> parquet row-group min/max stats act as
   the primary-index range scan;
 - parquet bloom filters on point-lookup columns -> data skipping.
+
+Maintenance
+-----------
+The engine runs the part merges and TTL that the reference leaves to
+ClickHouse (clickhouse_tables.sql:33). Every in-place rewrite
+(``compact_partition``, ``compact_index_table`` and
+``streaming.agg.compact_rollup_parts``) goes through ``replace_dir``,
+which writes a hidden sibling and swaps it in with two renames, so a
+crash at any point leaves the old or the new contents readable.
+``compact_index_table`` keeps the layout it finds on disk: the
+partition columns come from the table itself, not from the caller.
 """
 
 from __future__ import annotations
@@ -109,9 +120,9 @@ def read_index_parquet(spark: SparkSession, path: str) -> DataFrame:
     no eviction: the next read sees the layout on disk. What the cache
     relies on is that a table's data columns do not depend on writer
     options (pinned by tests/test_dedup_index.py
-    ::test_index_data_columns_do_not_depend_on_writer_options).
-    ``compact_index_table`` is the one rewrite that can move a column
-    between partition and data, and it drops the path's entry itself.
+    ::test_index_data_columns_do_not_depend_on_writer_options), and
+    ``compact_index_table`` rewrites a table under its own partition
+    columns, so compaction keeps them too.
 
     The cache is keyed by the bare path, not ``load_table``'s (path,
     mtime): a partition overwrite does not bump the parent dir's
@@ -122,12 +133,19 @@ def read_index_parquet(spark: SparkSession, path: str) -> DataFrame:
     if data_cols is not None:
         return spark.read.schema(data_cols).parquet(path)
     df = spark.read.parquet(path)
-    relation = df._jdf.queryExecution().analyzed().relation()
-    layout = set(relation.partitionSchema().fieldNames())
+    layout = _partition_columns(df)
     _SCHEMA_CACHE[path] = StructType(
         [f for f in df.schema.fields if f.name not in layout]
     )
     return df
+
+
+def _partition_columns(df: DataFrame) -> list[str]:
+    """The partition columns Spark discovered from the directory
+    listing of a file-source read (no job: the listing is made when the
+    read is built)."""
+    relation = df._jdf.queryExecution().analyzed().relation()
+    return list(relation.partitionSchema().fieldNames())
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
@@ -374,65 +392,85 @@ def backfill_minute_rollup(
     )
 
 
-def compact_partition(
-    spark: SparkSession,
-    path: str,
-    month: str,
-    target_file_mb: int = 128,
-) -> int:
+#: Output size a compaction aims for: a month partition or an
+#: unpartitioned index table is rewritten as ceil(bytes / target) files.
+COMPACT_TARGET_BYTES = 128 * 1024 * 1024
+
+
+def replace_dir(live, write):
+    """Rewrite directory ``live`` in place so that a crash at any point
+    leaves either the old or the new contents under ``live``.
+
+    ``write(tmp)`` fills the sibling ``.compact_tmp_<name>``: dot-
+    prefixed dirs are invisible to Spark's file index, so readers of
+    the table never see the in-flight copy. The swap is two renames (a
+    dir cannot be renamed onto a non-empty target): ``live`` to
+    ``.compact_old_<name>``, then the copy to ``live``; the old copy is
+    removed last. A crash between the renames leaves the old contents
+    set aside, and the next call restores them before anything else; a
+    crash before or after the swap leaves a stale sibling that the next
+    call removes. Returns what ``write`` returns, or None without
+    calling it when there is no ``live`` directory to rewrite."""
+    import shutil
+    from pathlib import Path
+
+    live = Path(live)
+    tmp = live.parent / f".compact_tmp_{live.name}"
+    old = live.parent / f".compact_old_{live.name}"
+    if old.exists():
+        if live.exists():
+            shutil.rmtree(old)
+        else:
+            old.rename(live)
+    shutil.rmtree(tmp, ignore_errors=True)
+    if not live.exists():
+        return None
+    result = write(str(tmp))
+    live.rename(old)
+    tmp.rename(live)
+    shutil.rmtree(old)
+    return result
+
+
+def _target_files(files) -> int:
+    import math
+
+    size = sum(f.stat().st_size for f in files)
+    return max(1, math.ceil(size / COMPACT_TARGET_BYTES))
+
+
+def compact_partition(spark: SparkSession, path: str, month: str) -> int:
     """Rewrite one month partition into size-targeted files.
 
     Streaming sinks produce one small file per micro-batch; left alone,
     a year of 10 s triggers is ~3 M files. This is the maintenance job
     ClickHouse's background merges do implicitly: coalesce a partition
-    to ceil(bytes / target) sorted files. Partition-scoped (no full
-    table rewrite), idempotent, safe to run while readers use other
-    months. Returns the new file count.
+    to ceil(bytes / ``COMPACT_TARGET_BYTES``) sorted files through
+    ``replace_dir``. Partition-scoped (no full table rewrite),
+    idempotent, safe to run while readers use other months. Returns
+    the new file count (0 when the month does not exist).
     """
-    import math
     from pathlib import Path
 
-    import shutil
+    live = Path(path) / f"month={month}"
 
-    part_dir = Path(path) / f"month={month}"
-    tmp = Path(path) / f".compact_tmp_month={month}"
-    old = Path(path) / f".compact_old_month={month}"
-    # Crash recovery from a previous interrupted swap: if the live dir
-    # is gone but the set-aside copy exists, restore it first.
-    if not part_dir.exists() and old.exists():
-        old.rename(part_dir)
-    if not part_dir.exists():
-        return 0
-    _retire_stream_metadata(path)
-    size = sum(f.stat().st_size for f in part_dir.glob("*.parquet"))
-    n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(str(part_dir))
-    # Dot-prefixed siblings are invisible to Spark's file index, so
-    # readers scanning the table never see the in-flight copy. The swap
-    # is two renames (a dir cannot be renamed onto a non-empty target):
-    # a crash between them leaves the month set aside under
-    # .compact_old_* and the recovery above restores it on the next run.
-    sort_col = "ts" if "ts" in df.columns else df.columns[0]
-    (
-        df.repartition(n_files)
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(str(tmp))
-    )
-    if old.exists():
-        shutil.rmtree(old)
-    part_dir.rename(old)
-    tmp.rename(part_dir)
-    shutil.rmtree(old)
-    return n_files
+    def _write(tmp: str) -> int:
+        _retire_stream_metadata(path)
+        n_files = _target_files(live.glob("*.parquet"))
+        df = spark.read.parquet(str(live))
+        sort_col = "ts" if "ts" in df.columns else df.columns[0]
+        (
+            df.repartition(n_files)
+            .sortWithinPartitions(sort_col)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+        return n_files
+
+    return replace_dir(live, _write) or 0
 
 
-def compact_index_table(
-    spark: SparkSession,
-    path: str,
-    partition_col: str | None = None,
-    target_file_mb: int = 128,
-) -> dict[str, int]:
+def compact_index_table(spark: SparkSession, path: str) -> dict[str, int]:
     """Compact an append-maintained parquet index table in place.
 
     Incremental index maintenance (``operators.dedup.merge_dedup_index``
@@ -441,47 +479,33 @@ def compact_index_table(
     O(batches) small files and probe-side scans degrade. This is the
     background-merge step (the analogue of ClickHouse's part merges the
     reference relies on, sql/clickhouse_tables.sql:33 SummingMergeTree
-    semantics): rewrite the table into size-targeted files —
-    per-partition-value files when ``partition_col`` is set (each probe
-    prunes to its partition dirs, so one well-sized file per value is
-    the read-optimal layout), else ceil(bytes/target) files.
+    semantics), rewritten through ``replace_dir``.
 
-    Same crash-safe two-rename swap as ``compact_partition``: readers
-    never see the in-flight copy (dot-prefixed dirs are invisible to
-    Spark's file index), and an interrupted swap is restored on the
-    next run. Returns ``{"files_before": b, "files_after": a}``.
+    The layout is the table's own: the partition columns come from the
+    read of the path (``_partition_columns``), and the rewrite writes
+    one file per partition leaf under the same columns (each probe
+    prunes to its leaves, so one well-sized file per leaf is the
+    read-optimal layout), or ceil(bytes / ``COMPACT_TARGET_BYTES``)
+    files for an unpartitioned table. No column moves between partition
+    and data, so the data columns ``read_index_parquet`` caches for the
+    path stay valid. Returns ``{"files_before": b, "files_after": a}``.
     """
-    import math
-    import shutil
     from pathlib import Path
 
     root = Path(path)
-    tmp = root.parent / f".compact_tmp_{root.name}"
-    old = root.parent / f".compact_old_{root.name}"
-    if not root.exists() and old.exists():
-        old.rename(root)
-    files_before = len(list(root.rglob("*.parquet")))
-    df = spark.read.parquet(str(root))
-    if partition_col is not None:
-        writer = (
-            df.repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-        )
-    else:
-        size = sum(f.stat().st_size for f in root.rglob("*.parquet"))
-        n_files = max(1, math.ceil(size / (target_file_mb * 1024 * 1024)))
-        writer = df.repartition(n_files).write.mode("overwrite")
-    writer.parquet(str(tmp))
-    if old.exists():
-        shutil.rmtree(old)
-    root.rename(old)
-    tmp.rename(root)
-    shutil.rmtree(old)
-    # ``partition_col`` need not match the table's layout, so the
-    # rewrite can turn a partition column into a data column (or back):
-    # the data columns cached for the path must not outlive the swap.
-    _SCHEMA_CACHE.pop(path, None)
+
+    def _write(tmp: str) -> int:
+        files = list(root.rglob("*.parquet"))
+        df = spark.read.parquet(path)
+        layout = _partition_columns(df)
+        if layout:
+            writer = df.repartition(*layout).write.partitionBy(*layout)
+        else:
+            writer = df.repartition(_target_files(files)).write
+        writer.mode("overwrite").parquet(tmp)
+        return len(files)
+
+    files_before = replace_dir(root, _write) or 0
     files_after = len(list(root.rglob("*.parquet")))
     return {"files_before": files_before, "files_after": files_after}
 

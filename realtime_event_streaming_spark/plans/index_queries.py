@@ -32,10 +32,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import atexit
-import os
 import shutil
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -60,33 +57,7 @@ from ..operators.similarity import (
     write_ann_index,
 )
 from ..registry import register
-
-# ---------------------------------------------------------------------------
-# shared: one index build per (kind, sf_dir) per process
-# ---------------------------------------------------------------------------
-
-_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _index_path(spark: SparkSession, sf_dir: str, kind: str, builder) -> str:
-    key = (kind, sf_dir)
-    path = _INDEX_CACHE.get(key)
-    if path and os.path.isdir(path):
-        return path
-    path = tempfile.mkdtemp(prefix=f"rtes_{kind}_index_")
-    # A failed build must not leave a partial index dir behind, and a
-    # successful one is process-scoped scratch — remove it at exit so
-    # repeated driver/test processes don't accumulate /tmp dirs
-    # (round-5 ADVICE).
-    try:
-        builder(spark, sf_dir, path)
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    _INDEX_CACHE[key] = path
-    return path
-
+from .staging import build_once
 
 # ---------------------------------------------------------------------------
 # dedup-index probe: exact + near admission of a deterministic batch
@@ -205,7 +176,7 @@ def probe_dedup_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan shape a nightly crawl admission runs at 100 TB. The
     oracle restates index construction inline, so a hash match proves
     the materialized tables contain exactly what they should."""
-    path = _index_path(spark, sf_dir, "dedup", write_dedup_index)
+    path = build_once(spark, sf_dir, "dedup", write_dedup_index)
     batch = _probe_batch(spark, sf_dir)
     return probe_dedup_index(spark, path, batch).orderBy("doc_id")
 
@@ -248,7 +219,7 @@ ORDER BY query_id, rank
     "probe_ann_index", _PROBE_ANN_DUCK, headline=True, tags=("similarity",)
 )
 def probe_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _index_path(spark, sf_dir, "ann", write_ann_index)
+    path = build_once(spark, sf_dir, "ann", write_ann_index)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("v")
@@ -357,13 +328,11 @@ def _build_dedup_maint(spark: SparkSession, sf_dir: str, path: str) -> None:
     maintenance cycle against the snapshot: merge B1, compact. Leaves
     BOTH states on disk (base/ and merged/) so the query can probe the
     same batch against pre- and post-merge index state."""
-    import shutil
-
     base, merged = f"{path}/base", f"{path}/merged"
     write_dedup_index(spark, sf_dir, base)
     shutil.copytree(base, merged)
     merge_dedup_index(spark, merged, _mnt_b1_batch(spark, sf_dir))
-    compact_index_table(spark, f"{merged}/minhash_bands", "band_idx")
+    compact_index_table(spark, f"{merged}/minhash_bands")
     compact_index_table(spark, f"{merged}/content_hash")
 
 
@@ -444,7 +413,7 @@ def update_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates base construction AND the merged delta inline, so the
     hash match proves the post-merge index tables contain exactly the
     base+B1 state."""
-    path = _index_path(spark, sf_dir, "dedup_maint", _build_dedup_maint)
+    path = build_once(spark, sf_dir, "dedup_maint", _build_dedup_maint)
     b2 = _mnt_b2_batch(spark, sf_dir).localCheckpoint(eager=False)
     pre = probe_dedup_index(spark, f"{path}/base", b2).withColumn(
         "phase", F.lit("pre_merge")
@@ -488,13 +457,11 @@ def _ann_mnt_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_ann_maint(spark: SparkSession, sf_dir: str, path: str) -> None:
-    import shutil
-
     base, merged = f"{path}/base", f"{path}/merged"
     write_ann_index(spark, sf_dir, base)
     shutil.copytree(base, merged)
     merge_ann_index(spark, merged, _ann_mnt_batch(spark, sf_dir))
-    compact_index_table(spark, f"{merged}/postings", "cid")
+    compact_index_table(spark, f"{merged}/postings")
 
 
 _UPDATE_ANN_DUCK = f"""
@@ -556,7 +523,7 @@ ORDER BY phase, query_id, rank
     "update_ann_index", _UPDATE_ANN_DUCK, headline=True, tags=("similarity",)
 )
 def update_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _index_path(spark, sf_dir, "ann_maint", _build_ann_maint)
+    path = build_once(spark, sf_dir, "ann_maint", _build_ann_maint)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("v")
@@ -714,7 +681,7 @@ def _build_rollup_base(spark: SparkSession, sf_dir: str, path: str) -> None:
     tags=("maintenance",),
 )
 def update_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _index_path(spark, sf_dir, "rollup_base", _build_rollup_base)
+    path = build_once(spark, sf_dir, "rollup_base", _build_rollup_base)
     base = read_index_parquet(spark, f"{path}/base")
     ev = load_table(spark, sf_dir, "events")
     ep = ev.select(
@@ -876,7 +843,7 @@ def pq_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index) as a Spark plan."""
     from ..operators.retrieval import PQ_NQ, probe_ivfpq_index, write_ivfpq_index
 
-    path = _index_path(spark, sf_dir, "ivfpq", write_ivfpq_index)
+    path = build_once(spark, sf_dir, "ivfpq", write_ivfpq_index)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < PQ_NQ).select(
         "vec_id",
@@ -891,15 +858,13 @@ def pq_rerank_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_ivfpq_maint(spark: SparkSession, sf_dir: str, path: str) -> None:
-    import shutil
-
     from ..operators.retrieval import merge_ivfpq_index, write_ivfpq_index
 
     base, merged = f"{path}/base", f"{path}/merged"
     write_ivfpq_index(spark, sf_dir, base)
     shutil.copytree(base, merged)
     merge_ivfpq_index(spark, merged, _ann_mnt_batch(spark, sf_dir))
-    compact_index_table(spark, f"{merged}/codes", "cell")
+    compact_index_table(spark, f"{merged}/codes")
 
 
 def _update_ivfpq_oracle() -> str:
@@ -1032,7 +997,7 @@ def update_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     this plan shape."""
     from ..operators.retrieval import PQ_NQ, probe_ivfpq_index
 
-    path = _index_path(spark, sf_dir, "ivfpq_maint", _build_ivfpq_maint)
+    path = build_once(spark, sf_dir, "ivfpq_maint", _build_ivfpq_maint)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < PQ_NQ).select(
         "vec_id",
@@ -1103,7 +1068,7 @@ def _build_nsw_maint(spark: SparkSession, sf_dir: str, path: str) -> None:
     # layered on the serve fixture so `graph_ann_serve` (which reads
     # only base) never pays for the merge, and a process running both
     # queries builds the graph exactly once
-    base_fix = _index_path(spark, sf_dir, "nsw_base", _build_nsw_base)
+    base_fix = build_once(spark, sf_dir, "nsw_base", _build_nsw_base)
     shutil.copytree(f"{base_fix}/base", f"{path}/base")
     shutil.copytree(f"{base_fix}/base", f"{path}/merged")
     vecs = _vectors(spark, sf_dir)
@@ -1208,7 +1173,7 @@ ORDER BY phase, query_id, rank
     "update_nsw_index", _UPDATE_NSW_DUCK, tags=("similarity", "maintenance")
 )
 def update_nsw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _index_path(spark, sf_dir, "nsw_maint", _build_nsw_maint)
+    path = build_once(spark, sf_dir, "nsw_maint", _build_nsw_maint)
     qs = _nsw_panel(_vectors(spark, sf_dir))
     # vecs=None: both probes look candidates up in each index's OWN
     # pt-partitioned vector store (write_nsw_index seeds it, the merge
@@ -1297,7 +1262,7 @@ ORDER BY query_id, rank
     tags=("similarity", "retrieval"),
 )
 def graph_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _index_path(spark, sf_dir, "nsw_base", _build_nsw_base)
+    path = build_once(spark, sf_dir, "nsw_base", _build_nsw_base)
     qs = _nsw_panel(_vectors(spark, sf_dir))
     return probe_nsw_index(
         spark, f"{path}/base", None, qs
@@ -1365,7 +1330,7 @@ def _build_nsw_sharded_base(spark: SparkSession, sf_dir: str, path: str) -> None
     tags=("similarity", "retrieval"),
 )
 def graph_ann_sharded_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _index_path(spark, sf_dir, "nsw_sharded_base", _build_nsw_sharded_base)
+    path = build_once(spark, sf_dir, "nsw_sharded_base", _build_nsw_sharded_base)
     qs = _nsw_panel(_vectors(spark, sf_dir))
     return probe_nsw_index(
         spark, f"{path}/base", None, qs, n_shards=_NSW_SHARDS

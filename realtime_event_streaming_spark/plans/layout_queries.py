@@ -28,13 +28,18 @@ this exact query live in PERF.md §Z-order.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table, read_index_parquet, write_zorder_table
+from ..io import (
+    compact_partition,
+    load_table,
+    read_index_parquet,
+    write_zorder_table,
+)
 from ..registry import ROUND_DIGITS, register
+from .staging import build_once
 
 #: Integer-percent bounds of the selected slice of each dimension's
 #: observed span — identical constants in the Spark plan and the
@@ -43,23 +48,16 @@ _LO_PCT = 45
 _HI_PCT = 55
 _N_FILES = 64
 
-#: One Z-ordered copy per (sf_dir) per process; the write is eager and
-#: happens at query-BUILD time (documented, like dedup_survivors_cc —
-#: it is a layout job, not a hot-path read).
-_ZORDER_CACHE: dict[str, str] = {}
 
-
-def _zorder_events_path(spark: SparkSession, sf_dir: str) -> str:
-    path = _ZORDER_CACHE.get(sf_dir)
-    if path and os.path.isdir(path):
-        return path
-    path = tempfile.mkdtemp(prefix="rtes_zorder_events_")
+def _write_zorder_events(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """One Z-ordered copy per (sf_dir) per process (``build_once``);
+    the write is eager and happens at query-BUILD time (documented,
+    like dedup_survivors_cc — it is a layout job, not a hot-path
+    read)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     write_zorder_table(ev, path, ("ts", "user_id"), n_files=_N_FILES)
-    _ZORDER_CACHE[sf_dir] = path
-    return path
 
 
 _ZORDER_DUCK = f"""
@@ -96,7 +94,7 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a literal-predicate scan of the clustered copy, so parquet
     footer stats skip files on BOTH dimensions (measured in PERF.md).
     """
-    path = _zorder_events_path(spark, sf_dir)
+    path = build_once(spark, sf_dir, "zorder_events", _write_zorder_events)
     ev = load_table(spark, sf_dir, "events")
     # ts is TIMESTAMP_NTZ (unix_micros wants TIMESTAMP); the session is
     # pinned UTC so the cast is a pure reinterpretation.
@@ -137,44 +135,27 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema-evolution scan: mergeSchema read across table generations
 # ---------------------------------------------------------------------------
 
-#: One two-generation snapshot per (sf_dir) per process — same
-#: build-once convention as the Z-order copy above.
-_EVOLVE_CACHE: dict[str, str] = {}
 
-
-def _evolved_events_path(spark: SparkSession, sf_dir: str) -> str:
+def _write_evolved_events(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Write the events table as two parquet generations with
     different schemas into ONE directory: generation 1 (every month
     before the last) lacks the ``props_len`` column; generation 2
     (the last month) carries it. This is what a 100 TB table looks
     like after a mid-life column addition — old files never get
-    rewritten."""
-    path = _EVOLVE_CACHE.get(sf_dir)
-    if path and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-
-    path = tempfile.mkdtemp(prefix="rtes_evolved_events_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        cut = ev.agg(
-            F.date_trunc("month", F.max("ts")).alias("c")
-        ).collect()[0]["c"]  # 1-row layout-job bound, not a hot path
-        base = ev.select("event_id", "ts", "user_id", "event_type", "value")
-        gen1 = base.where(F.col("ts") < F.lit(cut))
-        gen2 = ev.where(F.col("ts") >= F.lit(cut)).select(
-            "event_id", "ts", "user_id", "event_type", "value",
-            F.length("props").cast("int").alias("props_len"),
-        )
-        gen1.coalesce(4).write.mode("overwrite").parquet(path)
-        gen2.coalesce(4).write.mode("append").parquet(path)
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    _EVOLVE_CACHE[sf_dir] = path
-    return path
+    rewritten. Built once per (sf_dir) per process, like the Z-order
+    copy above."""
+    ev = load_table(spark, sf_dir, "events")
+    cut = ev.agg(
+        F.date_trunc("month", F.max("ts")).alias("c")
+    ).collect()[0]["c"]  # 1-row layout-job bound, not a hot path
+    base = ev.select("event_id", "ts", "user_id", "event_type", "value")
+    gen1 = base.where(F.col("ts") < F.lit(cut))
+    gen2 = ev.where(F.col("ts") >= F.lit(cut)).select(
+        "event_id", "ts", "user_id", "event_type", "value",
+        F.length("props").cast("int").alias("props_len"),
+    )
+    gen1.coalesce(4).write.mode("overwrite").parquet(path)
+    gen2.coalesce(4).write.mode("append").parquet(path)
 
 
 _EVOLVE_DUCK = """
@@ -213,7 +194,7 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns are read from each generation's files, asserted in the
     plan test). The alternative — rewriting 100 TB to backfill a
     column — is exactly what this path exists to avoid."""
-    path = _evolved_events_path(spark, sf_dir)
+    path = build_once(spark, sf_dir, "evolved_events", _write_evolved_events)
     merged = spark.read.option("mergeSchema", "true").parquet(path)
     return (
         merged.groupBy("event_type")
@@ -234,42 +215,24 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compaction round trip: value preservation through the maintenance job
 # ---------------------------------------------------------------------------
 
-_COMPACT_CACHE: dict[str, str] = {}
 
-
-def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
+def _write_compacted_events(
+    spark: SparkSession, sf_dir: str, path: str
+) -> None:
     """Write a deliberately fragmented month-partitioned copy of the
     events table (24 files per month — a streaming sink's debris),
-    then run `io.compact_partition` over every month. Build-once per
+    then run `io.compact_partition` over every month. Built once per
     process, like the Z-order and evolved copies above."""
-    path = _COMPACT_CACHE.get(sf_dir)
-    if path and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-
-    from ..io import compact_partition
-
-    path = tempfile.mkdtemp(prefix="rtes_compacted_events_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        frag = ev.withColumn(
-            "month", F.date_format(F.col("ts"), "yyyyMM")
-        ).repartition(24)
-        frag.write.mode("overwrite").partitionBy("month").parquet(path)
-        months = [
-            d.split("=", 1)[1]
-            for d in os.listdir(path)
-            if d.startswith("month=")
-        ]
-        for m in sorted(months):
-            compact_partition(spark, path, m, target_file_mb=128)
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    _COMPACT_CACHE[sf_dir] = path
-    return path
+    ev = load_table(spark, sf_dir, "events")
+    frag = ev.withColumn(
+        "month", F.date_format(F.col("ts"), "yyyyMM")
+    ).repartition(24)
+    frag.write.mode("overwrite").partitionBy("month").parquet(path)
+    months = [
+        d.split("=", 1)[1] for d in os.listdir(path) if d.startswith("month=")
+    ]
+    for m in sorted(months):
+        compact_partition(spark, path, m)
 
 
 _COMPACT_DUCK = """
@@ -289,7 +252,7 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events table is written as a fragmented month-partitioned copy
     (24 files/month — exactly the debris a 10 s streaming trigger
     leaves), every month is compacted through `io.compact_partition`
-    (crash-safe two-rename swap, ts-sorted output files), and the
+    (`io.replace_dir`'s crash-safe swap, ts-sorted output files), and the
     census per month is value-hashed against the RAW table — row
     counts, distinct users, and the value sum must all survive the
     rewrite bit-for-bit. `tests/test_maintenance.py` pins the file
@@ -302,7 +265,9 @@ def compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge discipline every MergeTree/Delta deployment runs. Without
     it, a year of 10 s micro-batches is ~3 M files and the NameNode /
     listing cost dominates every scan."""
-    path = _compacted_events_path(spark, sf_dir)
+    path = build_once(
+        spark, sf_dir, "compacted_events", _write_compacted_events
+    )
     return (
         read_index_parquet(spark, path)
         .groupBy(F.col("month").cast("string").alias("month"))

@@ -39,6 +39,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
+from .staging import stage_files
 
 #: fixture geometry
 _N_FILES = 3
@@ -51,7 +52,10 @@ _BASE_MS = 1704067200000  # 2024-01-01T00:00:00Z
 _HIST_TEXT = " ".join(f"hist{j}" for j in range(22))
 _HIST_HASH = hashlib.md5(_HIST_TEXT.encode()).hexdigest()
 
-#: committed fixture location
+#: committed fixture location; the replay streams
+#: ``stage_files(FIXTURE_DIR)``, a content-keyed copy whose mtimes
+#: increase in part order (FileStreamSource orders by mtime; a git
+#: checkout gives arbitrary ones)
 FIXTURE_DIR = (
     Path(__file__).resolve().parents[2]
     / "tests" / "fixtures" / "manifest_wire"
@@ -124,40 +128,6 @@ GROUP BY f.source ORDER BY f.source
 """
 
 
-def _stage_fixture() -> str:
-    """Copy the committed files to a temp dir with strictly increasing
-    mtimes (FileStreamSource orders by mtime; git gives arbitrary
-    ones) — the streaming_replay staging discipline. The staging dir
-    is keyed on a CONTENT hash of the fixture files (not a version
-    suffix), so editing the committed fixture can never silently
-    replay stale staged bytes; it is built in a private mkdtemp and
-    published with an atomic rename, so concurrent sessions race
-    harmlessly (first rename wins, losers discard their copy)."""
-    import os
-    import time
-
-    parts = sorted(FIXTURE_DIR.glob("part-*.txt"))
-    digest = hashlib.md5(
-        b"".join(p.name.encode() + b"\0" + p.read_bytes() for p in parts)
-    ).hexdigest()[:16]
-    root = Path(tempfile.gettempdir()) / f"rtes_manifest_fixture_{digest}"
-    in_dir = root / "in"
-    if not in_dir.is_dir():
-        tmp = Path(tempfile.mkdtemp(prefix="rtes_manifest_stage_"))
-        stage = tmp / "in"
-        stage.mkdir()
-        base = time.time() - len(parts)
-        for i, src in enumerate(parts):
-            dst = stage / src.name
-            shutil.copy(src, dst)
-            os.utime(dst, (base + i, base + i))
-        try:
-            os.rename(tmp, root)  # atomic publish; fails if root exists
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return str(in_dir)
-
-
 @register("manifest_admission_replay", _ORACLE, tags=("streaming", "sampling"))
 def manifest_admission_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The streaming manifest admission replayed over the committed
@@ -172,7 +142,7 @@ def manifest_admission_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import fixture_scale_shuffle
     from ..streaming.corpus_ingest import start_manifest_admission
 
-    src = _stage_fixture()
+    src = stage_files(FIXTURE_DIR)
     work = tempfile.mkdtemp(prefix="rtes_manifest_replay_")
     index = f"{work}/index"
     seed = spark.createDataFrame(

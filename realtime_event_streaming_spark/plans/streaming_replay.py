@@ -31,8 +31,6 @@ stronger per-operator evidence.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -41,39 +39,18 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import register
 from ..streaming.agg import EXACT_WATERMARK, minute_rollup_stream_exact
 from ..streaming.ingest import parse_clicks, read_json_file_stream
+from .staging import build_once, stage_files
 
 #: The committed wire fixture (see module doc). Resolved absolutely at
 #: import time so the oracle SQL is valid from any working directory.
+#: Spark's FileStreamSource orders files by modification time, and a
+#: git checkout gives every fixture file the same (or arbitrary) mtime,
+#: so each replay streams ``stage_files(FIXTURE_DIR)``: a content-keyed
+#: copy with strictly increasing mtimes in part order, shared by every
+#: replay of these bytes (tws_replay's session replay included).
 FIXTURE_DIR = (
     Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "replay_wire"
 )
-
-#: Staging dir for replay: Spark's FileStreamSource orders files by
-#: modification time, and a git checkout gives every fixture file the
-#: same (or arbitrary) mtime — so the committed files are copied here
-#: with strictly increasing mtimes in part-number order once per
-#: process. The _COMPLETE marker guards against a half-written dir.
-_FIXTURE_ROOT = Path(tempfile.gettempdir()) / "rtes_replay_fixture_v2"
-
-
-def _ensure_fixture(spark: SparkSession) -> str:
-    import os
-    import time
-
-    marker = _FIXTURE_ROOT / "_COMPLETE"
-    in_dir = _FIXTURE_ROOT / "in"
-    if not marker.exists():
-        shutil.rmtree(_FIXTURE_ROOT, ignore_errors=True)
-        in_dir.mkdir(parents=True)
-        parts = sorted(FIXTURE_DIR.glob("part-*.txt"))
-        base = time.time() - len(parts)
-        for i, src in enumerate(parts):
-            dst = in_dir / src.name
-            shutil.copy(src, dst)
-            os.utime(dst, (base + i, base + i))
-        marker.touch()
-    return str(in_dir)
-
 
 #: Batch twin of the replayed rollup over the SAME committed bytes.
 #: The 70 s delay is EXACT_WATERMARK (window length + reference
@@ -117,7 +94,7 @@ def streaming_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     match IS the stream==batch reconciliation at the value level."""
     from ..session import fixture_scale_shuffle
 
-    in_dir = _ensure_fixture(spark)
+    in_dir = stage_files(FIXTURE_DIR)
     name = "replay_rollup"
     if any(t.name == name for t in spark.catalog.listTables()):
         spark.catalog.dropTempView(name)
@@ -182,7 +159,7 @@ ORDER BY h.user_id, visit_ts, checkout_ts
 def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import fixture_scale_shuffle
 
-    in_dir = _ensure_fixture(spark)
+    in_dir = stage_files(FIXTURE_DIR)
     name = "attr_pairs"
     if any(t.name == name for t in spark.catalog.listTables()):
         spark.catalog.dropTempView(name)
@@ -257,43 +234,27 @@ stream_stream_attribution.__doc__ = """Stream-STREAM interval self-join over the
 # additive parts-store replay (SummingMergeTree insert path, driver-visible)
 # ---------------------------------------------------------------------------
 
-_PARTS_CACHE: dict[str, str] = {}
 
-
-def _ensure_parts_store(spark: SparkSession) -> str:
+def _build_parts_store(spark: SparkSession, src: str, out: str) -> None:
     """Replay the committed fixture through the ADDITIVE parts store
     (streaming/agg.write_rollup_parts: one stateless partial part per
-    micro-batch) and COMPACT it — once per process. The registered
-    query then reads the compacted store, so the driver's hash
-    covers the full insert -> merge-on-read -> compaction cycle."""
-    path = _PARTS_CACHE.get("parts")
-    if path and Path(path).is_dir():
-        return path
-    import atexit
-
+    micro-batch) and COMPACT it — once per process (``build_once``).
+    The registered query then reads the compacted store, so the
+    driver's hash covers the full insert -> merge-on-read -> compaction
+    cycle."""
+    from ..session import fixture_scale_shuffle
     from ..streaming.agg import compact_rollup_parts, write_rollup_parts
 
-    from ..session import fixture_scale_shuffle
-
-    in_dir = _ensure_fixture(spark)
-    out = tempfile.mkdtemp(prefix="rtes_replay_parts_")
-    try:
-        with fixture_scale_shuffle(spark):
-            stream = parse_clicks(read_json_file_stream(spark, in_dir))
-            q = write_rollup_parts(
-                stream,
-                f"{out}/parts",
-                f"{out}/ck",
-                trigger={"availableNow": True},
-            )
-            q.awaitTermination(300)
-        compact_rollup_parts(spark, f"{out}/parts")
-    except BaseException:
-        shutil.rmtree(out, ignore_errors=True)
-        raise
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    _PARTS_CACHE["parts"] = out
-    return out
+    with fixture_scale_shuffle(spark):
+        stream = parse_clicks(read_json_file_stream(spark, stage_files(src)))
+        q = write_rollup_parts(
+            stream,
+            f"{out}/parts",
+            f"{out}/ck",
+            trigger={"availableNow": True},
+        )
+        q.awaitTermination(300)
+    compact_rollup_parts(spark, f"{out}/parts")
 
 
 #: Oracle: exact per-(minute, country) counts over the same committed
@@ -335,12 +296,14 @@ def rollup_parts_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SummingMergeTree cycle: partial insert, additive merge,
     compaction — none of it disturbing the numbers. sf_dir is unused
     (the input is the engine's own committed wire format)."""
-    out = _ensure_parts_store(spark)
+    out = build_once(
+        spark, str(FIXTURE_DIR), "replay_parts", _build_parts_store
+    )
     from ..streaming.agg import read_rollup_parts
 
     merged = read_rollup_parts(spark, f"{out}/parts")
     batch = parse_clicks(
-        spark.read.format("text").load(_ensure_fixture(spark))
+        spark.read.format("text").load(stage_files(FIXTURE_DIR))
     )
     exact = batch.groupBy(
         F.expr("(unix_micros(ts) div 60000000)").alias("m_min"),
@@ -426,7 +389,7 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (committed fixture), not a warehouse table."""
     from ..session import fixture_scale_shuffle
 
-    in_dir = _ensure_fixture(spark)
+    in_dir = stage_files(FIXTURE_DIR)
     name = "replay_stream_dedup"
     if any(t.name == name for t in spark.catalog.listTables()):
         spark.catalog.dropTempView(name)

@@ -35,10 +35,7 @@ batch twin.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import tempfile
 import time
 from pathlib import Path
 
@@ -46,11 +43,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-
-#: Same committed fixture as streaming_rollup_replay.
-FIXTURE_DIR = (
-    Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "replay_wire"
-)
+from .staging import stage, stage_files
+from .streaming_replay import FIXTURE_DIR  # the same committed wire bytes
 
 #: 10 s rollup grain (see module doc) and the epoch-second split point
 #: between the two staged files (fixture midpoint): batch 1 carries
@@ -153,45 +147,35 @@ ORDER BY page, country, window_start
 
 def _stage_rollup_fixture() -> str:
     """Derive the 10 s rollup from the committed fixture and stage it
-    as TWO mtime-ordered parquet files (earlier windows first). Keyed
-    on a content digest of the fixture + the derivation parameters
-    (the manifest_replay staging discipline), built in a private
-    mkdtemp and published with an atomic rename."""
+    as TWO mtime-ordered parquet files (earlier windows first), keyed
+    on the fixture bytes and the derivation parameters
+    (``staging.stage``)."""
     import duckdb
 
-    parts = sorted(FIXTURE_DIR.glob("part-*.txt"))
-    digest = hashlib.md5(
-        b"".join(p.name.encode() + b"\0" + p.read_bytes() for p in parts)
-        + f"|grain={_GRAIN_S}|split={_SPLIT_EPOCH_S}|v1".encode()
-    ).hexdigest()[:16]
-    root = Path(tempfile.gettempdir()) / f"rtes_tws_rollup_{digest}"
-    in_dir = root / "in"
-    if not in_dir.is_dir():
-        tmp = Path(tempfile.mkdtemp(prefix="rtes_tws_stage_"))
-        stage = tmp / "in"
-        stage.mkdir()
-        con = duckdb.connect()
+    def _derive(dst: Path) -> None:
         base = time.time() - 2
-        for i, cond in enumerate(
-            (
-                f"bucket_s < {_SPLIT_EPOCH_S}",
-                f"bucket_s >= {_SPLIT_EPOCH_S}",
-            )
-        ):
-            dst = stage / f"part-{i:05d}.parquet"
-            con.sql(
-                f"COPY (SELECT window_start, window_end, page, country, "
-                f"cnt, unique_users FROM ({_ROLL_SQL}) WHERE {cond} "
-                f"ORDER BY page, country, window_start) "
-                f"TO '{dst}' (FORMAT PARQUET)"
-            )
-            os.utime(dst, (base + i, base + i))
-        con.close()
-        try:
-            os.rename(tmp, root)  # atomic publish; fails if root exists
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return str(in_dir)
+        with duckdb.connect() as con:
+            for i, cond in enumerate(
+                (
+                    f"bucket_s < {_SPLIT_EPOCH_S}",
+                    f"bucket_s >= {_SPLIT_EPOCH_S}",
+                )
+            ):
+                out = dst / f"part-{i:05d}.parquet"
+                con.sql(
+                    f"COPY (SELECT window_start, window_end, page, country, "
+                    f"cnt, unique_users FROM ({_ROLL_SQL}) WHERE {cond} "
+                    f"ORDER BY page, country, window_start) "
+                    f"TO '{out}' (FORMAT PARQUET)"
+                )
+                os.utime(out, (base + i, base + i))
+
+    return stage(
+        "tws_rollup",
+        sorted(FIXTURE_DIR.glob("part-*.txt")),
+        _derive,
+        params=f"grain={_GRAIN_S}|split={_SPLIT_EPOCH_S}",
+    )
 
 
 _ROCKSDB = (
@@ -317,36 +301,6 @@ ORDER BY s.user_id, s.session_start_ms
 """
 
 
-def _stage_wire_fixture() -> str:
-    """Stage the raw CLICK wire fixture files with strictly increasing
-    mtimes (FileStreamSource orders by mtime), content-digest-keyed
-    and atomically published — same discipline as
-    ``_stage_rollup_fixture`` but copying the committed bytes
-    verbatim (the session replay needs the raw events, not the
-    rollup)."""
-    parts = sorted(FIXTURE_DIR.glob("part-*.txt"))
-    digest = hashlib.md5(
-        b"".join(p.name.encode() + b"\0" + p.read_bytes() for p in parts)
-        + b"|wire-v1"
-    ).hexdigest()[:16]
-    root = Path(tempfile.gettempdir()) / f"rtes_tws_wire_{digest}"
-    in_dir = root / "in"
-    if not in_dir.is_dir():
-        tmp = Path(tempfile.mkdtemp(prefix="rtes_tws_wire_stage_"))
-        stage = tmp / "in"
-        stage.mkdir()
-        base = time.time() - len(parts)
-        for i, srcp in enumerate(parts):
-            dst = stage / srcp.name
-            shutil.copy(srcp, dst)
-            os.utime(dst, (base + i, base + i))
-        try:
-            os.rename(tmp, root)  # atomic publish; fails if root exists
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-    return str(in_dir)
-
-
 @register(
     "session_tws_replay", _SESSION_TWS_DUCK, tags=("streaming", "sessions")
 )
@@ -372,7 +326,7 @@ def session_tws_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import parse_clicks, read_json_file_stream
     from ..streaming.session_state import sessionize_clicks_tws
 
-    src = _stage_wire_fixture()
+    src = stage_files(FIXTURE_DIR)
     name = "session_tws_replay_out"
     if any(t.name == name for t in spark.catalog.listTables()):
         spark.catalog.dropTempView(name)

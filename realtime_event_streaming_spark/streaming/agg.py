@@ -267,7 +267,10 @@ def write_rollup(agg: DataFrame, path: str, checkpoint: str, trigger=None):
 # without any sink-side dedup state. Compaction must therefore only
 # fold parts whose batches can no longer replay (in production: older
 # than the checkpoint's committed offset horizon; tests compact after
-# the stream stops).
+# the stream stops). It folds into a hidden sibling of the store and
+# swaps it in with `io.replace_dir`, the same crash-safe rewrite as the
+# table compactions: the live store is set aside, never deleted, until
+# the folded one is in place.
 #
 # Distinct users cannot merge additively as counts — each part stores
 # a mergeable DataSketches HLL instead (the sound form of the
@@ -332,22 +335,24 @@ def compact_rollup_parts(spark: SparkSession, path: str) -> None:
     """Fold all parts into a single part (batch_id = -1), preserving
     merge-on-read semantics exactly (counters summed, sketches
     unioned — NOT estimated, so later parts keep merging losslessly).
-    Only run over batches that can no longer replay (see module
-    comment). The ClickHouse background-merge analogue; same
-    snapshot-swap discipline as io.compact_index_table."""
-    import shutil
-    import tempfile
+    Only run over batches that can no longer replay (see the comment
+    block above). The ClickHouse background-merge analogue, rewritten
+    in place through ``io.replace_dir``: a crash at any point leaves
+    the unfolded or the folded store readable at ``path``."""
+    from ..io import replace_dir
 
-    folded = (
-        spark.read.parquet(path)
-        .groupBy(*_PARTS_GRAIN)
-        .agg(
-            F.sum("cnt").cast("bigint").alias("cnt"),
-            F.expr("hll_union_agg(users_hll)").alias("users_hll"),
+    def _fold(tmp: str) -> None:
+        (
+            spark.read.parquet(path)
+            .groupBy(*_PARTS_GRAIN)
+            .agg(
+                F.sum("cnt").cast("bigint").alias("cnt"),
+                F.expr("hll_union_agg(users_hll)").alias("users_hll"),
+            )
+            .withColumn("batch_id", F.lit(-1))
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(tmp)
         )
-        .withColumn("batch_id", F.lit(-1))
-    )
-    tmp = tempfile.mkdtemp(prefix="rtes_rollup_compact_")
-    folded.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+
+    replace_dir(path, _fold)

@@ -111,7 +111,7 @@ def test_merge_appends_searchable_vectors_and_compaction_is_invisible(
     assert hits and all(r.cosine == 1.0 for r in hits if r.query_id == src)
     assert any(r.query_id == src for r in hits)
 
-    stats = compact_index_table(spark, f"{path}/postings", "cid")
+    stats = compact_index_table(spark, f"{path}/postings")
     assert stats["files_after"] < stats["files_before"]
     again = probe_ann_index(spark, path, _queries(spark)).collect()
     assert sorted(map(tuple, post)) == sorted(map(tuple, again))

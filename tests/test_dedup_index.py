@@ -96,9 +96,7 @@ def test_compact_reduces_files_and_preserves_probe(spark, tmp_path):
     before = sorted(
         map(tuple, probe_dedup_index(spark, path, probe).collect())
     )
-    stats_bands = compact_index_table(
-        spark, f"{path}/minhash_bands", "band_idx"
-    )
+    stats_bands = compact_index_table(spark, f"{path}/minhash_bands")
     stats_hash = compact_index_table(spark, f"{path}/content_hash")
     assert stats_bands["files_after"] < stats_bands["files_before"]
     assert stats_hash["files_after"] < stats_hash["files_before"]
@@ -356,3 +354,56 @@ def test_index_data_columns_do_not_depend_on_writer_options(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_compaction_keeps_a_two_column_layout(spark, tmp_path):
+    """`compact_index_table` rewrites a table under the partition
+    columns it finds on disk. The opt-in bucketed band layout is
+    partitioned by two columns; after a merge and a compaction it must
+    still be (no column may move into the data files), the cached read
+    must equal the inferred one, and the probe answer must not move."""
+    from realtime_event_streaming_spark.io import (
+        compact_index_table,
+        read_index_parquet,
+    )
+    from realtime_event_streaming_spark.operators.dedup import (
+        merge_dedup_index,
+    )
+
+    path = str(tmp_path / "index")
+    bands = f"{path}/minhash_bands"
+    write_dedup_index(spark, SF, path, bucket_bands=True)
+    merge_dedup_index(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(9200, " ".join(f"c0t{i}" for i in range(20)))],
+            "doc_id long, text string",
+        ),
+    )
+    docs = load_table(spark, SF, "documents")
+    batch = docs.where("doc_id = 42").select(
+        F.lit(9001).alias("doc_id"), "text"
+    ).unionByName(
+        spark.createDataFrame(
+            [(9300, " ".join(f"c0t{i}" for i in range(20)))],
+            "doc_id long, text string",
+        )
+    )
+    before = sorted(map(tuple, probe_dedup_index(spark, path, batch).collect()))
+    assert _partition_columns(bands) == {"band_idx", "hb"}
+
+    stats = compact_index_table(spark, bands)
+
+    assert stats["files_after"] <= stats["files_before"]
+    assert _partition_columns(bands) == {"band_idx", "hb"}
+    assert (
+        read_index_parquet(spark, bands).schema
+        == spark.read.parquet(bands).schema
+    )
+    after = sorted(map(tuple, probe_dedup_index(spark, path, batch).collect()))
+    assert after == before
+    assert {r[0]: r[1:] for r in after} == {
+        9001: (True, True),
+        9300: (True, True),
+    }

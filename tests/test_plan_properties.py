@@ -772,10 +772,10 @@ def test_rollup_upsert_merge_is_additive_and_reads_base(spark, reg):
     scan is no longer plan-visible — assert the artifact instead)."""
     import os
 
-    from realtime_event_streaming_spark.plans import index_queries as iq
+    from realtime_event_streaming_spark.plans import staging
 
     df = reg["update_rollup_incremental"].spark_fn(spark, SF)
-    base_path = iq._INDEX_CACHE[("rollup_base", SF)]
+    base_path = staging._CACHE[("rollup_base", SF)]
     assert any(
         f.endswith(".parquet")
         for f in os.listdir(os.path.join(base_path, "base"))

@@ -520,8 +520,9 @@ def test_stream_dedup_removes_exactly_the_redelivered_copies(spark):
     pipeline WITHOUT the dedup stage yields exactly 2x every row —
     proving the duplicates were really present and the dedup removed
     precisely them (not more, not less)."""
+    from realtime_event_streaming_spark.plans.staging import stage_files
     from realtime_event_streaming_spark.plans.streaming_replay import (
-        _ensure_fixture,
+        FIXTURE_DIR,
     )
     from realtime_event_streaming_spark.registry import load_all
     from realtime_event_streaming_spark.session import fixture_scale_shuffle
@@ -534,7 +535,7 @@ def test_stream_dedup_removes_exactly_the_redelivered_copies(spark):
     }
     assert deduped, "replay emitted no finalized windows"
 
-    in_dir = _ensure_fixture(spark)
+    in_dir = stage_files(FIXTURE_DIR)
     name = "replay_stream_dedup_off"
     if any(t.name == name for t in spark.catalog.listTables()):
         spark.catalog.dropTempView(name)

@@ -111,13 +111,13 @@ def read_index_parquet(spark: SparkSession, path: str) -> DataFrame:
     construction then runs zero inference jobs.
 
     Only the DATA columns are cached. The partition columns (``pt``,
-    ``cid``, ``band_idx``, ``hb``) are the table's layout, and Spark
+    ``cid``, ``band_idx``) are the table's layout, and Spark
     rediscovers them from the directory listing it makes on every read
     anyway, with the same inferred types (a ``bigint`` written
     partition column reads back ``int`` either way). A writer that
-    rewrites the path with another layout (``write_dedup_index``'s
-    ``bucket_bands``, a user's own ``DataFrameWriter``) therefore needs
-    no eviction: the next read sees the layout on disk. What the cache
+    rewrites the path with another layout (a user's own
+    ``DataFrameWriter.partitionBy``) therefore needs no eviction: the
+    next read sees the layout on disk. What the cache
     relies on is that a table's data columns do not depend on writer
     options (pinned by tests/test_dedup_index.py
     ::test_index_data_columns_do_not_depend_on_writer_options), and

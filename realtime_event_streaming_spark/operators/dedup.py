@@ -893,24 +893,7 @@ format_doc(dedup_incremental_minhash, mod=_INC_MH_PLANT_MOD)
 # ---------------------------------------------------------------------------
 
 
-#: Bucket count for the OPT-IN interactive band layout (see
-#: ``write_dedup_index(bucket_bands=True)``): ``hb = pmod(band_hash,
-#: this)`` becomes the second directory-partition column. One module
-#: constant, not stored metadata — the probe and merge derive the
-#: bucket from it, so it is a LAYOUT VERSION: changing it orphans
-#: existing bucketed indexes (rebuild them), exactly like changing
-#: ``_NSW_PARTS`` would for the NSW stores. At 10^9 docs raise it so
-#: a (band_idx, hb) leaf stays file-sized; the probe cost scales with
-#: probed buckets, not bucket count.
-DEDUP_BAND_BUCKETS = 64
-
-
-def write_dedup_index(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    bucket_bands: bool = False,
-) -> None:
+def write_dedup_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Materialize the corpus dedup index the in-query operators only
     simulate: ``content_hash/`` (doc_id, h — exact admission) and
     ``minhash_bands/`` (doc_id, band_idx, band_hash — fuzzy admission),
@@ -919,39 +902,19 @@ def write_dedup_index(
     the index is a small fraction of corpus bytes (32 B/doc + 8 band
     rows/doc) and the nightly cost becomes O(batch), not O(corpus).
     Bands are partitioned by band_idx so a probe prunes to its band's
-    files.
-
-    ``bucket_bands``: the SMALL-INTERACTIVE-BATCH layout option the
-    probe's scale note documents (round-14 verdict item 5, promoted
-    from documentation to code): adds ``hb = pmod(band_hash,
-    DEDUP_BAND_BUCKETS)`` as a second partition column, so a probe
-    whose batch is smaller than the bucket count prunes the band read
-    to the PRODUCT of its per-column value sets — n_bands band_idx
-    values x the batch's distinct hb values (Spark's partition
-    pruning filters each column independently; measured 112/512
-    leaves for a 2-doc batch) — the `write_nsw_index` store
-    discipline, with ``probe_dedup_index`` switching to a broadcast +
-    dynamic-partition-pruned join automatically when it sees the
-    column (runtime-pinned by
-    tests/test_dedup_index.py::test_bucketed_probe_partitions_read).
-    Default OFF: a nightly-sized batch saturates every bucket by
-    construction (8 bands x batch >> buckets), where this layout
-    prunes nothing and only multiplies small files."""
+    files. That is the only layout: a finer ``pmod(band_hash)``
+    sub-partitioning prunes nothing for a nightly-sized batch (8 bands
+    x batch >> buckets) and only multiplies small files, and a warm
+    read of the 512-leaf form once offered here cost 70-92 ms of
+    driver time against 9 ms for this one (PERF.md, "interactive
+    dedup-probe layout promoted to code")."""
     docs = load_table(spark, sf_dir, "documents")
     docs.select("doc_id", F.md5("text").alias("h")).write.mode(
         "overwrite"
     ).parquet(f"{path}/content_hash")
-    bands = band_table_of(signature_arrays_of(docs))
-    if bucket_bands:
-        bands.withColumn(
-            "hb", F.pmod(F.col("band_hash"), F.lit(DEDUP_BAND_BUCKETS))
-        ).write.mode("overwrite").partitionBy("band_idx", "hb").parquet(
-            f"{path}/minhash_bands"
-        )
-    else:
-        bands.write.mode("overwrite").partitionBy("band_idx").parquet(
-            f"{path}/minhash_bands"
-        )
+    band_table_of(signature_arrays_of(docs)).write.mode(
+        "overwrite"
+    ).partitionBy("band_idx").parquet(f"{path}/minhash_bands")
 
 
 def probe_dedup_index(
@@ -966,77 +929,26 @@ def probe_dedup_index(
 
     Scale note (what the probe reads): one pass over the INDEX tables
     (32 B + 8 band rows per corpus doc — a small fraction of corpus
-    bytes), never corpus text. For NIGHTLY-sized batches this is the
-    correct shape outright: a 10^5+-doc batch's bands hit every
-    band_hash bucket of any practical sub-partitioning (8 bands x
-    batch >> buckets), so a finer ``pmod(band_hash)`` directory layout
-    would prune nothing while multiplying small files — the index
-    read amortizes over the whole batch. Only a SMALL interactive
-    admission batch (say < buckets) benefits from band_hash
-    sub-partitioning + DPP (the `write_nsw_index` store discipline) —
-    that layout is ``write_dedup_index(bucket_bands=True)``, and this
-    probe detects it from the table schema and switches to the
-    broadcast + dynamic-partition-pruned join automatically; the
-    probe RESULT is identical under either layout (pinned by test)."""
+    bytes), never corpus text; the index read amortizes over the whole
+    batch."""
     hashes = read_index_parquet(spark, f"{path}/content_hash").select(
         F.col("h").alias("bh")
     ).distinct()
-    bands_tbl = read_index_parquet(spark, f"{path}/minhash_bands")
+    bands_idx = read_index_parquet(spark, f"{path}/minhash_bands").select(
+        "band_idx", "band_hash"
+    ).distinct()
     hashed = batch.select("doc_id", F.md5("text").alias("h"))
     exact = (
         hashed.join(hashes, hashed.h == hashes.bh, "left")
         .select("doc_id", F.col("bh").isNotNull().alias("exact_dup"))
     )
-    probe_bands = band_table_of(signature_arrays_of(batch))
-    if "hb" in bands_tbl.columns:
-        # bucketed (interactive) layout: broadcast the batch's bands
-        # carrying BOTH partition keys so the executed scan keeps
-        # dynamic-pruning filters and reads only the (band_idx, hb)
-        # leaves the batch hashes into. band_hash >= 0 is semantically
-        # free (band hashes are built from non-negative minhashes) but
-        # is the selective predicate the PartitionPruning rule wants
-        # on the filtering side; the checkpoint keeps any upstream
-        # shape (aggregates/windows in signature derivation) out of
-        # the DPP filtering side — the round-14 executed-DPP lesson.
-        pb = (
-            probe_bands.select(
-                "doc_id",
-                F.col("band_idx").alias("pband_idx"),
-                F.col("band_hash").alias("pband_hash"),
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-            # the selective predicate and partition-key derivation go
-            # ON TOP of the checkpoint: applied before it they vanish
-            # into the RDD scan and the PartitionPruning rule sees an
-            # unfiltered side (no subquery inserted at all)
-            .where(F.col("pband_hash") >= 0)
-            .withColumn(
-                "phb", F.pmod(F.col("pband_hash"), F.lit(DEDUP_BAND_BUCKETS))
-            )
-        )
-        bands_pt = bands_tbl.select("band_idx", "band_hash", "hb")
-        near = (
-            bands_pt.join(
-                F.broadcast(pb),
-                (bands_pt["band_idx"] == pb["pband_idx"])
-                & (bands_pt["hb"] == pb["phb"])
-                & (bands_pt["band_hash"] == pb["pband_hash"]),
-            )
-            .select("doc_id")
-            .distinct()
-            .withColumn("near_dup", F.lit(True))
-        )
-    else:
-        bands_idx = bands_tbl.select("band_idx", "band_hash").distinct()
-        near = (
-            probe_bands.join(
-                bands_idx, ["band_idx", "band_hash"], "left_semi"
-            )
-            .select("doc_id")
-            .distinct()
-            .withColumn("near_dup", F.lit(True))
-        )
+    near = (
+        band_table_of(signature_arrays_of(batch))
+        .join(bands_idx, ["band_idx", "band_hash"], "left_semi")
+        .select("doc_id")
+        .distinct()
+        .withColumn("near_dup", F.lit(True))
+    )
     return (
         exact.join(near, "doc_id", "left")
         .na.fill({"near_dup": False})
@@ -1056,31 +968,20 @@ def merge_dedup_index(
     merges compact).
 
     Appends are O(batch): one hash row and 8 band rows per admitted
-    doc, written into the same partition layout the probe prunes by.
-    Run ``io.compact_index_table`` periodically to fold the per-batch
-    file sets into per-partition files (the background-merge step).
-    ``probe_dedup_index`` needs no change: it reads whatever state the
-    index tables hold, and its DISTINCT on the hash/band sets makes
-    re-admitting an already-indexed doc idempotent for probe results.
-    The append preserves the index's OWN band layout (detected from
-    the table schema): a ``bucket_bands=True`` index keeps its
-    (band_idx, hb) partitioning across merges, so the interactive
-    probe's pruning never silently degrades after maintenance."""
+    doc, written into the band_idx partition layout the probe prunes
+    by. Run ``io.compact_index_table`` periodically to fold the
+    per-batch file sets into per-partition files (the background-merge
+    step). ``probe_dedup_index`` needs no change: it reads whatever
+    state the index tables hold, and its DISTINCT on the hash/band sets
+    makes re-admitting an already-indexed doc idempotent for probe
+    results."""
     batch = batch.localCheckpoint(eager=False)
     batch.select("doc_id", F.md5("text").alias("h")).write.mode(
         "append"
     ).parquet(f"{path}/content_hash")
-    bands = band_table_of(signature_arrays_of(batch))
-    if "hb" in read_index_parquet(spark, f"{path}/minhash_bands").columns:
-        bands.withColumn(
-            "hb", F.pmod(F.col("band_hash"), F.lit(DEDUP_BAND_BUCKETS))
-        ).write.mode("append").partitionBy("band_idx", "hb").parquet(
-            f"{path}/minhash_bands"
-        )
-    else:
-        bands.write.mode("append").partitionBy("band_idx").parquet(
-            f"{path}/minhash_bands"
-        )
+    band_table_of(signature_arrays_of(batch)).write.mode(
+        "append"
+    ).partitionBy("band_idx").parquet(f"{path}/minhash_bands")
 
 
 # ---------------------------------------------------------------------------

@@ -2506,11 +2506,11 @@ _NSW_M = 8
 _NSW_B = 64
 #: unrolled greedy hops
 _NSW_H = 6
-#: partitions per checkpointed scored hop in the SERVING path — the
-#: hop frame is O(queries x B x (degree + strides)) rows regardless
-#: of corpus size, so a small constant is scale-safe; without it each
-#: hop inherits the store scan's ~30 pruned partitions and H hops
-#: leak ~180 near-empty partitions into every downstream stage.
+#: partitions per checkpointed scored hop — the hop frame is
+#: O(queries x B x (degree + strides)) rows regardless of corpus size,
+#: so a small constant is scale-safe; without it each hop inherits the
+#: store scan's ~30 pruned partitions and H hops leak ~180 near-empty
+#: partitions into every downstream stage.
 #: Pinned at 1 (round 14): a single-partition checkpoint reports
 #: SinglePartition, which satisfies the next hop's window
 #: ClusteredDistribution outright — the per-hop row_number exchange
@@ -2521,14 +2521,6 @@ _NSW_H = 6
 #: larger serving batch shards the query panel across probe calls
 #: (the same bound that governs the broadcast probe sides).
 _NSW_SC_PARTS = 1
-#: ...and in the IN-MEMORY path (store=None, the self-contained
-#: correctness form), where each hop's scoring join runs against the
-#: FULL checkpointed vector table: the pre-checkpoint coalesce
-#: propagates into that corpus-sized join, so collapsing it to one
-#: task would serialize the hop's real work at the in-memory path's
-#: own 100x point (round-14 self-review). Kept at the round-13 value;
-#: the serving path is where the tiny-job shave applies.
-_NSW_SC_PARTS_INMEM = 4
 #: long-link strides: +/- powers of two over the id space (Kleinberg
 #: small-world routing — any id is reachable in O(log n) hops)
 _NSW_STEPS = tuple(2**j for j in range(20))
@@ -2726,10 +2718,10 @@ def _nsw_edge_lookup(frontier: DataFrame, near: DataFrame) -> DataFrame:
     """One beam hop's frontier->out-edges lookup against the
     pt-partitioned near-link table — the edge-side twin of
     ``_nsw_store_lookup`` (same broadcast + selective-predicate shape,
-    same dynamicpruning subquery on the scan), so the EDGE table is
-    never cached whole either: a hop reads only the pmod(src)
-    partitions its <= B frontier nodes live in. ``near`` must carry
-    (src, dst, pt)."""
+    same dynamicpruning subquery on the scan), so a served index's
+    EDGE table is never cached whole either: a hop reads only the
+    pmod(src) partitions its <= B frontier nodes live in. ``near``
+    must carry (src, dst, pt)."""
     fp = (
         frontier.where("node >= 0")
         .selectExpr("query_id", "node", f"pmod(node, {_NSW_PARTS}) AS qpt")
@@ -2854,25 +2846,28 @@ def _fast_hop_planning(spark: SparkSession):
 
 def nsw_beam(
     qs: DataFrame,
-    vecs: DataFrame | None,
     near: DataFrame,
-    store: DataFrame | None = None,
+    store: DataFrame,
     beam_width: int | None = None,
     n_shards: int = 1,
 ) -> DataFrame:
     """Greedy beam search over the NSW near-link table: H hops from
     entry node(s) ``0 .. n_shards - 1``; returns every (query_id,
     shard, node, score) the search EVALUATED (the pool a top-k draws
-    from). ``qs`` carries (query_id, qv, qnorm); ``vecs`` (vec_id, v,
-    norm); ``near`` the stored (src, dst) near links, built by
-    `nsw_near_links` with the same ``n_shards``. Long-link candidates
-    are generated ARITHMETICALLY from the frontier (node +/- S x 2^j —
-    identical to joining a materialized long-link table, since a
-    dangling target drops at the scoring join, but O(frontier)
-    instead of O(corpus) per hop: the sf10 measurement caught the
-    corpus-sized derive+distinct costing 66 s/probe at 200k vectors).
-    Each hop is localCheckpointed — hop h's plan references hop h-1,
-    and Catalyst inlines, so an unchained plan is exponential in H.
+    from). ``qs`` carries (query_id, qv, qnorm); ``near`` the (src,
+    dst, pt) near links, built by `nsw_near_links` with the same
+    ``n_shards``; ``store`` the (node_id, nv, nn, pt) vector store,
+    ``pt = pmod(id, _NSW_PARTS)`` (`_nsw_pt`) on both. The served
+    probes pass the tables ``write_nsw_index`` wrote; the inline
+    queries pass the same shape built and checkpointed from the
+    vectors (`_nsw_inline_graph`). Long-link candidates are generated
+    ARITHMETICALLY from the frontier (node +/- S x 2^j — identical to
+    joining a materialized long-link table, since a dangling target
+    drops at the scoring join, but O(frontier) instead of O(corpus)
+    per hop: the sf10 measurement caught the corpus-sized
+    derive+distinct costing 66 s/probe at 200k vectors). Each hop is
+    localCheckpointed — hop h's plan references hop h-1, and Catalyst
+    inlines, so an unchained plan is exponential in H.
 
     Shards: ``shard = node % S``. Strides are multiples of S and
     stored edges are intra-shard, so every candidate stays in its
@@ -2885,43 +2880,30 @@ def nsw_beam(
     ``beam_width`` is per shard; the default ``_NSW_B // S`` spends
     the flat contract budget across the shards (budget-fair).
 
-    ``store``: the MATERIALIZED vector store written by
-    ``write_nsw_index`` ((node_id, nv, nn) partitioned by
-    ``pt = pmod(node_id, _NSW_PARTS)``). When given, ``vecs`` is
-    ignored, ``near`` must carry its ``pt`` column, and each hop's
-    lookups — frontier->edges AND candidates->vectors — join their
-    pt-partitioned table with the probe side broadcast, so Spark
-    inserts a dynamic-partition-pruning subquery on each scan and a
-    hop reads ONLY the partitions its frontier nodes / candidates
-    land in, never the corpus and never the full edge set. Each
-    hop's FRONTIER is also checkpointed (after its top-B window):
-    Spark drops a DPP filter from the executed plan when the
-    filtering side contains a Window operator, so an uncheckpointed
-    frontier silently degrades every hop after the first to a
-    full-table read (measured round 14; pinned by
-    test_nsw_probe_hops_keep_dpp). This is the serving-path answer to
-    the residual 100x-scale cost (the in-memory checkpoints below are
-    the self-contained-plan answer and cap at executor memory; their
-    pre-checkpoint coalesce caps each hop's corpus-wide scoring join
-    at _NSW_SC_PARTS_INMEM tasks — acceptable for the bounded
-    correctness form, and the serving path is the one that scales).
+    Each hop's lookups — frontier->edges AND candidates->vectors —
+    join their pt-partitioned table with the probe side broadcast, so
+    over a parquet table Spark inserts a dynamic-partition-pruning
+    subquery on each scan and a hop reads ONLY the partitions its
+    frontier nodes / candidates land in, never the corpus and never
+    the full edge set (over the inline checkpointed tables the same
+    broadcast join streams the cached blocks). Each hop's FRONTIER is
+    also checkpointed (after its top-B window): Spark drops a DPP
+    filter from the executed plan when the filtering side contains a
+    Window operator, so an uncheckpointed frontier silently degrades
+    every hop after the first to a full-table read (measured round
+    14; pinned by test_nsw_probe_hops_keep_dpp).
 
-    Laziness caveat: CONSTRUCTING the serving-path DataFrame stages
-    and executes the hop chain (the per-hop checkpoints are eager so
-    each hop's partition-pruned scan runs at its own parallel width
-    rather than serialized through its first consumer); only the
-    final top-k aggregation stays lazy. (With AQE pinned off in the
-    hop scope — see _FAST_HOP_CONFS — the lazy frontier checkpoints
-    genuinely defer until first consumed by the next hop's broadcast
-    build; the eager per-hop checkpoints are what stage the chain.)
-    The _fast_hop_planning conf pin therefore spans hop execution,
-    not just planning: co-tenant callers use the newSession() recipe
-    in the README."""
-    if store is None and vecs is None:
-        raise ValueError(
-            "nsw_beam needs a scoring side: pass vecs (in-memory path) "
-            "or store (materialized serving path)"
-        )
+    Laziness caveat: CONSTRUCTING the DataFrame stages and executes
+    the hop chain (the per-hop checkpoints are eager so each hop's
+    scan runs at its own parallel width rather than serialized
+    through its first consumer); only the final top-k aggregation
+    stays lazy. (With AQE pinned off in the hop scope — see
+    _FAST_HOP_CONFS — the lazy frontier checkpoints genuinely defer
+    until first consumed by the next hop's broadcast build; the eager
+    per-hop checkpoints are what stage the chain.) The
+    _fast_hop_planning conf pin therefore spans hop execution, not
+    just planning: co-tenant callers use the newSession() recipe in
+    the README."""
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     # beam_width=0 must be rejected, not silently mapped to the
@@ -2933,25 +2915,11 @@ def nsw_beam(
     # scoring join, and without this each of the H broadcasts re-runs
     # qs's upstream plan (a parquet scan per hop in the serving path —
     # measured ~1.5 s of the contract-scale probe; the panel is the
-    # serving batch, bounded by construction). coalesce(1) only in the
-    # serving path, where the panel scan is predicate-pruned to the
-    # batch: in the in-memory path the panel is filtered out of the
-    # FULL vector table, and a pre-checkpoint coalesce would fold that
-    # corpus-sized scan into one task (round-13 ADVICE).
-    if store is not None:
-        qs = qs.coalesce(1)
-    qs = qs.localCheckpoint(eager=False)
-    if store is None:
-        # checkpoint the scoring side ONCE: every hop joins candidates
-        # against it, and without the checkpoint each hop re-scans the
-        # full vector table (measured 24.8 s -> 9.7 s per probe at
-        # 200k vectors; the store path above replaces the scan with
-        # partition-pruned lookups)
-        nodes = vecs.select(
-            F.col("vec_id").alias("node_id"),
-            F.col("v").alias("nv"),
-            F.col("norm").alias("nn"),
-        ).localCheckpoint(eager=False)
+    # serving batch, bounded by construction, so one task computes it.
+    # The inline queries filter their panel out of the vector table,
+    # so there that one task also scans it: they are the bounded
+    # correctness form, and the served probe is the one that scales)
+    qs = qs.coalesce(1).localCheckpoint(eager=False)
     # per-hop frames are built from PRE-FORMATTED expression strings /
     # hoisted Column objects (round-16; the round-15 signature-codegen
     # technique): the loop constructs ~6x per probe and every Column
@@ -2980,114 +2948,81 @@ def nsw_beam(
     # pin the hop-scope confs on EVERY session involved in the hop
     # plans, not just the panel's: each hop DataFrame plans under its
     # own session (a join inherits the LEFT operand's — the store/near
-    # side in serving mode), so a caller following the
-    # newSession()-per-probe co-tenancy recipe with a panel built on a
-    # sibling session would otherwise pin the flags on the wrong one
-    # (round-14 self-review). The guard depth-counts per JVM session,
-    # so duplicate wrappers of one session just nest.
-    sessions = {qs.sparkSession}
-    sessions.add(
-        (store if store is not None else nodes).sparkSession
-    )
-    sessions.add(near.sparkSession)
+    # side), so a caller following the newSession()-per-probe
+    # co-tenancy recipe with a panel built on a sibling session would
+    # otherwise pin the flags on the wrong one (round-14 self-review).
+    # The guard depth-counts per JVM session, so duplicate wrappers of
+    # one session just nest.
+    sessions = {qs.sparkSession, store.sparkSession, near.sparkSession}
     with ExitStack() as stack:
         for sess in sessions:
             stack.enter_context(_fast_hop_planning(sess))
         for hop in range(_NSW_H):
-            if store is None:
-                hops = frontier.join(
-                    near, frontier.node == near.src
-                ).select("query_id", F.col("dst").alias("node"))
-            else:
-                hops = _nsw_edge_lookup(frontier, near)
+            hops = _nsw_edge_lookup(frontier, near)
             longc = frontier.selectExpr("query_id", longc_sql)
-            cand = hops.union(longc).union(frontier)
-            if store is not None:
-                # coalesce(1) BEFORE the dedup: the union is bounded by
-                # the serving batch (queries x B x (degree + strides)),
-                # and a SinglePartition child satisfies the distinct's
-                # ClusteredDistribution — no exchange, no AQE
-                # stage-job, the hop's whole candidate derivation runs
-                # as one task inside the store-lookup broadcast job
-                # (round-14 profile: the per-hop tiny-job tax, 7
-                # jobs/hop, was the probe's residual cost)
-                cand = cand.coalesce(1)
-            cand = cand.distinct()
-            if store is None:
-                looked = cand.join(nodes, cand.node == nodes.node_id)
-            else:
-                looked = _nsw_store_lookup(cand, store)
-            sc = looked.join(F.broadcast(qs), "query_id").selectExpr(
-                "query_id", shard_sql, "node", score_sql
+            # coalesce(1) BEFORE the dedup: the union is bounded by the
+            # serving batch (queries x B x (degree + strides)), and a
+            # SinglePartition child satisfies the distinct's
+            # ClusteredDistribution — no exchange, no AQE stage-job,
+            # the hop's whole candidate derivation runs as one task
+            # inside the store-lookup broadcast job (round-14 profile:
+            # the per-hop tiny-job tax, 7 jobs/hop, was the probe's
+            # residual cost)
+            cand = hops.union(longc).union(frontier).coalesce(1).distinct()
+            sc = (
+                _nsw_store_lookup(cand, store)
+                .join(F.broadcast(qs), "query_id")
+                .selectExpr("query_id", shard_sql, "node", score_sql)
             )
-            if store is not None:
-                # SERVING path: checkpoint EAGERLY at the scan's own
-                # (partition-pruned) width, then coalesce the cached
-                # result to one partition for the planner.
-                # - eager, natural width: the hop's scan+score work is
-                #   bounded by candidate PARTITIONS x partition size,
-                #   which grows with the corpus — a pre-checkpoint
-                #   coalesce(1) would serialize it through the first
-                #   consumer's single task (measured at 200k: the lazy
-                #   single-partition shape cost ~1 s/hop of serial
-                #   scan; contract scale hid it). Eager keeps that
-                #   pass parallel and every later consumer reads the
-                #   cached blocks.
-                # - post-checkpoint coalesce(1): the CACHED hop frame
-                #   is O(queries x B x (degree + strides)) rows — the
-                #   SERVING BATCH, never the corpus — and a
-                #   SinglePartition child satisfies the next window's
-                #   ClusteredDistribution, erasing the per-hop
-                #   row_number exchange and its AQE stage-job
-                #   (round-14 profile: the tiny-job tax was the
-                #   probe's residual cost). Without it the hop's ~30
-                #   pruned partitions leak into every downstream
-                #   stage (H hops -> ~180 near-empty partitions,
-                #   measured 29 s of executor task-launch tax at
-                #   contract scale in round 13).
-                sc = sc.localCheckpoint(eager=True).coalesce(
-                    _NSW_SC_PARTS
-                )
-            else:
-                # IN-MEMORY path (round-13 shape): lazy checkpoint at
-                # a small fixed width — the pre-checkpoint coalesce
-                # propagates into the hop's corpus-sized scoring join,
-                # so it must stay >1 to keep that join parallel.
-                sc = sc.coalesce(_NSW_SC_PARTS_INMEM).localCheckpoint(
-                    eager=False
-                )
+            # checkpoint EAGERLY at the scan's own width, then coalesce
+            # the cached result to one partition for the planner.
+            # - eager, natural width: the hop's scan+score work is
+            #   bounded by candidate PARTITIONS x partition size, which
+            #   grows with the corpus — a pre-checkpoint coalesce(1)
+            #   would serialize it through the first consumer's single
+            #   task (measured at 200k: the lazy single-partition shape
+            #   cost ~1 s/hop of serial scan; contract scale hid it).
+            #   Eager keeps that pass parallel and every later consumer
+            #   reads the cached blocks.
+            # - post-checkpoint coalesce(1): the CACHED hop frame is
+            #   O(queries x B x (degree + strides)) rows — the SERVING
+            #   BATCH, never the corpus — and a SinglePartition child
+            #   satisfies the next window's ClusteredDistribution,
+            #   erasing the per-hop row_number exchange and its AQE
+            #   stage-job (round-14 profile: the tiny-job tax was the
+            #   probe's residual cost). Without it the hop's ~30
+            #   pruned partitions leak into every downstream stage (H
+            #   hops -> ~180 near-empty partitions, measured 29 s of
+            #   executor task-launch tax at contract scale in round
+            #   13).
+            sc = sc.localCheckpoint(eager=True).coalesce(_NSW_SC_PARTS)
             visited = sc if visited is None else visited.union(sc)
             if hop == _NSW_H - 1:
                 # the last hop's frontier is never consumed — skip its
-                # derivation (and in the serving path the checkpoint's
-                # eager plan build, the very cost this shave targets)
+                # derivation (and the checkpoint's eager plan build)
                 break
+            # checkpoint the frontier AFTER the top-B window: a Window
+            # operator anywhere in a DPP filtering side makes Spark
+            # drop the dynamic-pruning filter from the EXECUTED plan
+            # (measured round 14: the isolated window-shaped lookup
+            # reads all _NSW_PARTS partitions under every conf
+            # combination, parquet- or RDD-backed alike, while the
+            # same frontier checkpointed after the window prunes), so
+            # without this every hop after the first silently scanned
+            # the corpus-sized store and edge tables whole. The
+            # checkpoint also computes the top-B selection once per hop
+            # instead of once per consumer (edge lookup, strides,
+            # candidate union). Frontier is <= queries x B rows —
+            # serving-batch bounded; the post-checkpoint coalesce
+            # restores SinglePartition to the planner (same
+            # AQE-lazy-checkpoint caveat as sc above).
             frontier = (
                 sc.withColumn("rn", rn_col)
                 .where(f"rn <= {beam}")
                 .select("query_id", "node")
+                .localCheckpoint(eager=False)
+                .coalesce(_NSW_SC_PARTS)
             )
-            if store is not None:
-                # checkpoint the frontier AFTER the top-B window: a
-                # Window operator anywhere in a DPP filtering side
-                # makes Spark drop the dynamic-pruning filter from the
-                # EXECUTED plan (measured round 14: the isolated
-                # window-shaped lookup reads all _NSW_PARTS partitions
-                # under every conf combination, parquet- or
-                # RDD-backed alike, while the same frontier
-                # checkpointed after the window prunes), so without
-                # this every hop after the first silently scanned the
-                # corpus-sized store and edge tables whole — the exact
-                # shape the serving path exists to avoid. The
-                # checkpoint also computes the top-B selection once
-                # per hop instead of once per consumer (edge lookup,
-                # strides, candidate union). Frontier is <= queries x
-                # B rows — serving-batch bounded; the post-checkpoint
-                # coalesce restores SinglePartition to the planner
-                # (same AQE-lazy-checkpoint caveat as sc above).
-                frontier = frontier.localCheckpoint(eager=False).coalesce(
-                    _NSW_SC_PARTS
-                )
     return visited.distinct()
 
 
@@ -3119,15 +3054,37 @@ def _nsw_topk(visited: DataFrame) -> DataFrame:
     )
 
 
+def _nsw_inline_graph(
+    vecs: DataFrame, n_shards: int = 1
+) -> tuple[DataFrame, DataFrame]:
+    """The (store, near) pair ``write_nsw_index`` would write for
+    ``vecs``, checkpointed instead of written: the (node_id, nv, nn,
+    pt) vector store and the (src, dst, pt) near links, both keyed by
+    `_nsw_pt`. The inline queries search it with the served
+    `nsw_beam`; build it once per query and share it across beams."""
+    store = vecs.select(
+        F.col("vec_id").alias("node_id"),
+        F.col("v").alias("nv"),
+        F.col("norm").alias("nn"),
+        _nsw_pt("vec_id").alias("pt"),
+    ).localCheckpoint(eager=False)
+    near = (
+        nsw_near_links(vecs, n_shards)
+        .withColumn("pt", _nsw_pt())
+        .localCheckpoint(eager=False)
+    )
+    return store, near
+
+
 def _nsw_visited(
     spark: SparkSession, sf_dir: str, n_shards: int = 1
 ) -> DataFrame:
-    """Build the NSW near links inline and run the query panel's beam
-    search (the self-contained correctness form; `graph_ann_serve` /
+    """Build the NSW graph inline and run the query panel's beam search
+    (the self-contained correctness form; `graph_ann_serve` /
     `graph_ann_sharded_serve` are the materialized serving twins)."""
     vecs = _vectors(spark, sf_dir)
-    near = nsw_near_links(vecs, n_shards).localCheckpoint(eager=False)
-    return nsw_beam(_nsw_panel(vecs), vecs, near, n_shards=n_shards)
+    store, near = _nsw_inline_graph(vecs, n_shards)
+    return nsw_beam(_nsw_panel(vecs), near, store, n_shards=n_shards)
 
 
 @register("graph_ann_beam", _GRAPH_ANN_DUCK, tags=("similarity", "retrieval"))
@@ -3314,13 +3271,13 @@ ORDER BY beam_width
 )
 def graph_beam_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
-    near = nsw_near_links(vecs).localCheckpoint(eager=False)
+    store, near = _nsw_inline_graph(vecs)
     qs = _nsw_panel(vecs)
     # one exact arm feeds every width's recall join
     exact = _nsw_exact(vecs, qs).localCheckpoint(eager=False)
     arms = []
     for b in _BCURVE_WIDTHS:
-        got = _nsw_topk(nsw_beam(qs, vecs, near, beam_width=b)).select(
+        got = _nsw_topk(nsw_beam(qs, near, store, beam_width=b)).select(
             "query_id", "neighbor_id"
         )
         arms.append(
@@ -3746,7 +3703,7 @@ def merge_nsw_index(
         F.desc("score"), F.col("node")
     )
     top = (
-        nsw_beam(bqs, None, near_pt, store=store)
+        nsw_beam(bqs, near_pt, store)
         .where(F.col("node") != F.col("query_id"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= _NSW_M)
@@ -3856,7 +3813,6 @@ def merge_nsw_index(
 def probe_nsw_index(
     spark: SparkSession,
     path: str,
-    vecs: DataFrame | None,
     queries: DataFrame,
     beam_width: int | str | None = None,
     n_shards: int = 1,
@@ -3864,14 +3820,14 @@ def probe_nsw_index(
     """Beam-search the materialized graph: stored near links + long
     links derived arithmetically from the beam frontier (O(frontier)
     per hop — the sf10 measurement caught the corpus-sized long-link
-    derive costing 66 s/probe at 200k vectors before this). ``vecs``
-    carries (vec_id, v, norm) for every live vector — or ``None`` to
-    look candidates up in the index's OWN pt-partitioned vector store
-    (``{path}/vecs``, maintained by write/merge), where each hop's
-    scoring join is dynamic-partition-pruned to the partitions the
-    frontier's candidates land in instead of scanning (or caching)
-    the corpus — the serving mode. ``queries`` carries (query_id, qv,
-    qnorm). Returns (query_id, rank, neighbor_id, cosine) top-k.
+    derive costing 66 s/probe at 200k vectors before this).
+    Candidates are looked up in the index's OWN pt-partitioned vector
+    store (``{path}/vecs``, maintained by write/merge): BOTH index
+    tables stay on disk, and each hop's edge and scoring joins are
+    dynamic-partition-pruned to the partitions the frontier and its
+    candidates land in — no corpus-sized scan or cache on either
+    side. ``queries`` carries (query_id, qv, qnorm). Returns
+    (query_id, rank, neighbor_id, cosine) top-k.
 
     ``n_shards`` must match the index's (`write_nsw_index`): all S
     shards advance in one hop loop and their disjoint visited sets
@@ -3891,27 +3847,14 @@ def probe_nsw_index(
     if beam_width == "per-shard-rule":
         n = read_index_parquet(spark, f"{path}/vecs").count()
         beam_width = nsw_beam_width_for(n, n_shards=n_shards)
-    store = None
-    if vecs is None:
-        # serving mode: BOTH index tables stay on disk and every hop
-        # reads only the partitions its frontier/candidates land in —
-        # no corpus-sized cache on the vector OR the edge side
-        near = read_index_parquet(spark, f"{path}/near").select(
-            "src", "dst", "pt"
-        )
-        store = _read_nsw_store(spark, path)
-    else:
-        near = (
-            read_index_parquet(spark, f"{path}/near")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
+    near = read_index_parquet(spark, f"{path}/near").select(
+        "src", "dst", "pt"
+    )
     return _nsw_topk(
         nsw_beam(
             queries,
-            vecs,
             near,
-            store=store,
+            _read_nsw_store(spark, path),
             beam_width=beam_width,
             n_shards=n_shards,
         )

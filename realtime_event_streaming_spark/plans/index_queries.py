@@ -1175,15 +1175,11 @@ ORDER BY phase, query_id, rank
 def update_nsw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = build_once(spark, sf_dir, "nsw_maint", _build_nsw_maint)
     qs = _nsw_panel(_vectors(spark, sf_dir))
-    # vecs=None: both probes look candidates up in each index's OWN
-    # pt-partitioned vector store (write_nsw_index seeds it, the merge
-    # appends the batch), so every hop is a dynamic-partition-pruned
-    # lookup — the serving path, not a corpus cache
     pre = probe_nsw_index(
-        spark, f"{path}/base", None, qs
+        spark, f"{path}/base", qs
     ).withColumn("phase", F.lit("pre_merge"))
     post = probe_nsw_index(
-        spark, f"{path}/merged", None, qs
+        spark, f"{path}/merged", qs
     ).withColumn("phase", F.lit("post_merge"))
     return (
         pre.unionByName(post)
@@ -1265,7 +1261,7 @@ def graph_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = build_once(spark, sf_dir, "nsw_base", _build_nsw_base)
     qs = _nsw_panel(_vectors(spark, sf_dir))
     return probe_nsw_index(
-        spark, f"{path}/base", None, qs
+        spark, f"{path}/base", qs
     ).orderBy("query_id", "rank")
 graph_ann_serve.__doc__ = """The graph-ANN SERVING read — `pq_rerank_serve`'s discipline for
     the NSW stack: beam-search the query panel against the
@@ -1333,7 +1329,7 @@ def graph_ann_sharded_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = build_once(spark, sf_dir, "nsw_sharded_base", _build_nsw_sharded_base)
     qs = _nsw_panel(_vectors(spark, sf_dir))
     return probe_nsw_index(
-        spark, f"{path}/base", None, qs, n_shards=_NSW_SHARDS
+        spark, f"{path}/base", qs, n_shards=_NSW_SHARDS
     ).orderBy("query_id", "rank")
 graph_ann_sharded_serve.__doc__ = """The SHARDED graph-ANN serving read — `graph_ann_serve`'s
     code with ``n_shards={s}``, the materialized form of

@@ -262,7 +262,7 @@ def run_sharded(spark, sf_dir: str, truth: dict[int, set[int]]) -> None:
             got: dict[int, set[int]] = {}
             t0 = time.perf_counter()
             for r in probe_nsw_index(
-                spark, idx, None, qs, beam_width=b, n_shards=N_SHARDS
+                spark, idx, qs, beam_width=b, n_shards=N_SHARDS
             ).collect():
                 got.setdefault(r.query_id, set()).add(r.neighbor_id)
             walls[str(b)] = round(time.perf_counter() - t0, 1)
@@ -318,7 +318,7 @@ def main() -> None:
         for b in beams:
             got: dict[int, set[int]] = {}
             for r in probe_nsw_index(
-                spark, idx, None, qs, beam_width=b
+                spark, idx, qs, beam_width=b
             ).collect():
                 got.setdefault(r.query_id, set()).add(r.neighbor_id)
             recalls[str(b)] = mean_recall(got, truth)

@@ -110,11 +110,11 @@ def main() -> None:
         fq = _qs(spark, flat_dir)
         sq = _qs(spark, SF_DIR)
         flat_med, flat_walls, flat_steals = _timed(
-            lambda: probe_nsw_index(spark, flat_path, None, fq)
+            lambda: probe_nsw_index(spark, flat_path, fq)
         )
         shard_med, shard_walls, shard_steals = _timed(
             lambda: probe_nsw_index(
-                spark, shard_path, None, sq, n_shards=_NSW_SHARDS
+                spark, shard_path, sq, n_shards=_NSW_SHARDS
             )
         )
         print(

@@ -303,12 +303,17 @@ def test_nsw_merge_keeps_prior_merge_edges_and_is_store_consistent(
 
 @pytest.mark.parametrize("n_shards", [1, 4])
 def test_nsw_store_probe_matches_inmemory(spark, tmp_path, n_shards):
-    """probe_nsw_index(vecs=None) serves from the index's OWN
-    pt-partitioned vector store and must return exactly the in-memory
-    path's answer — materialization changes WHERE the lookup happens,
-    never the result — for the flat graph and the sharded one."""
+    """The inline search (`_nsw_visited`: the graph built and
+    checkpointed in memory) and `probe_nsw_index` over a
+    `write_nsw_index` of the same graph run the same `nsw_beam` and
+    must return exactly the same rows — materialization changes WHERE
+    the lookup happens, never the result — for the flat graph and the
+    sharded one."""
     from realtime_event_streaming_spark.operators.similarity import (
         LSH_BITS,
+        _nsw_panel,
+        _nsw_topk,
+        _nsw_visited,
         _vectors,
         probe_nsw_index,
         write_nsw_index,
@@ -316,19 +321,12 @@ def test_nsw_store_probe_matches_inmemory(spark, tmp_path, n_shards):
 
     path = str(tmp_path / "nsw_store")
     write_nsw_index(spark, SF, path, bucket_bits=LSH_BITS, n_shards=n_shards)
-    vecs = _vectors(spark, SF)
-    qs = vecs.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    mem = probe_nsw_index(
-        spark, path, vecs.select("vec_id", "v", "norm"), qs, n_shards=n_shards
-    )
-    srv = probe_nsw_index(spark, path, None, qs, n_shards=n_shards)
-    assert sorted(map(tuple, mem.collect())) == sorted(
-        map(tuple, srv.collect())
-    )
+    qs = _nsw_panel(_vectors(spark, SF))
+    mem = _nsw_topk(_nsw_visited(spark, SF, n_shards))
+    srv = probe_nsw_index(spark, path, qs, n_shards=n_shards)
+    mem_rows = sorted(map(tuple, mem.collect()))
+    assert mem_rows
+    assert mem_rows == sorted(map(tuple, srv.collect()))
 
 
 def test_nsw_store_probe_partition_pruned(spark, tmp_path):
@@ -556,13 +554,13 @@ def test_nsw_beam_width_rule_and_passthrough(spark, tmp_path):
             F.col("norm").alias("qnorm"),
         )
     )
-    base = probe_nsw_index(spark, path, None, qs).collect()
+    base = probe_nsw_index(spark, path, qs).collect()
     explicit = probe_nsw_index(
-        spark, path, None, qs, beam_width=_NSW_B
+        spark, path, qs, beam_width=_NSW_B
     ).collect()
     assert sorted(map(tuple, base)) == sorted(map(tuple, explicit))
     wide = probe_nsw_index(
-        spark, path, None, qs, beam_width=2 * _NSW_B
+        spark, path, qs, beam_width=2 * _NSW_B
     ).collect()
     assert {r.query_id for r in wide} == {r.query_id for r in base}
     by_q = {}
@@ -809,7 +807,7 @@ def test_nsw_probe_hops_keep_dpp(spark, tmp_path, n_shards):
 
     CDataFrame.localCheckpoint = capturing
     try:
-        rows = probe_nsw_index(spark, path, None, qs, n_shards=n_shards).collect()
+        rows = probe_nsw_index(spark, path, qs, n_shards=n_shards).collect()
     finally:
         CDataFrame.localCheckpoint = orig
 
@@ -918,7 +916,7 @@ def test_nsw_sharded_probe_finds_self_and_matches_default_width(
 
     def probe(**kw):
         return probe_nsw_index(
-            spark, path, None, qs, n_shards=_NSW_SHARDS, **kw
+            spark, path, qs, n_shards=_NSW_SHARDS, **kw
         ).collect()
 
     res = probe()
@@ -982,7 +980,7 @@ def test_nsw_sharded_probe_launches_no_more_jobs(spark, tmp_path):
         )
 
         def probe(path=path, n_shards=n_shards):
-            return probe_nsw_index(spark, path, None, qs, n_shards=n_shards)
+            return probe_nsw_index(spark, path, qs, n_shards=n_shards)
 
         probe().collect()  # warm: schema inference of the index tables
         jobs[n_shards] = _probe_jobs(spark, f"nsw-jobs-{n_shards}", probe)

@@ -14,6 +14,31 @@ from realtime_event_streaming_spark.operators.dedup import (
 SF = "/root/testdata/sf0.001"
 
 
+#: bucket count of the two-column ``(band_idx, hb)`` band layout the
+#: layout tests write by hand: the package writes ``band_idx`` only, and
+#: these tests pin what ``io`` does with a layout it did not write.
+TWO_COLUMN_BUCKETS = 64
+
+
+def _write_two_column_bands(bands, path: str) -> None:
+    """Write a dedup index's band rows to ``path`` partitioned by
+    ``(band_idx, hb = pmod(band_hash, TWO_COLUMN_BUCKETS))`` with a
+    plain ``DataFrameWriter``."""
+    bands.withColumn(
+        "hb", F.pmod(F.col("band_hash"), F.lit(TWO_COLUMN_BUCKETS))
+    ).write.mode("overwrite").partitionBy("band_idx", "hb").parquet(path)
+
+
+def _rewrite_two_column(spark, path: str) -> None:
+    """Move a dedup index's flat ``minhash_bands`` aside and rewrite it
+    in place under the two-column layout."""
+    import os
+
+    bands = f"{path}/minhash_bands"
+    os.rename(bands, f"{path}_flat_bands")
+    _write_two_column_bands(spark.read.parquet(f"{path}_flat_bands"), bands)
+
+
 def test_index_probe_classifies_exact_near_and_fresh(spark, tmp_path):
     path = str(tmp_path / "index")
     write_dedup_index(spark, SF, path)
@@ -108,104 +133,17 @@ def test_compact_reduces_files_and_preserves_probe(spark, tmp_path):
     assert by_id[9300] == (True, True) and by_id[9301] == (False, False)
 
 
-def test_bucketed_probe_partitions_read(spark, tmp_path):
-    """The opt-in interactive band layout (round-14 verdict item 5,
-    promoted from the probe docstring to code): under
-    `write_dedup_index(bucket_bands=True)` the probe's band scan must
-    (a) return results IDENTICAL to the default layout on the same
-    batch, (b) keep live executed-plan DPP, and (c) MEASURE as a
-    pruned read. Spark prunes each partition COLUMN independently (an
-    IN filter on band_idx and another on hb — the PRODUCT of the
-    per-column value sets, not the tuple set), so a b-doc batch reads
-    at most n_bands x min(b x n_bands, buckets) leaves: measured 112
-    of 512 (22%) for this 2-doc batch — far below the populated leaf
-    count, which makes the runtime partitions-read metric the
-    non-vacuous check (the test_ivf_probe_partitions_read_runtime
-    discipline)."""
-    from realtime_event_streaming_spark.operators.dedup import (
-        N_HASHES,
-        merge_dedup_index,
-        write_dedup_index as _write,
-    )
-    from tests.test_ann_index import _executed_file_scans
-
-    n_bands = N_HASHES // 2
-    flat_path = str(tmp_path / "flat")
-    bkt_path = str(tmp_path / "bucketed")
-    _write(spark, SF, flat_path)
-    _write(spark, SF, bkt_path, bucket_bands=True)
-
-    docs = load_table(spark, SF, "documents")
-    batch = (
-        docs.where("doc_id = 42")
-        .select(F.lit(9001).alias("doc_id"), "text")
-        .unionByName(
-            docs.where("doc_id = 43").select(
-                F.lit(9002).alias("doc_id"),
-                F.concat("text", F.lit(" qq zz")).alias("text"),
-            )
-        )
-    )
-    # (a) layout changes WHERE the bytes live, never an answer
-    flat_res = sorted(
-        map(tuple, probe_dedup_index(spark, flat_path, batch).collect())
-    )
-    df = probe_dedup_index(spark, bkt_path, batch)
-    bkt_res = sorted(map(tuple, df.collect()))
-    assert bkt_res == flat_res and bkt_res
-
-    # vacuity guard: the corpus must populate far more (band_idx, hb)
-    # leaves than the batch can touch
-    populated = (
-        spark.read.parquet(f"{bkt_path}/minhash_bands")
-        .select("band_idx", "hb")
-        .distinct()
-        .count()
-    )
-    assert populated > 4 * n_bands, ("fixture too small", populated)
-
-    # (b) + (c) on the EXECUTED plan: the partitioned band scan read
-    # only the batch's buckets
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruningexpression(true)" not in plan, plan[:3000]
-    scans = [m for m in _executed_file_scans(df) if "numPartitions" in m]
-    assert scans, "no partitioned band scan executed"
-    # product bound: all n_bands band_idx values x the batch's <= 2 x
-    # n_bands distinct hb values; and strictly below the populated
-    # leaf count (the unpruned read)
-    for m in scans:
-        assert 0 < m["numPartitions"] <= n_bands * 2 * n_bands, m
-        assert m["numPartitions"] < populated // 2, m
-
-    # maintenance preserves the layout: a merged batch lands bucketed
-    # and its re-send still flags
-    novel = spark.createDataFrame(
-        [(9200, " ".join(f"bb{i}" for i in range(30)))],
-        "doc_id long, text string",
-    )
-    merge_dedup_index(spark, bkt_path, novel)
-    assert "hb" in spark.read.parquet(f"{bkt_path}/minhash_bands").columns
-    resend = novel.select((F.col("doc_id") + 1).alias("doc_id"), "text")
-    post = probe_dedup_index(spark, bkt_path, resend).collect()[0]
-    assert (post.exact_dup, post.near_dup) == (True, True)
-
-
 def test_layout_rewrite_same_path_reads_current_layout(spark, tmp_path):
     """`read_index_parquet` caches an index table's data columns per
     bare path, and a table can be rewritten at the SAME path with a
     different layout (± the `hb` partition column) by
-    `write_dedup_index(bucket_bands=...)` or by any plain
-    `DataFrameWriter`. A cached full schema would keep a stale `hb`
-    after a bucketed→flat rewrite (read back all-null), so the probe
-    would take the bucketed branch and flag nothing. Partition columns
-    come from the listing on disk, so every rewrite direction, by a
-    package writer or not, reads the current layout and returns the
-    flat answer."""
+    `write_dedup_index` or by any plain `DataFrameWriter`. A cached
+    full schema would keep a stale `hb` after a two-column→flat rewrite
+    (read back all-null), so the read would not show the table on disk.
+    Partition columns come from the listing on disk, so every rewrite
+    direction, by a package writer or not, reads the current layout
+    and returns the flat answer."""
     from realtime_event_streaming_spark.io import read_index_parquet
-    from realtime_event_streaming_spark.operators.dedup import (
-        DEDUP_BAND_BUCKETS,
-        write_dedup_index as _write,
-    )
 
     path = str(tmp_path / "index")
     docs = load_table(spark, SF, "documents")
@@ -215,9 +153,10 @@ def test_layout_rewrite_same_path_reads_current_layout(spark, tmp_path):
 
     # flat reference answer from an untouched path
     ref_path = str(tmp_path / "ref")
-    _write(spark, SF, ref_path)
+    write_dedup_index(spark, SF, ref_path)
     ref = sorted(map(tuple, probe_dedup_index(spark, ref_path, batch).collect()))
     assert ref  # the re-sent doc must flag
+    flat = spark.read.parquet(f"{ref_path}/minhash_bands")
 
     def reads_current_layout(has_hb: bool) -> None:
         bands = f"{path}/minhash_bands"
@@ -228,31 +167,26 @@ def test_layout_rewrite_same_path_reads_current_layout(spark, tmp_path):
         )
         probe = probe_dedup_index(spark, path, batch)
         assert sorted(map(tuple, probe.collect())) == ref
-        if has_hb:
-            plan = probe._jdf.queryExecution().executedPlan().toString()
-            assert "dynamicpruningexpression(true)" not in plan, plan[:3000]
 
-    # bucketed write + probe caches the path's data columns
-    _write(spark, SF, path, bucket_bands=True)
+    # package writer, then a plain two-column write caches the path's
+    # data columns
+    write_dedup_index(spark, SF, path)
+    _write_two_column_bands(flat, f"{path}/minhash_bands")
     reads_current_layout(has_hb=True)
 
-    # package writer: bucketed→flat and back
-    _write(spark, SF, path, bucket_bands=False)
+    # package writer: two-column→flat and back
+    write_dedup_index(spark, SF, path)
     reads_current_layout(has_hb=False)
-    _write(spark, SF, path, bucket_bands=True)
+    _write_two_column_bands(flat, f"{path}/minhash_bands")
     reads_current_layout(has_hb=True)
 
-    # a plain DataFrameWriter, outside the package: bucketed→flat and back
-    flat = spark.read.parquet(f"{ref_path}/minhash_bands")
+    # a plain DataFrameWriter, outside the package: two-column→flat and
+    # back
     flat.write.mode("overwrite").partitionBy("band_idx").parquet(
         f"{path}/minhash_bands"
     )
     reads_current_layout(has_hb=False)
-    flat.withColumn(
-        "hb", F.pmod(F.col("band_hash"), F.lit(DEDUP_BAND_BUCKETS))
-    ).write.mode("overwrite").partitionBy("band_idx", "hb").parquet(
-        f"{path}/minhash_bands"
-    )
+    _write_two_column_bands(flat, f"{path}/minhash_bands")
     reads_current_layout(has_hb=True)
 
 
@@ -293,7 +227,13 @@ def test_index_data_columns_do_not_depend_on_writer_options(spark, tmp_path):
     writers = {
         "dedup": [
             ("flat", lambda p: _write_dedup(spark, SF, p)),
-            ("bucketed", lambda p: _write_dedup(spark, SF, p, bucket_bands=True)),
+            (
+                "two_column",
+                lambda p: (
+                    _write_dedup(spark, SF, p),
+                    _rewrite_two_column(spark, p),
+                ),
+            ),
         ],
         "ann": [("ivf", lambda p: write_ann_index(spark, SF, p))],
         "nsw": [
@@ -358,10 +298,11 @@ def test_index_data_columns_do_not_depend_on_writer_options(spark, tmp_path):
 
 def test_compaction_keeps_a_two_column_layout(spark, tmp_path):
     """`compact_index_table` rewrites a table under the partition
-    columns it finds on disk. The opt-in bucketed band layout is
-    partitioned by two columns; after a merge and a compaction it must
-    still be (no column may move into the data files), the cached read
-    must equal the inferred one, and the probe answer must not move."""
+    columns it finds on disk. A merged band table that a plain writer
+    then repartitioned by two columns must keep both through a
+    compaction (no column may move into the data files), the cached
+    read must equal the inferred one, and the probe answer must not
+    move."""
     from realtime_event_streaming_spark.io import (
         compact_index_table,
         read_index_parquet,
@@ -372,7 +313,7 @@ def test_compaction_keeps_a_two_column_layout(spark, tmp_path):
 
     path = str(tmp_path / "index")
     bands = f"{path}/minhash_bands"
-    write_dedup_index(spark, SF, path, bucket_bands=True)
+    write_dedup_index(spark, SF, path)
     merge_dedup_index(
         spark,
         path,
@@ -381,6 +322,7 @@ def test_compaction_keeps_a_two_column_layout(spark, tmp_path):
             "doc_id long, text string",
         ),
     )
+    _rewrite_two_column(spark, path)
     docs = load_table(spark, SF, "documents")
     batch = docs.where("doc_id = 42").select(
         F.lit(9001).alias("doc_id"), "text"

@@ -173,7 +173,6 @@ def test_sharded_per_shard_rule_meets_recall_floor(spark):
         rows = probe_nsw_index(
             spark,
             path,
-            None,
             qs,
             beam_width="per-shard-rule",
             n_shards=_NSW_SHARDS,

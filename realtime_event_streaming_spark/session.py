@@ -32,12 +32,52 @@ Design notes (100 TB posture):
   and no environment variable adds class path entries or CDS options;
   a JVM that dies at start with the archive is relaunched without it
   and the archive deleted.
+- A ``local`` session ships its Hadoop configuration without the
+  MapReduce and YARN defaults (``lean_hadoop_conf``, run by ``prepare``
+  once per SparkContext). ``JobConf``'s static initializer registers
+  ``yarn-default.xml`` and ``mapred-default.xml`` as default resources
+  of every ``Configuration`` in the process, which put 714 keys into the
+  1,113 (~113 KB) that every file-sink micro-batch serialized (closure
+  check, task binary, scan broadcast) and every one of its tasks
+  deserialized. A local session runs no YARN code, and the only
+  MapReduce classes on its paths are ``FileOutputCommitter``,
+  ``FileOutputFormat`` and ``FileInputFormat`` (Spark SQL never calls
+  ``getSplits``). So every key whose only recorded source
+  (``getPropertySources``) is one of those two files is removed, and
+  399 keys (~38 KB) stay: the ``core-default.xml`` keys and every key
+  set by Spark, by ``spark.hadoop.*``, by code or by a ``*-site.xml``,
+  each of which records its own source. The trim costs ~40 ms once: the
+  grouping by source and the unsets run inside the JVM, where one Py4J
+  call per key would take ~0.15 s. The keys of those three classes
+  that the two files define, as XML value / code default (Hadoop
+  3.4.2) once removed:
+
+  - ``mapreduce.fileoutputcommitter.algorithm.version``: 2 / 2 (Spark
+    sets 1, which stays)
+  - ``mapreduce.fileoutputcommitter.task.cleanup.enabled``: false / false
+  - ``mapreduce.output.fileoutputformat.compress``: false / false
+  - ``mapreduce.output.fileoutputformat.compress.type``: RECORD / RECORD
+  - ``mapreduce.output.fileoutputformat.compress.codec``: DefaultCodec /
+    the caller's default, read only when ``compress`` is true
+  - ``mapreduce.input.fileinputformat.split.minsize``: 0 / 1, and
+    ``getSplits`` clamps it to at least 1 either way
+  - ``mapreduce.input.fileinputformat.list-status.num-threads``: 1 / 1
+
+  The committer's other keys (``marksuccessfuljobs``,
+  ``cleanup.skipped``, ``cleanup-failures.ignored``,
+  ``failures.attempts``) are in neither file and were always read at
+  their code defaults. A session on any other master (a cluster) keeps
+  its configuration untouched. The trim lasts until a Hadoop class
+  registers a new default resource (``Configuration.addDefaultResource``,
+  e.g. the HDFS client's ``hdfs-default.xml``): that reloads every
+  configuration in the process and brings the keys back.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import weakref
 from contextlib import contextmanager
 
 from pyspark import SparkContext
@@ -105,8 +145,89 @@ _SPARK_GLOBAL_DEFAULT = "200"
 FIXTURE_SHUFFLE_PARTITIONS = 4
 
 
+#: The default resources ``JobConf``'s static initializer registers
+#: (``ConfigUtil.loadResources``); ``lean_hadoop_conf`` drops their keys.
+MR_YARN_DEFAULTS = ("yarn-default.xml", "mapred-default.xml")
+#: SparkContexts whose Hadoop configuration ``lean_hadoop_conf`` has seen
+_LEAN_CONTEXTS: weakref.WeakSet = weakref.WeakSet()
+
+
+def _java_function(jvm, interface: str, handle):
+    """The Java method ``handle`` as an instance of the functional
+    ``interface``, so that a Java stream calls it once per item inside
+    the JVM instead of Python calling it once per item over Py4J."""
+    return jvm.java.lang.invoke.MethodHandleProxies.asInterfaceInstance(
+        jvm.java.lang.Class.forName(interface), handle
+    )
+
+
+def _conf_method(jvm, conf, name: str, returns):
+    """``conf.<name>(String key)`` as a method handle bound to ``conf``."""
+    invoke = jvm.java.lang.invoke
+    string = jvm.java.lang.Class.forName("java.lang.String")
+    return invoke.MethodHandles.publicLookup().findVirtual(
+        conf.getClass(), name, invoke.MethodType.methodType(returns, string)
+    ).bindTo(conf)
+
+
+def hadoop_keys_by_source(jvm, conf):
+    """A Java ``Map`` from each source list of ``conf``'s keys, as
+    ``Arrays.toString`` prints it (``"[mapred-default.xml]"``), to the
+    keys that have it (``Configuration.getPropertySources``), built in a
+    few Py4J calls."""
+    invoke = jvm.java.lang.invoke
+    mtype = invoke.MethodType.methodType
+    string = jvm.java.lang.Class.forName("java.lang.String")
+    strings = jvm.java.lang.Class.forName("[Ljava.lang.String;")
+    to_string = invoke.MethodHandles.publicLookup().findStatic(
+        jvm.java.lang.Class.forName("java.util.Arrays"), "toString",
+        mtype(string, jvm.java.lang.Class.forName("[Ljava.lang.Object;")),
+    ).asType(mtype(string, strings))
+    sources_of = invoke.MethodHandles.filterReturnValue(
+        _conf_method(jvm, conf, "getPropertySources", strings), to_string
+    )
+    return conf.getPropsWithPrefix("").keySet().stream().collect(
+        jvm.java.util.stream.Collectors.groupingBy(
+            _java_function(jvm, "java.util.function.Function", sources_of)
+        )
+    )
+
+
+def lean_hadoop_conf(sc: SparkContext) -> int:
+    """Remove from a ``local`` SparkContext's Hadoop configuration every
+    key whose only source is ``yarn-default.xml`` or
+    ``mapred-default.xml`` (module docstring); return how many.
+
+    Runs once per SparkContext; later calls and non-local masters
+    return 0 without a JVM call."""
+    if not sc.master.startswith("local") or sc in _LEAN_CONTEXTS:
+        return 0
+    _LEAN_CONTEXTS.add(sc)
+    jvm = sc._jvm
+    # A first use of JobConf after the trim would register the two
+    # files as default resources, which reloads every configuration.
+    jvm.java.lang.Class.forName(
+        "org.apache.hadoop.mapred.JobConf", True,
+        jvm.java.lang.Thread.currentThread().getContextClassLoader(),
+    )
+    conf = sc._jsc.hadoopConfiguration()
+    by_source = hadoop_keys_by_source(jvm, conf)
+    unset = _java_function(
+        jvm, "java.util.function.Consumer",
+        _conf_method(jvm, conf, "unset", jvm.java.lang.Void.TYPE),
+    )
+    removed = 0
+    for resource in MR_YARN_DEFAULTS:
+        keys = by_source.get(f"[{resource}]")
+        if keys is not None:
+            keys.forEach(unset)
+            removed += keys.size()
+    return removed
+
+
 def prepare(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
+    """Apply runtime confs to an existing session (idempotent) and, on
+    a local master, trim its Hadoop configuration (``lean_hadoop_conf``)."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -120,6 +241,10 @@ def prepare(spark: SparkSession) -> SparkSession:
             spark.conf.set(_SHUFFLE_KEY, DEFAULT_SHUFFLE_PARTITIONS)
     except Exception as exc:
         log.warning("prepare(): could not adjust %s: %s", _SHUFFLE_KEY, exc)
+    try:
+        lean_hadoop_conf(spark.sparkContext)
+    except Exception as exc:
+        log.warning("prepare(): could not trim the Hadoop conf: %s", exc)
     return spark
 
 

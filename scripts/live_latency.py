@@ -4,9 +4,13 @@ formula: wire JSON produced in real time at ~100 events/s, tailed by
 the file-source stand-in for the Kafka reader, parsed and written to
 the raw sink with `created_at`; latency = created_at - ts (the
 reference's metrics_queries.sql:16). Reported: avg / P95 / max, the
-time `get_spark` took to start the session, and the raw query's
+time `get_spark` took to start the session, the raw query's
 median time per micro-batch phase (`deploy.query_metrics`, batches
-that read input).
+that read input) and, last, `hadoop_conf_props`: the number of keys in
+the Hadoop configuration the session ships with each write job
+(`sessionState.newHadoopConf()`), read after the run, so a reload that
+brought the MapReduce/YARN defaults back (`session.lean_hadoop_conf`)
+shows beside the phase medians.
 
 Usage: python scripts/live_latency.py [duration_sec] [rate_per_sec]
 """
@@ -126,11 +130,13 @@ def main():
         for name in PHASES
         if (vals := [b[f"{name}_ms"] for b in batches if b[f"{name}_ms"] is not None])
     )
+    conf_props = spark._jsparkSession.sessionState().newHadoopConf().size()
     print(
         f"events={stats.n} rate={rate}/s duration={duration}s "
         f"avg={stats.avg:.2f}s p95={stats.p95:.2f}s max={stats.mx:.2f}s "
         f"start_s={start_s:.2f} batches={len(batches)} {phases} "
-        f"steal_jiffies={steal} steal_per_sec={steal_rate}"
+        f"steal_jiffies={steal} steal_per_sec={steal_rate} "
+        f"hadoop_conf_props={conf_props}"
     )
     shutil.rmtree(work, ignore_errors=True)
 
